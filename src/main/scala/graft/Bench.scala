@@ -174,7 +174,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.defaultCpus
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // Dev loop: bench only the queries matching a name regex (driver sets none).
     val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)

@@ -56,6 +56,11 @@ object Sessions {
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-warehouse")
 
+  /** The mains' core count: `SPARK_GRAFT_CPUS`, else every core the JVM
+    * sees — never a fixed count that oversubscribes a small host. */
+  def defaultCpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   def local(cpus: String): SparkSession = {
     val spark = builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -41,7 +41,7 @@ object Tables {
     * non-ANSI cast clamps to ±Long.MaxValue where DuckDB's cast errors
     * (the exact divergence verified at 1e18). `abs > 9e16` subsumes the
     * old Infinity equality, so the guard SHRINKS: NaN or out-of-range →
-    * NULL. Oracle mirror everywhere: `(isfinite(c) AND abs(c) <= 9e16) AND abs(c) <= 9e16`.
+    * NULL. Oracle mirror everywhere: `isfinite(c) AND abs(c) <= 9e16`.
     * NonFiniteSpec pins the boundary. */
   def centsSql(c: String): String =
     s"CAST(round(CASE WHEN isnan($c) OR abs($c) > 9e16D " +

@@ -8,7 +8,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional third arg: regex over query names (dev loop; driver passes 2).
     val nameFilter = args.lift(2).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.defaultCpus
     val spark = Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
     // A query whose constructor or execution throws must still leave a

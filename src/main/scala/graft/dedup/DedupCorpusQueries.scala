@@ -593,11 +593,14 @@ private[dedup] trait DedupCorpusQueries { this: Dedup.type =>
           // truncation the tokenize+md5+gate+window chain ran twice.
           // Paired with the window rewrite above: 1.691 → 1.539 (−9%),
           // documents scans 5 → 2. LOCAL checkpoint deliberately: the
-          // funnel is a once-per-release accounting job — losing an
-          // executor mid-run re-runs the job, which beats paying a
+          // funnel is a once-per-release accounting job, so it skips a
           // reliable-store round-trip of corpus-sized rows every release
           // (the connectedComponents scaladoc trade, opposite verdict
           // because its loop re-references checkpoints across rounds).
+          // The cost: the blocks live only in executor storage and have no
+          // lineage to recompute from, so losing an executor mid-run makes
+          // LocalCheckpointRDD FAIL the job (the caller must re-run the
+          // whole query); it does not silently recompute the lost rows.
           .localCheckpoint()
         val surv = flagged.filter(col("s_ok"))
           .select(col("doc_id"), col("source"), expr(toks).as("t"))

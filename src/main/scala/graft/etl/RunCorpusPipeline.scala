@@ -269,7 +269,7 @@ object RunCorpusPipeline {
     val seedBytes = new Array[Byte](16)
     new java.security.SecureRandom().nextBytes(seedBytes)
     val dpReleaseSeed = seedBytes.map("%02x".format(_)).mkString + ":"
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = Sessions.local(Sessions.defaultCpus)
     try {
       val stageSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
       val c = run(spark, sfDir, outDir, dpReleaseSeed,

@@ -35,13 +35,11 @@ object SkewHarness {
     * fact/dim, measured under [[withSkewRegime]]. */
   def measureSaltedVsPlain(spark: SparkSession, buckets: Int = 32): (Long, Long) =
     withSkewRegime(spark) {
-      def noop(df: DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
+      def maxRows(df: DataFrame): Long =
+        Profile.run(spark)(df.write.format("noop").mode("overwrite").save()).maxTaskShuffleRows
       val fact = StressFixtures.skewedFact(spark)
       val dim = StressFixtures.dim(spark)
-      val plain = TaskMetricsProbe.maxTaskShuffleRows(spark)(noop(fact.join(dim, "k")))
-      val salted = TaskMetricsProbe.maxTaskShuffleRows(spark)(
-        noop(graft.ops.Skew.saltedJoin(fact, dim, "k", "id", buckets)))
-      (plain, salted)
+      (maxRows(fact.join(dim, "k")),
+        maxRows(graft.ops.Skew.saltedJoin(fact, dim, "k", "id", buckets)))
     }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.tools.{StressFixtures, TaskMetricsProbe}
+import graft.tools.StressFixtures
 
 class SkewSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

@@ -224,18 +224,27 @@ def run_diag(d: str, families: str, forced_bits: int | None = None) -> dict:
     return rows
 
 
-def run_countq(d: str, query: str) -> tuple[int, float]:
-    """Row count of a registered query on an arbitrary fixture (the verified
-    side of the kept-vs-verified pair-mass measurement)."""
-    env = {**__import__("os").environ, "SPARK_DRIVER_MEM": "16g"}
+def run_profile(args: str, **env: str) -> tuple[list[dict], str]:
+    """GRAFT_PROFILE records of one fresh graft.tools.Profile JVM
+    (`args` follow the main's name; `env` overrides the environment),
+    plus the run's stdout for failure messages."""
     out = subprocess.run(
-        ["sbt", "-batch", f"runMain graft.tools.CountQ {d} {query}"],
-        capture_output=True, text=True, env=env)
-    m = re.search(rf"\[countq\] {query} rows=(\d+) wall=([0-9.]+)s", out.stdout)
-    if not m:
-        sys.exit(f"CountQ {d} {query} produced no count line:"
-                 f"\n{out.stdout[-2000:]}")
-    return int(m.group(1)), float(m.group(2))
+        ["sbt", "-batch", f"runMain graft.tools.Profile {args}"],
+        capture_output=True, text=True,
+        env={**__import__("os").environ, **env})
+    recs = [json.loads(m.group(1)) for m in
+            re.finditer(r"GRAFT_PROFILE (\{.*\})", out.stdout)]
+    return recs, out.stdout
+
+
+def run_countq(d: str, query: str) -> dict:
+    """Row count and wall seconds of a registered query on an arbitrary
+    fixture (the verified side of the kept-vs-verified pair-mass
+    measurement)."""
+    recs, out = run_profile(f"{d} {query}", SPARK_DRIVER_MEM="16g")
+    if not recs:
+        sys.exit(f"Profile {d} {query} produced no record:\n{out[-2000:]}")
+    return {"rows": recs[0]["rows"], "wall": recs[0]["wall_s"]}
 
 
 def run_phash_verify(d: str) -> dict:
@@ -287,16 +296,14 @@ def run_pipeline(sf_dir: str, out_dir: str, label: str) -> dict | None:
 
 
 def run_warmup_probe(sf_dir: str, query: str, prescan: str) -> dict | None:
-    """Fresh-JVM warm-up decomposition for one query (graft.tools
-    .WarmupProbe): prescan run1/run2 split input first-touch from JIT ramp,
-    query run1/run2/run3 show the warmed floor."""
-    out = subprocess.run(
-        ["sbt", "-batch",
-         f"runMain graft.tools.WarmupProbe {sf_dir} {query} {prescan}"],
-        capture_output=True, text=True,
-        env={**__import__("os").environ, "SPARK_GRAFT_CPUS": "32"})
-    m = re.search(r"GRAFT_WARMUP_PROBE (\{.*\})", out.stdout)
-    return json.loads(m.group(1)) if m else None
+    """Fresh-JVM warm-up decomposition for one query (graft.tools.Profile
+    --prescan): prescan1..3 split input first-touch from JIT ramp, query
+    run1..run3 show the warmed floor. Values are wall seconds."""
+    recs, _ = run_profile(f"{sf_dir} {query} --runs 3 --prescan {prescan}",
+                          SPARK_GRAFT_CPUS="32")
+    walls = {("prescan" if "prescan" in r else "run") + str(r["run"]):
+             r["wall_s"] for r in recs}
+    return walls if len(walls) == 6 else None
 
 
 def main() -> None:
@@ -643,7 +650,8 @@ def main() -> None:
     # ---- simhash kept-vs-verified at 100x (threshold justification) --------
     kept20 = run_diag(X100_DIR, "simhash")["simhash"]
     kept30 = run_diag(X100_DIR, "simhash", 30)["simhash"]
-    verified, vwall = run_countq(X100_DIR, "dd_simhash_pairs")
+    vq = run_countq(X100_DIR, "dd_simhash_pairs")
+    verified, vwall = vq["rows"], vq["wall"]
     lines += [
         "",
         "## Simhash kept-vs-verified at 100x: the 20-bit threshold stays",
@@ -754,7 +762,7 @@ def main() -> None:
         "JIT state) while build@1x10 comes from the 11-query decade run",
         "(much colder session), so a >2x build factor here is largely the",
         "warmth differential, not data scaling. Confirmed round 14 by",
-        "fresh-JVM-per-run decomposition (graft.tools.WarmupProbe): a",
+        "fresh-JVM-per-run decomposition (graft.tools.Profile --prescan): a",
         "fresh session's FIRST run costs ~5s at BOTH scales (json_extract",
         "5.19s @sf0.1 vs 7.32s @1x10 = 1.4x; tx_mask_spans 5.48s vs 6.39s",
         "= 1.2x — both in line with their serve factors), and a plain",
@@ -836,7 +844,7 @@ def main() -> None:
         "",
         "The one remaining >2x cell in the main table (0.01->0.1 factor,",
         "annotated `floor`), decomposed with the same fresh-JVM-per-run",
-        "WarmupProbe discipline that settled json_extract/tx_mask_spans:",
+        "Profile --prescan discipline that settled json_extract/tx_mask_spans:",
         "one JVM per scale point, a documents:text prescan to absorb input",
         "first-touch, then the query three times — run3 is the warmed floor.",
         "",
@@ -860,8 +868,8 @@ def main() -> None:
             "one O(sources) aggregation).",
         ]
     else:
-        lines.append("WarmupProbe run FAILED — rerun "
-                     "`sbt 'runMain graft.tools.WarmupProbe <dir> st_pii_gate documents:text'`.")
+        lines.append("Profile run FAILED — rerun `sbt 'runMain graft.tools.Profile "
+                     "<dir> st_pii_gate --runs 3 --prescan documents:text'`.")
 
     # ---- suite-tail isolated cost (round-14 verdict #4) --------------------
     tail = run_bench("/root/testdata/sf0.1", "tail isolated",
