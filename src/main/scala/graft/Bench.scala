@@ -42,9 +42,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Cost floor for narrow single-pass queries at local fixture scale
   * (profiled round 3, sf0.1, idle machine): ~0.19 s scan + noop job
-  * constant, +~0.15-0.2 s when the query ends in a global ORDER BY (range
-  * exchange = an extra sampling job — fixed latency, not per-row cost), and
-  * only then per-row compute (simhash32 over 5,000 docs: ~0.03 s).
+  * constant, plus one more stage when the query ends in a global ORDER BY
+  * (the presentation exchange + global sort; below the
+  * [[graft.functions.PresentSort]] bound it runs no sampling job), and only
+  * then per-row compute (simhash32 over 5,000 docs: ~0.03 s).
   *
   * CORE-COUNT SCALING SIGNAL (r22, VERDICT r21 #2): at sf0.1 the ~0.2 s
   * fixed floor dominates ~135 of the 180 queries, so a whole-suite

@@ -174,29 +174,4 @@ object Tables {
     * pre-exchange work is real (JSON prop parsing). */
   def eventsSpread(s: SparkSession, d: String): DataFrame =
     spreadIfCoarse(events(s, d), s"$d/events.parquet", expr("event_id"))
-
-  /** Materialization barrier ahead of a presentation ORDER BY (r22; guide
-    * §1.2 "don't compute things twice" / §2.4). A global sort's range
-    * exchange computes its child subtree TWICE: the RangePartitioner's
-    * bounds-sampling job reads EVERY row of every child partition (a
-    * reservoir sample still drains the full iterator), then the exchange's
-    * own map tasks compute the child again — and both runs re-execute
-    * everything above the last materialized exchange. When that segment is
-    * expensive (a capped-bucket pair expansion + per-pair verify, a regex
-    * battery, a JSON parse), the whole segment runs twice per query. This
-    * barrier pays ONE deterministic hash exchange of the FINISHED rows so
-    * the sampler and the sort both read a materialized shuffle instead of
-    * recomputing the segment (measured on jn_fuzzy_name: 1.17 s → 0.85 s).
-    *
-    * Apply MEASURED, like [[spreadIfCoarse]]: worth it only when the
-    * segment's compute exceeds one extra shuffle of its OUTPUT rows —
-    * narrow derived outputs over heavy per-row work win; wide payload
-    * outputs over light projections lose (the an_zorder spread rejection).
-    * Hash (not round-robin) partitioning: deterministic under task retry
-    * (SPARK-38388), no sort-before-repartition tax. Results unchanged:
-    * callers' ORDER BY keys are unique total orders, so the final sort is
-    * deterministic regardless of the barrier's row placement. */
-  private[graft] def sortShield(df: DataFrame,
-      key: org.apache.spark.sql.Column): DataFrame =
-    df.repartition(key)
 }

@@ -703,9 +703,6 @@ object Dedup extends DedupPairQueries with DedupCorpusQueries {
         coalesce(col("n_hits"), lit(0L)).as("n_hits"))
       .withColumn("status",
         when(col("n_hits") >= minShared, "dup_corpus").otherwise("keep"))
-      // sortShield (r22, guide §1.2): the sort sampler otherwise re-runs
-      // the verdict join above the two per-doc aggregates. doc_id unique.
-      .transform(df => graft.Tables.sortShield(df, col("doc_id")))
       .orderBy("doc_id")
   }
 

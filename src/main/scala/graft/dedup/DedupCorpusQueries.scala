@@ -147,9 +147,6 @@ private[dedup] trait DedupCorpusQueries { this: Dedup.type =>
           .filter(col("rn") === 1)
           .select(col("fp"), col("doc_id").as("keeper"),
             col("source").as("keeper_source"), col("n_docs"))
-          // sortShield (r22, guide §1.2): the sort sampler otherwise
-          // re-runs both fp windows. fp unique post rn=1 filter.
-          .transform(df => Tables.sortShield(df, col("fp")))
           .orderBy("fp")
       },
       Some("""WITH r AS (
@@ -244,10 +241,6 @@ private[dedup] trait DedupCorpusQueries { this: Dedup.type =>
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_tokens")).as("n_tokens"))
           .withColumn("n_sequences", expr("(n_tokens + 255) div 256"))
-          // r22 A/B note: Tables.sortShield measured WORSE here (paired
-          // min-of-4: 0.664 → 0.786, +18%) — the rollup merge reads an
-          // already-materialized exchange, so the sampler's re-run is
-          // cheap and the added stage dominates. Left unshielded.
           .orderBy("split", "source")
       },
       Some(s"""WITH q AS (
@@ -337,9 +330,6 @@ private[dedup] trait DedupCorpusQueries { this: Dedup.type =>
           .withColumn("status",
             when(col("doc_id") === col("best_doc"), "keep").otherwise("drop"))
           .select(col("doc_id"), col("cluster_id"), col("n_tokens"), col("status"))
-          // r22 A/B note: Tables.sortShield measured WORSE here (+5.2%) —
-          // the verdict join probes the persisted cluster artifact; the
-          // sampler's re-run is cheaper than the added stage.
           .orderBy("doc_id")
       },
       Some(s"""WITH RECURSIVE
@@ -502,9 +492,6 @@ private[dedup] trait DedupCorpusQueries { this: Dedup.type =>
           .select(col("doc_id"), col("n_lines"),
             (col("n_lines") - coalesce(col("n_kept"), lit(0L))).as("n_removed"))
           .withColumn("n_tokens_kept", expr(s"$LineTok * (n_lines - n_removed)"))
-          // sortShield (r22, guide §1.2): the sort sampler otherwise
-          // re-runs the tokenize scan + keeper attach. doc_id unique.
-          .transform(df => Tables.sortShield(df, col("doc_id")))
           .orderBy("doc_id")
       },
       Some(s"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), ' +') AS t
@@ -816,12 +803,6 @@ private[dedup] trait DedupCorpusQueries { this: Dedup.type =>
           .select(col("doc_id"),
             coalesce(col("n_kept"), lit(0L)).as("n_kept"),
             coalesce(col("clean_md5"), lit(md5Empty)).as("clean_md5"))
-          // r22 A/B note: Tables.sortShield measured WORSE here (paired
-          // min-of-4: 0.949 → 1.052, +11%) — the restoration left join
-          // reads two already-materialized exchanges, so the sampler's
-          // re-run is cheap and the shield's extra stage dominates
-          // (contrast dd_line_dedup, −7%, whose probe side re-tokenizes
-          // the corpus). Left unshielded.
           .orderBy("doc_id")
       },
       Some(s"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), ' +') AS t
@@ -874,9 +855,6 @@ private[dedup] trait DedupCorpusQueries { this: Dedup.type =>
           .select(col("doc_id"), col("fp_count"),
             expr("1000000 div fp_count").as("weight_micro"),
             expr("(n_tokens * 1000000) div fp_count").as("eff_tokens_micro"))
-          // sortShield (r22, guide §1.2): the sort sampler otherwise
-          // re-runs the fp window count. doc_id unique.
-          .transform(df => Tables.sortShield(df, col("doc_id")))
           .orderBy("doc_id")
       },
       Some("""WITH f AS (SELECT doc_id,

@@ -101,9 +101,6 @@ private[dedup] trait DedupPairQueries { this: Dedup.type =>
         bucketedIdPairs(postings, col("fp"))
           .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_shared"))
           .filter(col("n_shared") >= 2)
-          // r22 A/B note: Tables.sortShield measured WORSE here (paired
-          // min-of-4: 0.875 → 0.938, +7%) — the pair-count merge reads an
-          // already-materialized exchange; the added stage dominates.
           .orderBy("doc_a", "doc_b")
       },
       Some(s"""WITH ${graft.text.TextStats.duckWinnowChain},
@@ -181,9 +178,6 @@ private[dedup] trait DedupPairQueries { this: Dedup.type =>
           .agg(sum(col("npos")).as("n_grams"),
             sum(when(col("nd") >= 2, col("npos")).otherwise(0L)).as("n_repeated"))
           .withColumn("mass_permille", expr("(1000 * n_repeated) div n_grams"))
-          // sortShield (r22, guide §1.2): the sort sampler otherwise
-          // re-runs the per-doc rollup merge. doc_id unique.
-          .transform(df => Tables.sortShield(df, col("doc_id")))
           .orderBy("doc_id")
       },
       Some("""WITH t AS (SELECT doc_id, string_split_regex(trim(text), ' +') AS tk
@@ -210,10 +204,7 @@ private[dedup] trait DedupPairQueries { this: Dedup.type =>
       * agree on absence (round-19 review; NullTextSpec pins it). */
     QueryDef(
       "dd_simhash",
-      // sortShield (r22, guide §1.2): the sort sampler otherwise re-runs
-      // the per-doc simhash32 scan. doc_id unique.
-      (s, d) => Tables.sortShield(
-        simhash(s, d).filter(col("simhash").isNotNull), col("doc_id"))
+      (s, d) => simhash(s, d).filter(col("simhash").isNotNull)
         .orderBy("doc_id"),
       Some(s"""WITH $duckSimhash
               |SELECT doc_id, simhash FROM sims ORDER BY doc_id""".stripMargin)),

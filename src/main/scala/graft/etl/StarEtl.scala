@@ -80,7 +80,7 @@ object StarEtl {
     * [[StarPipeline]] writes: the global orderBy exists only for the
     * oracle's ordered compare, and Layout.writeParquet immediately
     * repartitions by the distkey and re-sorts within partitions, so the
-    * ordered form paid a full range exchange + global sort per ELT run
+    * ordered form paid a presentation exchange + global sort per ELT run
     * just to discard it. Same rule for the four dims below. */
   def songplaysUnsorted(spark: SparkSession, sfDir: String): DataFrame = {
     val se  = stagingEvents(spark, sfDir).filter(col("event_type") === "view")

@@ -27,7 +27,8 @@ object StarPipeline {
       // (name, df, distKey, sortKey) — insert order = sql_queries.py:227
       // Unsorted lineages on purpose: Layout.writeParquet repartitions by
       // the distkey and sortWithinPartitions anyway, so the oracle-facing
-      // builders' global orderBy would be a discarded range exchange + sort.
+      // builders' global orderBy would be a discarded presentation exchange
+      // + global sort.
       ("songplays", StarEtl.songplaysUnsorted(spark, sfDir), Some("song_id"), Some("start_time")),
       ("users",     StarEtl.usersUnsorted(spark, sfDir),     None,            Some("user_id")),
       ("songs",     StarEtl.songsUnsorted(spark, sfDir),     Some("song_id"), Some("song_id")),

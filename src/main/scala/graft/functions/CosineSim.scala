@@ -209,17 +209,20 @@ object GraftFunctions {
       }
 }
 
-/** Production wiring: register graft's native expressions through
-  * `SparkSessionExtensions` (builder `.withExtensions` or the
-  * `spark.sql.extensions` conf — how a cluster deployment loads them).
-  * graft.Sessions applies this to every session it builds. */
+/** Production wiring: register graft's native expressions and the
+  * [[PresentSort]] planner rule through `SparkSessionExtensions` (builder
+  * `.withExtensions` or the `spark.sql.extensions` conf — how a cluster
+  * deployment loads them). graft.Sessions applies this to every session it
+  * builds. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctionTable.entries.foreach { case (name, className, builder) =>
       e.injectFunction((
         FunctionIdentifier(name), new ExpressionInfo(className, name), builder))
     }
+    e.injectQueryStagePrepRule(_ => PresentSort)
+  }
 }

@@ -74,10 +74,6 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
         .select(col("l_returnflag"),
           expr("round(element_at(ps, 1), 4)").as("p50"),
           expr("round(element_at(ps, 2), 4)").as("p90"))
-        // sortShield (r22, guide §1.2): the sort sampler otherwise re-runs
-        // the FINAL exact-percentile merge — which re-sorts every group's
-        // full value buffer — for a 3-row output. l_returnflag unique.
-        .transform(df => Tables.sortShield(df, col("l_returnflag")))
         .orderBy("l_returnflag"),
       Some("""SELECT l_returnflag,
              |       round(quantile_cont(CASE WHEN (isfinite(l_extendedprice) AND abs(l_extendedprice) <= 9e16) THEN l_extendedprice END, 0.5), 4) AS p50,
@@ -140,10 +136,6 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
           .withColumn("cents", cents("o_totalprice"))
           .withColumn("n_within_10k", count(lit(1)).over(w))
           .select(col("o_custkey"), col("o_orderkey"), col("cents"), col("n_within_10k"))
-          // sortShield (r22, guide §1.2): the sort sampler otherwise
-          // re-runs the range-frame window above the one o_custkey
-          // exchange. o_orderkey unique.
-          .transform(df => Tables.sortShield(df, col("o_custkey")))
           .orderBy("o_custkey", "o_orderkey")
       },
       Some("""SELECT o_custkey, o_orderkey, cents,
@@ -167,9 +159,6 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
           .withColumn("dearest", last(col("o_orderkey")).over(full))
           .select(col("o_custkey"), col("o_orderkey"), col("drank"), col("ntile4"),
             col("cheapest"), col("dearest"))
-          // sortShield (r22): the an_window_range_frame rationale — two
-          // navigation windows re-run otherwise. o_orderkey unique.
-          .transform(df => Tables.sortShield(df, col("o_custkey")))
           .orderBy("o_custkey", "o_orderkey")
       },
       // The WINDOW order carries the null pin too: ntile/dense_rank/
@@ -230,10 +219,6 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
         .select(col("l_returnflag"), col("n_exact"),
           (abs(col("approx") - col("n_exact")) <= col("n_exact") * 0.15)
             .as("within_bound"))
-        // sortShield (r22, guide §1.2): the sort sampler otherwise re-runs
-        // the final distinct-count merge over the deduped-key exchange for
-        // a 3-row output. l_returnflag unique.
-        .transform(df => Tables.sortShield(df, col("l_returnflag")))
         .orderBy("l_returnflag"),
       Some("""SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_exact,
              |       TRUE AS within_bound
@@ -304,10 +289,6 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
             (col("a50").between(col("lo50"), col("hi50")) &&
              col("a95").between(col("lo95"), col("hi95")))
               .as("within_bound"))
-          // sortShield (r22, guide §1.2): the sort sampler otherwise
-          // re-runs the exact nearest-rank windows over the full fact for
-          // a 3-row output. l_returnflag unique.
-          .transform(df => Tables.sortShield(df, col("l_returnflag")))
           .orderBy("l_returnflag")
       },
       Some("""WITH c AS (SELECT l_returnflag,
@@ -406,9 +387,6 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
             "abs(l_quantity) > 9e16D THEN NULL " +
             "ELSE l_quantity END) AS BIGINT)").as("sum_qty"),
           count(lit(1)).as("n"))
-        // sortShield (r22, guide §1.2): the sort sampler otherwise re-runs
-        // the de-salt final aggregate merge. p_brand unique (group key).
-        .transform(df => Tables.sortShield(df, col("p_brand")))
         // p_brand is nullable (the nullgrid corpus stages a NULL-brand
         // part): pin the NULL direction on BOTH sides — Spark ASC defaults
         // NULLS FIRST, DuckDB NULLS LAST.
@@ -443,9 +421,6 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
             coalesce(col("k"), col("k2")).as("k"),
             coalesce(col("new_bal"), col("bal_cents")).as("bal_cents"),
             coalesce(col("seg"), lit("NEW")).as("seg"))
-          // sortShield (r22, guide §1.2): the sort sampler otherwise
-          // re-runs the full-outer merge join. k unique (join key).
-          .transform(df => Tables.sortShield(df, col("k")))
           .orderBy("k")
       },
       Some("""WITH base AS (SELECT c_custkey AS k,
@@ -594,11 +569,6 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
           .agg(count(lit(1)).as("n_events"),
             min(col("ms")).as("start_ms"), max(col("ms")).as("end_ms"))
           .withColumn("dur_ms", col("end_ms") - col("start_ms"))
-          // sortShield (r22, guide §1.2): the sort sampler otherwise
-          // re-runs both sessionizing windows + the session rollup (all
-          // above the one user_id exchange). (user_id, session_seq) is the
-          // group key — unique.
-          .transform(df => Tables.sortShield(df, col("user_id")))
           .orderBy("user_id", "session_seq")
       },
       Some("""WITH e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events
@@ -660,10 +630,6 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
           .filter(col("event_type") === "purchase")
           .select(col("event_id"), col("user_id"), col("session_seq"),
             col("first_type"), (col("ms") - col("first_ms")).as("ms_to_convert"))
-          // sortShield (r22, guide §1.2): the sort sampler otherwise
-          // re-runs all three attribution windows above the one user_id
-          // exchange; output is the purchase subset only. event_id unique.
-          .transform(df => Tables.sortShield(df, col("event_id")))
           .orderBy("event_id")
       },
       Some("""WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms

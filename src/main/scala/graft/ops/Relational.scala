@@ -249,10 +249,6 @@ object Relational {
       (s, d) => asofComposed(s, d)
         .filter(col("is_order") === 0 && col("asof_orderkey").isNotNull)
         .select(col("event_id"), col("k").as("user_id"), col("asof_orderkey"))
-        // sortShield (r22, guide §1.2): the sort sampler otherwise re-runs
-        // the as-of carry-forward windows above the one k exchange.
-        // event_id unique.
-        .transform(df => Tables.sortShield(df, col("event_id")))
         .orderBy("event_id"),
       Some("""WITH o AS (SELECT o_custkey AS k, epoch_ms(o_orderdate) AS t,
              |                  MAX(o_orderkey) AS o_orderkey
@@ -281,8 +277,6 @@ object Relational {
           .filter(col("is_order") === 0 && col("asof_orderkey").isNotNull &&
             col("t") - col("asof_t") <= TolMs)
           .select(col("event_id"), col("k").as("user_id"), col("asof_orderkey"))
-          // sortShield (r22): the jn_asof rationale.
-          .transform(df => Tables.sortShield(df, col("event_id")))
           .orderBy("event_id")
       },
       Some("""WITH o AS (SELECT o_custkey AS k, epoch_ms(o_orderdate) AS t,
@@ -343,22 +337,16 @@ object Relational {
       (s, d) => {
         val p = Tables.part(s, d)
           .select(col("p_partkey"), col("p_name"), col("p_brand"), col("p_size"))
-        val verified = graft.dedup.Dedup
+        // No length-difference prefilter ahead of the verify: p_name lengths
+        // span 7-12 chars, so |len(a)-len(b)| ≤ 10 passes 100% of candidates
+        // (and levenshtein ≤ 10 itself passes 99.1%) — measured in r22 and
+        // rejected.
+        graft.dedup.Dedup
           .bucketedPairs(p, struct(col("p_partkey"), col("p_name")),
             col("p_brand"), col("p_size"))
           .select(col("p.x.p_partkey").as("part_a"), col("p.y.p_partkey").as("part_b"),
             levenshtein(col("p.x.p_name"), col("p.y.p_name")).as("edit_dist"))
           .filter(col("edit_dist") <= 10)
-        // OPTIMIZATION r22 (guide §1.2): sortShield — without the barrier the
-        // presentation sort's range-bounds sampler re-executed the whole
-        // pair expansion + levenshtein verify a second time (measured:
-        // 1.17 s → 0.85 s). (part_a, part_b) is a unique pair key, so the
-        // final order is a total order either way. The r22 A/B also
-        // REJECTED the §3.2-style length-difference prefilter VERDICT
-        // suggested: p_name lengths span 7-12 chars, so |len(a)-len(b)| ≤ 10
-        // passes 100% of candidates (and levenshtein ≤ 10 itself passes
-        // 99.1%) — the verify is not the cost here, the double execution was.
-        Tables.sortShield(verified, col("part_a"))
           .orderBy("part_a", "part_b")
       },
       Some(s"""WITH p AS (SELECT p_partkey, p_name, p_brand, p_size FROM part),
@@ -404,12 +392,6 @@ object Relational {
       (s, d) => {
         val p = Tables.part(s, d)
           .select(col("p_partkey"), col("p_name"), col("p_brand"), col("p_size"))
-        // r22 A/B note: Tables.sortShield was tried here (the jn_fuzzy_name
-        // win) and measured WORSE (paired min-of-4: 1.208 → 1.354, +12%) —
-        // the candidate `distinct()` already materializes an exchange right
-        // below the verify, so the sort sampler only re-runs the cheap
-        // post-distinct levenshtein projection, and the shield's extra
-        // shuffle+stage is pure overhead. Left unshielded.
         fuzzyMultiblockPairs(p)
           .select(col("part_a"), col("part_b"),
             levenshtein(col("na"), col("nb")).as("edit_dist"))
@@ -552,10 +534,6 @@ object Relational {
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 2)
           .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rn"))
-          // sortShield (r22, guide §1.2): the sort sampler otherwise
-          // re-runs the rank window (sort + group-limit) above the one
-          // o_custkey exchange. (o_custkey, rn) unique post-filter.
-          .transform(df => Tables.sortShield(df, col("o_custkey")))
           .orderBy("o_custkey", "rn")
       },
       Some("""SELECT o_custkey, o_orderkey, o_totalprice, CAST(rn AS INTEGER) AS rn FROM (
@@ -574,8 +552,6 @@ object Relational {
           .withColumn("cents", cents("o_totalprice"))
           .withColumn("running_cents", sum(col("cents")).over(w))
           .select(col("o_custkey"), col("o_orderkey"), col("running_cents"))
-          // sortShield (r22): the w_topn rationale. o_orderkey unique.
-          .transform(df => Tables.sortShield(df, col("o_custkey")))
           .orderBy("o_custkey", "o_orderkey")
       },
       Some("""SELECT o_custkey, o_orderkey,
@@ -593,8 +569,6 @@ object Relational {
         Tables.orders(s, d)
           .withColumn("prev_cents", lag(cents("o_totalprice"), 1).over(w))
           .select(col("o_custkey"), col("o_orderkey"), col("prev_cents"))
-          // sortShield (r22): the w_topn rationale. o_orderkey unique.
-          .transform(df => Tables.sortShield(df, col("o_custkey")))
           .orderBy("o_custkey", "o_orderkey")
       },
       Some("""SELECT o_custkey, o_orderkey,
@@ -673,9 +647,6 @@ object Relational {
           col("event_id"),
           get_json_object(col("props"), "$.k").as("k_str"),
           get_json_object(col("props"), "$.k").cast(IntegerType).as("k_int"))
-        // sortShield (r22, guide §1.2): the sort sampler otherwise re-runs
-        // both JSON extractions; output is 3 narrow columns. event_id unique.
-        .transform(df => Tables.sortShield(df, col("event_id")))
         .orderBy("event_id"),
       // TRY_CAST (the dd_exact_priority discipline): Spark's .cast yields
       // NULL on a non-numeric k while a plain DuckDB CAST would abort the

@@ -214,8 +214,6 @@ object Similarity extends SimilarityServeQueries with SimilarityEvalQueries {
     newAsg.join(old, "vec_id")
       .select(col("vec_id"), col("old_cell"), col("new_cell"),
         (col("old_cell") =!= col("new_cell")).as("moved"))
-      // r22 A/B note: Tables.sortShield measured WORSE here (+7.3%) — the
-      // ivfSearch verdict: artifact-probing tail, stage-latency-bound.
       .orderBy("vec_id")
   }
 
@@ -407,13 +405,6 @@ object Similarity extends SimilarityServeQueries with SimilarityEvalQueries {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
       .select(col("q_id"), col("cand_id"), col(scoreCol), col("rank"))
-      // r22 A/B note: Tables.sortShield was tried here and measured WORSE
-      // on every consumer (sim_ann_ivf +3.7%, sqrtn +2.7%, mips_ivf +0.2%,
-      // and sim_nprobe_sweep +19.7% — the sweep then consumed this body
-      // three times, paying the extra exchange per arm; it has since moved
-      // to [[ivfSearchSweep]]). The artifact-probing
-      // tails are stage-latency-bound: the sampler's re-run is a cheap
-      // probe join over a 2000-vector artifact, the added AQE stage is not.
       .orderBy("q_id", "rank")
   }
 

@@ -37,9 +37,6 @@ private[sim] trait SimilarityEvalQueries { this: Similarity.type =>
           .groupBy(col("q_id"))
           .agg(count(col("hit")).as("n_hits"))
           .withColumn("recall_permille", expr("(1000 * n_hits) div 3"))
-          // r22 A/B note: Tables.sortShield measured a wash/loss on the
-          // eval composites (sim_ann_recall +1.7%) — artifact-probing
-          // tails are stage-latency-bound. Left unshielded.
           .orderBy("q_id")
       },
       Some(s"""WITH ${duckKmeansChain()},
@@ -164,8 +161,6 @@ private[sim] trait SimilarityEvalQueries { this: Similarity.type =>
           .filter(col("rank") <= 3)
           .select(col("label"), col("vec_id"), col("cos6"),
             col("rank").cast("int").as("rank"))
-          // r22 A/B note: Tables.sortShield measured WORSE here (+11.7%) —
-          // the ivfSearch verdict (stage-latency-bound tail).
           .orderBy("label", "rank")
       },
       Some {
@@ -246,9 +241,6 @@ private[sim] trait SimilarityEvalQueries { this: Similarity.type =>
           .groupBy(col("q_id"))
           .agg(count(col("hit")).as("n_hits"))
           .withColumn("recall_permille", expr("(1000 * n_hits) div 3"))
-          // r22 A/B note: Tables.sortShield measured a wash/loss on the
-          // eval composites (sim_ann_recall +1.7%) — artifact-probing
-          // tails are stage-latency-bound. Left unshielded.
           .orderBy("q_id")
       },
       Some(duckPqRecallSql)),

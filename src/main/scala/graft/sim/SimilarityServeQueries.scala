@@ -113,10 +113,7 @@ private[sim] trait SimilarityServeQueries { this: Similarity.type =>
       * zero-norm candidates have no rank — see [[bruteTopK]]). */
     QueryDef(
       "sim_topk_brute",
-      // sortShield (r22, guide §1.2): the sort sampler otherwise re-runs
-      // the brute cosine scan + rank window. (q_id, rank) unique.
-      (s, d) => graft.Tables.sortShield(bruteTopK(s, d, 5), col("q_id"))
-        .orderBy("q_id", "rank"),
+      (s, d) => bruteTopK(s, d, 5).orderBy("q_id", "rank"),
       Some(duckBruteSql(5))),
 
     /** Top-k via the bounded typed Aggregator (graft.functions.TopK): same
@@ -147,9 +144,6 @@ private[sim] trait SimilarityServeQueries { this: Similarity.type =>
             entries.zipWithIndex.map { case (en, i) => (qid, en.id, en.score, i + 1) }
           }
           .toDF("q_id", "cand_id", "cos6", "rank")
-          // r22 A/B note: Tables.sortShield measured WORSE here (+11.5%) —
-          // the typed-aggregator output is 40 rows over a fast object
-          // pipeline; the added stage dominates.
           .orderBy("q_id", "rank")
       },
       Some(duckBruteSql(5))),
@@ -220,9 +214,6 @@ private[sim] trait SimilarityServeQueries { this: Similarity.type =>
           .filter(col("rank") <= 3)
           .select(col("q_id"), col("q_label").as("label"), col("cand_id"),
             col("cos6"), col("rank"))
-          // sortShield (r22): the sim_topk_brute rationale — probe join +
-          // rank window otherwise re-run by the sort sampler.
-          .transform(df => graft.Tables.sortShield(df, col("q_id")))
           .orderBy("q_id", "rank")
       },
       Some {
@@ -265,14 +256,10 @@ private[sim] trait SimilarityServeQueries { this: Similarity.type =>
       "sim_quantize_u8",
       // quantizer derivation shared with sim_topk_q8 — Similarity.u8Codes
       // is the one owner (round 17)
-      (s, d) => graft.Tables.sortShield(
-        u8Codes(s, d)
-          .select(col("vec_id"), col("m").as("scale_micro"),
-            expr("aggregate(q, CAST(0 AS BIGINT), (a, x) -> a + x)").as("q_sum"),
-            expr("array_min(q)").as("q_min"), expr("array_max(q)").as("q_max")),
-        col("vec_id"))
-        // sortShield (r22, guide §1.2): the sort sampler otherwise re-runs
-        // the per-vector quantize + checksum HOFs. vec_id unique.
+      (s, d) => u8Codes(s, d)
+        .select(col("vec_id"), col("m").as("scale_micro"),
+          expr("aggregate(q, CAST(0 AS BIGINT), (a, x) -> a + x)").as("q_sum"),
+          expr("array_min(q)").as("q_min"), expr("array_max(q)").as("q_max"))
         .orderBy("vec_id"),
       Some("""WITH vm AS (SELECT vec_id,
              |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS vm
@@ -323,9 +310,6 @@ private[sim] trait SimilarityServeQueries { this: Similarity.type =>
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 3)
           .select(col("q_id"), col("cand_id"), col("score"), col("rank"))
-          // sortShield (r22): the sim_topk_brute rationale — the int8 dot
-          // scan + rank window otherwise re-run by the sort sampler.
-          .transform(df => graft.Tables.sortShield(df, col("q_id")))
           .orderBy("q_id", "rank")
       },
       Some("""WITH vm AS (SELECT vec_id,
@@ -381,8 +365,6 @@ private[sim] trait SimilarityServeQueries { this: Similarity.type =>
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 3)
           .select(col("src"), col("dst"), col("cos6"), col("rank"))
-          // r22 A/B note: Tables.sortShield measured WORSE here (+3.0%) —
-          // the ivfSearch verdict (artifact-probing, stage-latency-bound).
           .orderBy("src", "rank")
       },
       Some(s"""WITH ${duckKmeansChain(
@@ -426,8 +408,6 @@ private[sim] trait SimilarityServeQueries { this: Similarity.type =>
       * rank ties break to the lowest candidate id in both engines. */
     QueryDef(
       "sim_pq_topk",
-      // r22 A/B note: Tables.sortShield measured WORSE here (+2.3%) — the
-      // ivfSearch verdict (artifact-probing tail, stage-latency-bound).
       (s, d) => pqTopK(s, d, 3)
         .select(col("q_id"), col("cand_id"), col("score"), col("rank"))
         .orderBy("q_id", "rank"),
@@ -485,8 +465,6 @@ private[sim] trait SimilarityServeQueries { this: Similarity.type =>
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 3)
           .select(col("q_id"), col("cand_id"), col("score"), col("rank"))
-          // r22 A/B note: Tables.sortShield measured WORSE here (+2.7%) —
-          // the ivfSearch verdict (artifact-probing, stage-latency-bound).
           .orderBy("q_id", "rank")
       },
       Some(duckIvfPqSql)),
@@ -511,9 +489,6 @@ private[sim] trait SimilarityServeQueries { this: Similarity.type =>
       * aggregator (sim_topk_agg) is the million-candidate formulation. */
     QueryDef(
       "sim_mips_topk",
-      // r22 A/B note: Tables.sortShield measured a wash here (+1.2%) where
-      // its cosine sibling sim_topk_brute took −15% — the dot scan is too
-      // cheap for the saved re-run to beat the added stage. Left unshielded.
       (s, d) => bruteMipsTopK(s, d, 5).orderBy("q_id", "rank"),
       Some("""SELECT q_id, cand_id, round(ip, 6) AS ip6, CAST(rank AS INTEGER) AS rank FROM (
              |  SELECT q.vec_id AS q_id, c.vec_id AS cand_id,

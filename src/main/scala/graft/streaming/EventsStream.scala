@@ -196,11 +196,6 @@ object EventsStream extends Serializable {
       .agg(min(col("ms")).as("session_start_ms"), count(lit(1)).as("n_events"),
         sum(col("cents")).as("sum_cents"))
       .select(col("user_id"), col("session_start_ms"), col("n_events"), col("sum_cents"))
-      // r22 A/B note: Tables.sortShield was tried here and measured WORSE
-      // (paired min-of-4: 0.625 → 0.670, +7.2%) even though the an_sessionize
-      // sibling took −10% from it — this variant carries the extra cents
-      // aggregate and its re-run is cheaper than the added exchange. Left
-      // unshielded.
       .orderBy("user_id", "session_start_ms")
   }
 

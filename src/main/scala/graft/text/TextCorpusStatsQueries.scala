@@ -32,9 +32,6 @@ private[text] trait TextCorpusStatsQueries { this: TextStats.type =>
           // BPE-ish estimate: alnum runs + residual punctuation, ~chars/4 floor
           expr(s"CAST(size($toks) + length(replace(text, ' ', '')) div 16 AS INTEGER)")
             .as("n_tokens_bpe_est"))
-        // sortShield (r22, guide §1.2): the sort sampler otherwise re-runs
-        // the tokenize/replace projection. doc_id unique.
-        .transform(df => Tables.sortShield(df, col("doc_id")))
         .orderBy("doc_id"),
       Some(s"""SELECT doc_id,
               |       CAST(len(string_split_regex(trim(text), ' +')) AS INTEGER) AS n_tokens,
@@ -71,9 +68,6 @@ private[text] trait TextCorpusStatsQueries { this: TextStats.type =>
         .withColumn("pct_stop", expr("(100 * n_stop) div n_tokens"))
         .withColumn("quality_ok",
           expr(TextStats.qualityKeepSql))
-        // sortShield (r22): the tx_tokens rationale (stop-list filter HOF
-        // re-run otherwise). doc_id unique.
-        .transform(df => Tables.sortShield(df, col("doc_id")))
         .orderBy("doc_id"),
       Some(s"""SELECT doc_id,
               |       CAST(len(string_split_regex(trim(text), ' +')) AS INTEGER) AS n_tokens,
@@ -112,9 +106,6 @@ private[text] trait TextCorpusStatsQueries { this: TextStats.type =>
           expr("CASE WHEN s_en IS NULL THEN NULL " +
             "WHEN s_en >= s_de AND s_en >= s_fr THEN 'en' " +
             "WHEN s_de >= s_fr THEN 'de' ELSE 'fr' END"))
-        // sortShield (r22): the tx_tokens rationale (three marker-filter
-        // HOFs re-run otherwise). doc_id unique.
-        .transform(df => Tables.sortShield(df, col("doc_id")))
         .orderBy("doc_id"),
       Some("""WITH sc AS (
              |  SELECT doc_id, lang,
@@ -159,10 +150,6 @@ private[text] trait TextCorpusStatsQueries { this: TextStats.type =>
           .withColumn("rk", row_number().over(rankW))
           .filter(col("rk") <= 3)
           .select(col("lang"), col("bigram"), col("n"), col("rk"))
-          // sortShield (r22, guide §1.2): the sort sampler otherwise
-          // re-runs the rank window over the vocab-sized count table.
-          // (lang, rk) unique post-filter.
-          .transform(df => Tables.sortShield(df, col("lang")))
           .orderBy(col("lang").asc_nulls_first, col("rk"))
       },
       Some("""WITH toksq AS (SELECT doc_id, lang, string_split_regex(trim(text), ' +') AS t
@@ -223,11 +210,6 @@ private[text] trait TextCorpusStatsQueries { this: TextStats.type =>
           expr("(100 * top_c) div n_tokens").as("top_token_pct"),
           expr("(100 * (n_bg - n_bg_distinct)) div greatest(n_bg, 1L)")
             .as("dup_bigram_pct"))
-        // r22 A/B note: Tables.sortShield was tried here and measured WORSE
-        // (paired min-of-4: 0.626 → 0.667, +6.5%) — the per-row battery runs
-        // 32-way above the spread exchange, so the sampler's re-run is
-        // parallel and the shield's extra stage costs more than it saves
-        // (the tx_pii_scrub verdict, +31% there). Left unshielded.
         .orderBy("doc_id"),
       Some("""WITH toksq AS (SELECT doc_id, string_split_regex(trim(text), ' +') AS t FROM documents),
              |tok AS (SELECT doc_id, unnest(t) AS w FROM toksq),
@@ -398,10 +380,6 @@ private[text] trait TextCorpusStatsQueries { this: TextStats.type =>
           .filter(col("rank") <= 5)
           .select(col("doc_id"), col("term"), col("tf"), col("df"),
             col("score_ppm"), col("rank").cast("int").as("rank"))
-          // sortShield (r22, guide §1.2): the sort sampler otherwise
-          // re-runs the top-5 rank window (sort + group-limit) above the
-          // doc_id exchange. (doc_id, rank) unique post-filter.
-          .transform(df => Tables.sortShield(df, col("doc_id")))
           .orderBy("doc_id", "rank")
       },
       Some("""WITH tok AS (SELECT doc_id,

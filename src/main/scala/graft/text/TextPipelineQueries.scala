@@ -40,9 +40,6 @@ private[text] trait TextPipelineQueries { this: TextStats.type =>
           expr("CASE WHEN ctoks IS NULL THEN NULL ELSE size(ctoks) END")
             .cast("int").as("n_chunk_tokens"),
           md5(array_join(col("ctoks"), " ")).as("chunk_fp"))
-        // sortShield (r22, guide §1.2): the sort sampler otherwise re-runs
-        // the chunk Generate + per-chunk md5. (doc_id, chunk_idx) unique.
-        .transform(df => graft.Tables.sortShield(df, col("doc_id")))
         .orderBy("doc_id", "chunk_idx"),
       Some("""WITH toksq AS (SELECT doc_id, string_split_regex(trim(text), ' +') AS t FROM documents),
              |c AS (SELECT doc_id, t,
@@ -171,9 +168,7 @@ private[text] trait TextPipelineQueries { this: TextStats.type =>
       // r21 A/B note: Tables.documentsSpread was tried here (the
       // tx_pii_scrub remedy) and measured NO win — the HOF battery over
       // this row count doesn't dominate the way the regex battery does, so
-      // the spread exchange was pure cost. Left narrow. Re-paired in r22 on
-      // top of the sortShield below: spread+shield 0.591 vs shield-only
-      // 0.465 — still no; the rejection holds.
+      // the spread exchange was pure cost. Left narrow.
       (s, d) => Tables.documents(s, d)
         .select(col("doc_id"), expr(toks).as("tk"))
         // NULL-total (TextStats.nTokensAs discipline): size(NULL tk) = -1
@@ -198,10 +193,6 @@ private[text] trait TextPipelineQueries { this: TextStats.type =>
         .select(col("doc_id"), col("n_tokens"), col("n_masked"),
           md5(col("corrupted")).as("corrupted_md5"),
           md5(col("target")).as("target_md5"))
-        // sortShield (r22, guide §1.2): the sort sampler otherwise re-runs
-        // the whole span-corruption HOF battery; output is 2 counts +
-        // 2 md5s per doc. doc_id unique.
-        .transform(df => graft.Tables.sortShield(df, col("doc_id")))
         .orderBy("doc_id"),
       Some("""WITH t AS (SELECT doc_id, string_split_regex(trim(text), ' +') AS tk,
              |                  CAST(len(string_split_regex(trim(text), ' +')) AS BIGINT)
@@ -367,11 +358,6 @@ private[text] trait TextPipelineQueries { this: TextStats.type =>
         .withColumn("clean", expr(s"regexp_replace(t3, '$PiiId', '<ID>')"))
         .select(col("doc_id"), col("n_emails"), col("n_ips"), col("n_phones"),
           col("n_ids"), md5(col("clean")).as("clean_md5"))
-        // r22 A/B note: Tables.sortShield was tried here and measured WORSE
-        // (paired min-of-4: 0.437 → 0.573, +31%) — the regex battery already
-        // runs 32-way above the spread exchange, so the sampler's re-run is
-        // fully parallel while the shield adds a serial stage barrier + AQE
-        // round. Left unshielded (same verdict: tx_repetition +6.5%).
         .orderBy("doc_id"),
       Some(s"""WITH b AS (SELECT doc_id,
              |  text || ' contact user' || CAST(doc_id AS VARCHAR)

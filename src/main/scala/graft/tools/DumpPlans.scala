@@ -69,7 +69,7 @@ object DumpPlans {
     // matching a name regex — plan A/B during optimization without paying
     // the full 181-query (and artifact-building) pass.
     val nameFilter = args.drop(2).headOption.map(_.r)
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = Sessions.local(Sessions.defaultCpus)
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => nameFilter.forall(_.findFirstIn(name).isDefined) }
     val sb = new StringBuilder

@@ -57,7 +57,7 @@ object PlanSweep {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANSWEEP.json")
     val bound = args.lift(2).map(_.toLong).getOrElse(512L * 1024)
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = Sessions.local(Sessions.defaultCpus)
     val detail = Seq("CartesianProduct", "SortMergeJoin", "BroadcastNestedLoopJoin")
       .map(n => n -> s"""(?m)^\\(\\d+\\) $n\\b""".r).toMap
     val flagged = scala.collection.mutable.ArrayBuffer.empty[String]

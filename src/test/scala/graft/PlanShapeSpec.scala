@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Tripwires for the plan-shape claims the operator Scaladocs make: if a
@@ -14,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Spark version bump can shift without any semantic regression. A plan
   * that gets CHEAPER than documented should pass; only the documented
   * failure mode (an extra shuffle class, a join-back, a global sort) trips. */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   val sf = TestSpark.sf
 
@@ -29,15 +31,14 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("tx_curriculum_order: scan-parallel — at most the output-sort exchange") {
     val p = plan("tx_curriculum_order")
-    assert(exchanges(p) <= 1, s"expected at most the ORDER BY range exchange:\n$p")
+    assert(exchanges(p) <= 1, s"expected at most the ORDER BY presentation exchange:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("Window"), "no join/window allowed")
   }
 
   test("dd_soft_dedup: one fingerprint shuffle feeds the window, no join-back") {
     val p = plan("dd_soft_dedup")
     assert(!p.contains("Join"), s"group size must come from a window, not a join-back:\n$p")
-    // r22: +1 for the sortShield barrier ahead of the presentation sort
-    assert(exchanges(p) <= 3, s"expected at most fp hash + shield + output range exchanges:\n$p")
+    assert(exchanges(p) <= 2, s"expected at most fp hash + output presentation exchanges:\n$p")
   }
 
   test("an_kanon_audit / an_audience_overlap / mm_modality_mix: dims broadcast, no sort-merge join") {
@@ -60,10 +61,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // the correctness half of this claim lives in AnalyticsSpec; the plan
     // half is pinned here with the rest of the tripwires
     val p = plan("an_attribution")
-    // r22: ≤2 — the one user_id exchange feeding all three windows plus
-    // the sortShield barrier ABOVE them (purchase-subset-sized); a second
-    // exchange BETWEEN the windows would still push this over
-    assert(hashExchanges(p) <= 2,
+    // a second hash exchange BETWEEN the windows would push this over
+    assert(hashExchanges(p) <= 1,
       s"the per-session windows must reuse the user_id partitioning:\n$p")
     assert(!p.contains("SortMergeJoin"), s"sort-merge join crept in:\n$p")
   }
@@ -134,9 +133,13 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("tx_pack_sequences: the packing window partitions by source, never globally") {
-    val p = plan("tx_pack_sequences")
+    val executed = SparkEntry.queries("tx_pack_sequences")(spark, sf).queryExecution.executedPlan
+    val p = executed.toString
     assert(p.contains("Window"), s"packing is a per-source prefix sum window:\n$p")
-    assert(!p.contains("Exchange SinglePartition"),
+    // a plan-tree check: the presentation sort's SinglePartition exchange
+    // prints the same text a global window's exchange would
+    val global = collect(executed) { case w: WindowExec if w.partitionSpec.isEmpty => w }
+    assert(global.isEmpty,
       s"a global (single-partition) window would serialize the corpus:\n$p")
   }
 
