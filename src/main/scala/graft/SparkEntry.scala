@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.dedup.Dedup
-import graft.etl.{StarEtl, StarQueries}
+import graft.etl.{StarQueries, StarSchema}
 import graft.mm.Multimodal
 import graft.ops.{Analytics, Relational}
 import graft.sim.Similarity
@@ -27,7 +27,7 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    StarEtl.songplays(spark, "/root/testdata/sf0.001")
+    StarSchema.songplays.frame(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * `create_tables.py:13-27` analog: the reference declares every table with
   * explicit DROP/CREATE statements before loading; here the same surface is
   * ANSI `DROP TABLE IF EXISTS` / `CREATE TABLE ... USING PARQUET` through
-  * the Spark catalog.
+  * the Spark catalog, generated from the [[StarSchema.tables]] declarations.
   *
   * The reference's physical hints don't exist as Spark DDL keywords, so they
   * are carried as TBLPROPERTIES documentation while the real layout is
@@ -20,33 +20,21 @@ import org.apache.spark.sql.SparkSession
   */
 object StarCatalog {
 
-  /** (name, column DDL, reference hints) for the five star tables.
-    * Types mirror the StarEtl outputs ([[StarSchema]] case classes). */
-  val tables: Seq[(String, String, String)] = Seq(
-    ("songplays",
-      "start_time TIMESTAMP, user_id STRING, song_id BIGINT, session_id STRING, user_agent STRING",
-      "distkey=song_id, sortkey=start_time"),
-    ("users", "user_id BIGINT, level STRING", "diststyle=all, sortkey=user_id"),
-    ("songs", "song_id BIGINT, title STRING, artist_id STRING, year INT, duration BIGINT",
-      "distkey=song_id, sortkey=song_id"),
-    ("artists", "artist_id BIGINT, name STRING, location INT, latitude BIGINT",
-      "diststyle=all, sortkey=artist_id"),
-    ("time",
-      "start_time TIMESTAMP, hour INT, day INT, week INT, month INT, year INT, weekday INT",
-      "diststyle=all, sortkey=start_time"))
-
   def dropStatements: Seq[String] =
-    tables.map { case (name, _, _) => s"DROP TABLE IF EXISTS $name" }
+    StarSchema.tables.map(t => s"DROP TABLE IF EXISTS ${t.name}")
 
   /** CREATE without LOCATION — managed-table form (round-trip tests). */
   def createStatements: Seq[String] = createStatements(None)
 
-  /** CREATE with optional LOCATION per table (external over ELT output). */
+  /** CREATE with optional LOCATION per table (external over ELT output).
+    * Columns come from the row case class's encoder schema, every one
+    * declared nullable: the builds keep NULL-keyed rows (StarQueries). */
   def createStatements(locationFor: Option[String => String]): Seq[String] =
-    tables.map { case (name, cols, hints) =>
-      val loc = locationFor.map(f => s" LOCATION '${f(name)}'").getOrElse("")
-      s"CREATE TABLE IF NOT EXISTS $name ($cols) USING PARQUET$loc " +
-        s"TBLPROPERTIES ('graft.reference.hints' = '$hints')"
+    StarSchema.tables.map { t =>
+      val cols = t.encoder.schema.fields.map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+      val loc = locationFor.map(f => s" LOCATION '${f(t.name)}'").getOrElse("")
+      s"CREATE TABLE IF NOT EXISTS ${t.name} ($cols) USING PARQUET$loc " +
+        s"TBLPROPERTIES ('graft.reference.hints' = '${t.hints}')"
     }
 
   /** create_tables.py:13-19 analog: drop everything. */
@@ -74,8 +62,8 @@ object StarCatalog {
     * `columns = true` adds per-column min/max/NDV (the
     * `FOR ALL COLUMNS` form) — the Redshift ANALYZE equivalent. */
   def analyze(spark: SparkSession, columns: Boolean = false): Unit =
-    tables.foreach { case (name, _, _) =>
-      spark.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS" +
+    StarSchema.tables.foreach { t =>
+      spark.sql(s"ANALYZE TABLE ${t.name} COMPUTE STATISTICS" +
         (if (columns) " FOR ALL COLUMNS" else ""))
     }
 }

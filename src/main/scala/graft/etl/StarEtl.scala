@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,6 +24,11 @@ import graft.Tables
   * Scale notes: the dimension side of every join is broadcast (diststyle-all
   * analog, sql_queries.py:85,105,117); the fact pipeline is one shuffle for
   * the final DISTINCT (partial/final hash aggregate, map-side combine free).
+  *
+  * Each builder is the table's one lineage, unsorted: [[StarPipeline]]
+  * writes it through Layout.writeParquet (distkey repartition + sortkey
+  * sortWithinPartitions), and the oracle-facing queries add the
+  * presentation ORDER BY declared in [[StarSchema]].
   */
 object StarEtl {
   private val Dec9 = DecimalType(9, 0)
@@ -44,7 +49,7 @@ object StarEtl {
     * (sql_queries.py:152): BIGINT integer division truncates the millisecond
     * component before the timestamp is built. Epoch millis are positive, so
     * divide-then-cast truncation equals the reference's integer division. */
-  def epochToTimestamp(ms: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def epochToTimestamp(ms: Column): Column =
     timestamp_seconds(call_function("div", ms, lit(1000)))
 
   private def startTime = epochToTimestamp(expr("ms")).as("start_time")
@@ -72,17 +77,7 @@ object StarEtl {
     * The dim side is broadcast: at 100 TB the fact side streams through a
     * broadcast hash join with zero fact-side shuffle; the only exchange is
     * the final DISTINCT's hash aggregation. */
-  def songplays(spark: SparkSession, sfDir: String): DataFrame =
-    songplaysUnsorted(spark, sfDir)
-      .orderBy("start_time", "user_id", "song_id", "session_id", "user_agent")
-
-  /** [[songplays]] WITHOUT the presentation sort — the lineage
-    * [[StarPipeline]] writes: the global orderBy exists only for the
-    * oracle's ordered compare, and Layout.writeParquet immediately
-    * repartitions by the distkey and re-sorts within partitions, so the
-    * ordered form paid a presentation exchange + global sort per ELT run
-    * just to discard it. Same rule for the four dims below. */
-  def songplaysUnsorted(spark: SparkSession, sfDir: String): DataFrame = {
+  def songplays(spark: SparkSession, sfDir: String): DataFrame = {
     val se  = stagingEvents(spark, sfDir).filter(col("event_type") === "view")
     val dim = songDim(spark, sfDir)
     se.join(
@@ -104,10 +99,6 @@ object StarEtl {
     * level changed appears once per level. `level` here is the `$.k` field of
     * the event props JSON (P2 filter applied as in the reference). */
   def users(spark: SparkSession, sfDir: String): DataFrame =
-    usersUnsorted(spark, sfDir).orderBy("user_id", "level")
-
-  /** [[users]] without the presentation sort (the songplaysUnsorted rule). */
-  def usersUnsorted(spark: SparkSession, sfDir: String): DataFrame =
     Tables.events(spark, sfDir)
       .filter(col("event_type") === "view")
       .select(
@@ -134,10 +125,6 @@ object StarEtl {
   /** songs dim (sql_queries.py:186-195): distinct projection of the part
     * metadata with the DECIMAL(9,0) load-rounding on the price/duration. */
   def songs(spark: SparkSession, sfDir: String): DataFrame =
-    songsUnsorted(spark, sfDir).orderBy("song_id")
-
-  /** [[songs]] without the presentation sort (the songplaysUnsorted rule). */
-  def songsUnsorted(spark: SparkSession, sfDir: String): DataFrame =
     Tables.part(spark, sfDir)
       .select(
         col("p_partkey").as("song_id"),
@@ -152,10 +139,6 @@ object StarEtl {
   /** artists dim (sql_queries.py:197-206): distinct projection, NULL-tolerant
     * (P4), DECIMAL(9,0) rounding on the numeric attribute. */
   def artists(spark: SparkSession, sfDir: String): DataFrame =
-    artistsUnsorted(spark, sfDir).orderBy("artist_id")
-
-  /** [[artists]] without the presentation sort (the songplaysUnsorted rule). */
-  def artistsUnsorted(spark: SparkSession, sfDir: String): DataFrame =
     Tables.supplier(spark, sfDir)
       .select(
         col("s_suppkey").as("artist_id"),
@@ -168,26 +151,15 @@ object StarEtl {
     * EXTRACT family E2-E7 — including the E7 bug-as-spec: `weekday` holds
     * the ISO week number (EXTRACT(week) twice, sql_queries.py:214 vs 217). */
   def time(spark: SparkSession, sfDir: String): DataFrame =
-    timeUnsorted(spark, sfDir).orderBy("start_time")
-
-  /** [[time]] without the presentation sort (the songplaysUnsorted rule). */
-  def timeUnsorted(spark: SparkSession, sfDir: String): DataFrame =
-    stagingEvents(spark, sfDir)
-      .filter(col("event_type") === "view")
-      .select(startTime)
-      .select(
-        col("start_time"),
-        hour(col("start_time")).as("hour"),
-        dayofmonth(col("start_time")).as("day"),
-        weekofyear(col("start_time")).as("week"),
-        month(col("start_time")).as("month"),
-        year(col("start_time")).as("year"),
-        weekofyear(col("start_time")).as("weekday"))
-      .distinct()
+    timeDim(spark, sfDir, weekofyear)
 
   /** time dim, fixed variant: `weekday` is a real day-of-week
     * (0=Monday … 6=Sunday, Spark `weekday`). */
   def timeFixed(spark: SparkSession, sfDir: String): DataFrame =
+    timeDim(spark, sfDir, weekday)
+
+  private def timeDim(spark: SparkSession, sfDir: String,
+      weekdayOf: Column => Column): DataFrame =
     stagingEvents(spark, sfDir)
       .filter(col("event_type") === "view")
       .select(startTime)
@@ -198,7 +170,6 @@ object StarEtl {
         weekofyear(col("start_time")).as("week"),
         month(col("start_time")).as("month"),
         year(col("start_time")).as("year"),
-        weekday(col("start_time")).as("weekday"))
+        weekdayOf(col("start_time")).as("weekday"))
       .distinct()
-      .orderBy("start_time")
 }

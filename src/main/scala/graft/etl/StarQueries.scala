@@ -15,24 +15,43 @@ import graft.QueryDef
   * oracle (matching Spark's default).
   */
 object StarQueries {
+  /** The oracle's staged view events (the [[StarEtl.stagingEvents]] analog). */
+  private val SeCte = "se AS (SELECT *, epoch_ms(ts) AS ms FROM events WHERE event_type = 'view')"
+
+  /** [[StarEtl.songDim]]'s oracle: the DECIMAL(9,0)-rounded purchase dim. */
+  private val DimCte =
+    """dim AS (SELECT user_id AS d_user, TRY_CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(9,0)) AS d_value,
+      |               MIN(event_id) AS song_id
+      |        FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)""".stripMargin
+
+  /** The songplays build over `se` and `dim`. */
+  private val SongplaysSelect =
+    """SELECT DISTINCT make_timestamp((se.ms // 1000) * 1000000) AS start_time,
+      |       CAST(se.user_id AS VARCHAR) AS user_id, dim.song_id,
+      |       CAST(se.event_id AS VARCHAR) AS session_id, se.props AS user_agent
+      |FROM se JOIN dim ON se.user_id = dim.d_user
+      |                AND TRY_CAST(CASE WHEN isfinite(se.value) THEN se.value END AS DECIMAL(9,0)) = dim.d_value""".stripMargin
+
+  /** Indents every line after the first by `n` spaces, so a shared CTE
+    * lines up where it is interpolated (whitespace only). */
+  private def indentTail(sql: String, n: Int): String = sql.linesIterator.mkString("\n" + " " * n)
+
+  /** `songplays` as a CTE, for the demo analytics over the fact. */
+  private val SongplaysCtes =
+    s"WITH $SeCte,\n$DimCte,\nsongplays AS (\n  ${indentTail(SongplaysSelect, 2)})"
+
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
       "songplays_build",
-      (s, d) => StarEtl.songplays(s, d),
-      Some("""WITH se AS (SELECT *, epoch_ms(ts) AS ms FROM events WHERE event_type = 'view'),
-             |dim AS (SELECT user_id AS d_user, TRY_CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(9,0)) AS d_value,
-             |               MIN(event_id) AS song_id
-             |        FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-             |SELECT DISTINCT make_timestamp((se.ms // 1000) * 1000000) AS start_time,
-             |       CAST(se.user_id AS VARCHAR) AS user_id, dim.song_id,
-             |       CAST(se.event_id AS VARCHAR) AS session_id, se.props AS user_agent
-             |FROM se JOIN dim ON se.user_id = dim.d_user
-             |                AND TRY_CAST(CASE WHEN isfinite(se.value) THEN se.value END AS DECIMAL(9,0)) = dim.d_value
+      StarSchema.songplays.frame,
+      Some(s"""WITH $SeCte,
+             |$DimCte
+             |$SongplaysSelect
              |ORDER BY start_time NULLS FIRST, user_id, song_id, session_id,
              |         user_agent NULLS FIRST""".stripMargin)),
     QueryDef(
       "users_build",
-      (s, d) => StarEtl.users(s, d),
+      StarSchema.users.frame,
       Some("""SELECT DISTINCT user_id, json_extract_string(props, '$.k') AS level
              |FROM events WHERE event_type = 'view'
              |ORDER BY user_id NULLS FIRST, level NULLS FIRST""".stripMargin)),
@@ -47,19 +66,19 @@ object StarQueries {
              |WHERE rn = 1 ORDER BY user_id NULLS FIRST""".stripMargin)),
     QueryDef(
       "songs_build",
-      (s, d) => StarEtl.songs(s, d),
+      StarSchema.songs.frame,
       Some("""SELECT DISTINCT p_partkey AS song_id, p_name AS title, p_brand AS artist_id,
              |       p_size AS year, CAST(TRY_CAST(CASE WHEN isfinite(p_retailprice) THEN p_retailprice END AS DECIMAL(9,0)) AS BIGINT) AS duration
              |FROM part ORDER BY song_id""".stripMargin)),
     QueryDef(
       "artists_build",
-      (s, d) => StarEtl.artists(s, d),
+      StarSchema.artists.frame,
       Some("""SELECT DISTINCT s_suppkey AS artist_id, s_name AS name,
              |       s_nationkey AS location, CAST(TRY_CAST(CASE WHEN isfinite(s_acctbal) THEN s_acctbal END AS DECIMAL(9,0)) AS BIGINT) AS latitude
              |FROM supplier ORDER BY artist_id""".stripMargin)),
     QueryDef(
       "time_build",
-      (s, d) => StarEtl.time(s, d),
+      StarSchema.time.frame,
       Some("""WITH t AS (SELECT DISTINCT make_timestamp((epoch_ms(ts) // 1000) * 1000000) AS start_time
              |           FROM events WHERE event_type = 'view')
              |SELECT start_time,
@@ -72,7 +91,7 @@ object StarQueries {
              |FROM t ORDER BY start_time NULLS FIRST""".stripMargin)),
     QueryDef(
       "time_fixed",
-      (s, d) => StarEtl.timeFixed(s, d),
+      (s, d) => StarSchema.time.present(StarEtl.timeFixed(s, d)),
       Some("""WITH t AS (SELECT DISTINCT make_timestamp((epoch_ms(ts) // 1000) * 1000000) AS start_time
              |           FROM events WHERE event_type = 'view')
              |SELECT start_time,
@@ -90,23 +109,14 @@ object StarQueries {
       "demo_top_songs",
       (s, d) => {
         import org.apache.spark.sql.functions._
-        StarEtl.songplays(s, d)
+        StarSchema.songplays.frame(s, d)
           .groupBy(col("song_id"))
           .agg(count(lit(1)).as("n_plays"),
             countDistinct(col("user_id")).as("n_users"))
           .orderBy(col("n_plays").desc, col("song_id").asc)
           .limit(10)
       },
-      Some("""WITH se AS (SELECT *, epoch_ms(ts) AS ms FROM events WHERE event_type = 'view'),
-             |dim AS (SELECT user_id AS d_user, TRY_CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(9,0)) AS d_value,
-             |               MIN(event_id) AS song_id
-             |        FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-             |songplays AS (
-             |  SELECT DISTINCT make_timestamp((se.ms // 1000) * 1000000) AS start_time,
-             |         CAST(se.user_id AS VARCHAR) AS user_id, dim.song_id,
-             |         CAST(se.event_id AS VARCHAR) AS session_id, se.props AS user_agent
-             |  FROM se JOIN dim ON se.user_id = dim.d_user
-             |                  AND TRY_CAST(CASE WHEN isfinite(se.value) THEN se.value END AS DECIMAL(9,0)) = dim.d_value)
+      Some(s"""$SongplaysCtes
              |SELECT song_id, COUNT(*) AS n_plays, COUNT(DISTINCT user_id) AS n_users
              |FROM songplays GROUP BY song_id
              |ORDER BY n_plays DESC, song_id ASC LIMIT 10""".stripMargin)),
@@ -116,22 +126,13 @@ object StarQueries {
       "demo_plays_per_hour",
       (s, d) => {
         import org.apache.spark.sql.functions._
-        StarEtl.songplays(s, d)
+        StarSchema.songplays.frame(s, d)
           .select(hour(col("start_time")).as("hour"))
           .groupBy(col("hour"))
           .agg(count(lit(1)).as("n_plays"))
           .orderBy("hour")
       },
-      Some("""WITH se AS (SELECT *, epoch_ms(ts) AS ms FROM events WHERE event_type = 'view'),
-             |dim AS (SELECT user_id AS d_user, TRY_CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(9,0)) AS d_value,
-             |               MIN(event_id) AS song_id
-             |        FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-             |songplays AS (
-             |  SELECT DISTINCT make_timestamp((se.ms // 1000) * 1000000) AS start_time,
-             |         CAST(se.user_id AS VARCHAR) AS user_id, dim.song_id,
-             |         CAST(se.event_id AS VARCHAR) AS session_id, se.props AS user_agent
-             |  FROM se JOIN dim ON se.user_id = dim.d_user
-             |                  AND TRY_CAST(CASE WHEN isfinite(se.value) THEN se.value END AS DECIMAL(9,0)) = dim.d_value)
+      Some(s"""$SongplaysCtes
              |SELECT CAST(hour(start_time) AS INTEGER) AS hour, COUNT(*) AS n_plays
              |FROM songplays GROUP BY hour ORDER BY hour NULLS FIRST""".stripMargin)),
 
@@ -148,9 +149,7 @@ object StarQueries {
           .select(se("event_id"), dim("song_id"))
           .orderBy("event_id", "song_id")
       },
-      Some("""WITH dim AS (SELECT user_id AS d_user, TRY_CAST(CASE WHEN isfinite(value) THEN value END AS DECIMAL(9,0)) AS d_value,
-             |                    MIN(event_id) AS song_id
-             |             FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
+      Some(s"""WITH ${indentTail(DimCte, 5)}
              |SELECT e.event_id, dim.song_id
              |FROM events e JOIN dim ON e.user_id = dim.d_user
              |                      AND TRY_CAST(CASE WHEN isfinite(e.value) THEN e.value END AS DECIMAL(9,0)) = dim.d_value

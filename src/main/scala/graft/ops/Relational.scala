@@ -641,7 +641,7 @@ object Relational {
     QueryDef(
       "json_extract",
       // eventsSpread (r21, guide §2.5): two JSON path extractions per row,
-      // pre-exchange, plus the ORDER BY's sample+run double child pass.
+      // pre-exchange.
       (s, d) => Tables.eventsSpread(s, d)
         .select(
           col("event_id"),

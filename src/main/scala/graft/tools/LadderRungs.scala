@@ -9,7 +9,7 @@ package graft.tools
 object LadderRungs {
   def main(args: Array[String]): Unit = {
     val d = args.head
-    val s = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val s = graft.Sessions.local(graft.Sessions.defaultCpus)
     val nDocs = graft.Tables.documents(s, d).count()
     val nVecs = graft.Tables.embeddings(s, d).count()
     println(s"[rungs] n_docs=$nDocs sim_bits=${graft.dedup.Dedup.simBitsFor(nDocs)} " +

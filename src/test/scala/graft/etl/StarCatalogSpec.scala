@@ -10,14 +10,14 @@ class StarCatalogSpec extends AnyFunSuite {
 
   test("catalog round-trip: reset declares all five tables, drop removes them") {
     StarCatalog.reset(spark)
-    StarCatalog.tables.foreach { case (name, _, _) =>
+    StarSchema.tables.map(_.name).foreach { name =>
       assert(spark.catalog.tableExists(name), s"$name missing after reset")
       assert(spark.table(name).count() == 0, s"$name should be empty after create")
     }
     // reset is idempotent (CREATE IF NOT EXISTS after DROP IF EXISTS)
     StarCatalog.reset(spark)
     StarCatalog.drop(spark)
-    StarCatalog.tables.foreach { case (name, _, _) =>
+    StarSchema.tables.map(_.name).foreach { name =>
       assert(!spark.catalog.tableExists(name), s"$name should be dropped")
     }
   }
@@ -34,6 +34,15 @@ class StarCatalogSpec extends AnyFunSuite {
     assert(spark.table("songs").count() == results.find(_.name == "songs").get.rows)
     assert(spark.table("songplays").schema.fieldNames.toSeq ==
       Seq("start_time", "user_id", "song_id", "session_id", "user_agent"))
+    // the declared DDL agrees with the data each lineage wrote: column
+    // names, order and types (nullability aside — the catalog declares
+    // every column nullable)
+    def cols(schema: org.apache.spark.sql.types.StructType) =
+      schema.fields.toSeq.map(f => (f.name, f.dataType))
+    results.foreach { r =>
+      assert(cols(spark.table(r.name).schema) == cols(spark.read.parquet(r.path).schema),
+        s"${r.name}: catalog DDL disagrees with the written parquet")
+    }
     // STATUPDATE ON analog: post-load catalog stats land for the planner
     StarCatalog.analyze(spark, columns = true)
     val stats = spark.sql("DESCRIBE EXTENDED songs")

@@ -9,6 +9,7 @@ Usage: python3 tools/local_check.py <sfDir> <verifyOutDir>
 """
 import json
 import math
+import os
 import re
 import sys
 
@@ -39,6 +40,49 @@ def parse_compare_lines(stdout):
     return results
 
 
+def account_for_suite(results, out_dir, check):
+    """Close a round gate's vacuous passes over `results` (parsed compare
+    lines) in place, and return it. The ONE copy of the guards both
+    full-suite gates (sf01_gate.py, nullgrid_gate.py) apply to a Verify
+    dump in `out_dir` and the local_check run `check` (a
+    subprocess.CompletedProcess):
+     1. every oracle_sql.json key must have produced a compare line — if
+        local_check crashed before (or partway through) its compare loop,
+        the queries it never reached FAIL instead of vanishing;
+     2. Verify's errors.json is folded in, so a query that threw fails;
+     3. a dumped query with no oracle is recorded 'no-oracle' with its
+        row count (rows-only evidence), not silently dropped."""
+    oracle_keys = set(json.load(open(f"{out_dir}/oracle_sql.json")))
+    for name in sorted(oracle_keys - set(results)):
+        results[name] = {
+            "status": "fail",
+            "detail": "no compare line emitted (local_check rc="
+                      f"{check.returncode}; crashed or exited early — "
+                      f"stderr tail: {check.stderr[-300:]!r})"}
+    try:
+        errors = json.load(open(f"{out_dir}/errors.json"))
+    except Exception:
+        errors = {}
+    for name, err in errors.items():
+        results[name] = {"status": "fail", "detail": f"verify error: {err}"}
+    con = duckdb.connect()
+    dumped = sorted(d for d in os.listdir(out_dir)
+                    if os.path.isdir(os.path.join(out_dir, d)))
+    for name in dumped:
+        if name in results:
+            continue
+        try:
+            n = con.execute(
+                f"SELECT count(*) FROM read_parquet('{out_dir}/{name}/*.parquet')"
+            ).fetchone()[0]
+            results[name] = {"status": "no-oracle",
+                             "detail": f"rows-only check: {n} rows"}
+        except Exception as e:
+            results[name] = {"status": "fail",
+                             "detail": f"no oracle and dump unreadable: {e}"}
+    return results
+
+
 def norm(v):
     if isinstance(v, float):
         if math.isnan(v):
@@ -48,7 +92,6 @@ def norm(v):
 
 
 def main(sf_dir, out_dir):
-    import os
     con = duckdb.connect()
     for t in TABLES:
         # driver fixtures are single parquet FILES; Spark-staged fixtures

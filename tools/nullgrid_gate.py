@@ -22,9 +22,10 @@ What it does:
  2. runs graft.Verify over it (ALL queries) and replays every DuckDB
     oracle via tools/local_check.py (ORDER-divergence WARN = fail, the
     driver-compare semantics),
- 3. writes CORRECTNESS_r{N}_nullgrid.json, folding in Verify's
-    errors.json so a query that THREW on NULLs (the old ingest guard
-    shape) fails loudly instead of vanishing.
+ 3. writes CORRECTNESS_r{N}_nullgrid.json through
+    local_check.account_for_suite: a query that THREW on NULLs (the old
+    ingest guard shape) or that local_check never reached fails loudly
+    instead of vanishing.
 
 Usage: python3 tools/nullgrid_gate.py <round>
 (~5 min: one sf0.001-sized Verify + compare; don't run concurrently with
@@ -39,7 +40,7 @@ import time
 
 import duckdb
 
-from local_check import parse_compare_lines
+from local_check import account_for_suite, parse_compare_lines
 
 SRC = "/root/testdata/sf0.001"
 FIXTURE = "/tmp/graft_nullgrid"
@@ -244,16 +245,12 @@ def main():
     t0 = time.time()
     chk = subprocess.run(["python3", "tools/local_check.py", FIXTURE, vout],
                          capture_output=True, text=True)
-    results = parse_compare_lines(chk.stdout)
-    # A query that threw during Verify must fail the gate, not vanish
-    # (the sf01_gate discipline).
-    try:
-        errors = json.load(open(f"{vout}/errors.json"))
-    except Exception:
-        errors = {}
-    for name, msg in errors.items():
-        results[name] = {"status": "fail", "detail": f"verify threw: {msg}"}
+    # Missing compare lines fail, Verify errors fail, unoracled dumps are
+    # recorded 'no-oracle' (local_check.account_for_suite — the same
+    # guards as sf01_gate).
+    results = account_for_suite(parse_compare_lines(chk.stdout), vout, chk)
     n_ok = sum(1 for v in results.values() if v["status"] == "ok")
+    n_no_oracle = sum(1 for v in results.values() if v["status"] == "no-oracle")
     artifact = {
         "round": rnd,
         "fixture": FIXTURE,
@@ -271,10 +268,11 @@ def main():
                  "path) the clean fixtures cannot fire"),
         "n_queries": len(results),
         "n_ok": n_ok,
+        "n_no_oracle": n_no_oracle,
         "verify_wall_s": round(verify_s, 1),
         "compare_wall_s": round(time.time() - t0, 1),
         "queries": dict(sorted(results.items())),
-        "ok": len(results) > 0 and n_ok == len(results),
+        "ok": len(results) > 0 and n_ok + n_no_oracle == len(results),
     }
     with open(out_json, "w") as f:
         json.dump(artifact, f, indent=1)

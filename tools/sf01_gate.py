@@ -15,13 +15,12 @@ Usage: python3 tools/sf01_gate.py <round>
 (Don't run concurrently with another sbt/Spark job.)
 """
 import json
-import os
 import shutil
 import subprocess
 import sys
 import time
 
-from local_check import parse_compare_lines
+from local_check import account_for_suite, parse_compare_lines
 
 
 def main():
@@ -44,49 +43,9 @@ def main():
     t1 = time.time()
     chk = subprocess.run(["python3", "tools/local_check.py", sf_dir, vout],
                          capture_output=True, text=True)
-    results = parse_compare_lines(chk.stdout)
-
-    # Guard against a vacuous pass (round-19 review finding): if
-    # local_check crashed before (or partway through) its compare loop,
-    # the missing queries must FAIL, not fall through to 'no-oracle'.
-    # Every oracle_sql.json key must have produced a compare line.
-    oracle_keys = set(json.load(open(f"{vout}/oracle_sql.json")))
-    for name in sorted(oracle_keys - set(results)):
-        results[name] = {
-            "status": "fail",
-            "detail": "no compare line emitted (local_check rc="
-                      f"{chk.returncode}; crashed or exited early — "
-                      f"stderr tail: {chk.stderr[-300:]!r})"}
-
-    # The oracle replay only covers oracle_sql.json keys. The REAL suite is
-    # everything graft.Verify touched: each query dumps a parquet dir into
-    # vout, and queries that threw land in errors.json. Fold both in so
-    # n_queries reflects the registered suite, a thrown query always fails
-    # the gate, and a registered-but-unoracled query is recorded with an
-    # explicit 'no-oracle' status (rows-only evidence) instead of silently
-    # vanishing from the artifact.
-    try:
-        errors = json.load(open(f"{vout}/errors.json"))
-    except Exception:
-        errors = {}
-    for name, err in errors.items():
-        results[name] = {"status": "fail", "detail": f"verify error: {err}"}
-    import duckdb
-    con = duckdb.connect()
-    dumped = sorted(d for d in os.listdir(vout)
-                    if os.path.isdir(os.path.join(vout, d)))
-    for name in dumped:
-        if name in results:
-            continue
-        try:
-            n = con.execute(
-                f"SELECT count(*) FROM read_parquet('{vout}/{name}/*.parquet')"
-            ).fetchone()[0]
-            results[name] = {"status": "no-oracle",
-                             "detail": f"rows-only check: {n} rows"}
-        except Exception as e:
-            results[name] = {"status": "fail",
-                             "detail": f"no oracle and dump unreadable: {e}"}
+    # Missing compare lines fail, Verify errors fail, unoracled dumps are
+    # recorded 'no-oracle' (local_check.account_for_suite).
+    results = account_for_suite(parse_compare_lines(chk.stdout), vout, chk)
 
     n_ok = sum(1 for v in results.values() if v["status"] == "ok")
     n_no_oracle = sum(1 for v in results.values() if v["status"] == "no-oracle")
