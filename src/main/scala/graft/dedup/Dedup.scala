@@ -92,7 +92,6 @@ object Dedup extends DedupPairQueries with DedupCorpusQueries {
     * one call site to a 64-bit prefix (conv of 16 hex chars caps at
     * Long.MaxValue); the shuffle key widens, nothing else changes. */
   private[dedup] def gram8Rows(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // OPTIMIZATION r21 (guide §2.4, the winnowedFpRows rewrite's sibling):
     // positional 8-gram hashes assemble ROW-LOCALLY (one transform over the
     // materialized token array, each md5 computed once per gram) instead of
@@ -247,7 +246,6 @@ object Dedup extends DedupPairQueries with DedupCorpusQueries {
     * `expr(..).as("bv")`) — the groupBy and null filter use those
     * names. */
   def bucketedPairs(postings: DataFrame, elem: Column, keys: Column*): DataFrame = {
-    graft.functions.GraftFunctions.register(postings.sparkSession)
     val p = postings.select((keys :+ elem.as("__e")): _*)
     val keyNames = p.columns.dropRight(1).toSeq
     val nonNull = p.filter(keyNames.map(col(_).isNotNull).reduce(_ && _))
@@ -352,10 +350,8 @@ object Dedup extends DedupPairQueries with DedupCorpusQueries {
     * hash bits (+1/-1), ties resolve to 1 (`>= 0`). One narrow pass via the
     * native simhash32 expression (graft.functions.SimHash32) — the exploded
     * tokens×32-bits formulation costs two wide shuffles and is kept only as
-    * the DuckDB oracle. Registration comes from GraftExtensions (Sessions);
-    * the explicit register() covers foreign sessions. */
+    * the DuckDB oracle. */
   private[dedup] def simhash(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         expr(s"simhash32(array_distinct($toks))").as("simhash"))
@@ -379,7 +375,6 @@ object Dedup extends DedupPairQueries with DedupCorpusQueries {
   /** 60-bit SimHash codes via the native simhash60 expression (15 md5 hex
     * chars per token hash — the width that supports 15-bit LSH bands). */
   private[dedup] def simhash60(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         expr(s"simhash60(array_distinct($toks))").as("simhash"))
@@ -652,7 +647,6 @@ object Dedup extends DedupPairQueries with DedupCorpusQueries {
       cellCosPairsUncached(s, d))
 
   private def cellCosPairsUncached(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val asg = graft.sim.Similarity.assignCells(s, d)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -144,85 +143,4 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** ONE table of graft's native functions — (name, class name, arity,
-  * builder) — iterated by BOTH registration paths below, so the
-  * extension-loaded cluster session and the `register()`-covered foreign
-  * session can never expose different function sets (previously two
-  * hand-maintained copies). Builders validate ARITY loudly: `exprs.head`
-  * alone would silently DROP surplus arguments (`cosine_sim(a, b, c)`
-  * computing from (a, b) — a wrong answer with no error) and throw a raw
-  * IndexOutOfBounds on missing ones. */
-private object GraftFunctionTable {
-  private def arity1(name: String, mk: Expression => Expression)
-      : Seq[Expression] => Expression = {
-    case Seq(a) => mk(a)
-    case exprs => throw new IllegalArgumentException(
-      s"function $name requires exactly 1 argument, got ${exprs.length}")
-  }
-
-  private def arity2(name: String, mk: (Expression, Expression) => Expression)
-      : Seq[Expression] => Expression = {
-    case Seq(a, b) => mk(a, b)
-    case exprs => throw new IllegalArgumentException(
-      s"function $name requires exactly 2 arguments, got ${exprs.length}")
-  }
-
-  val entries: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("cosine_sim", classOf[CosineSim].getName,
-      arity2("cosine_sim", CosineSim(_, _))),
-    ("dot_product", classOf[DotProduct].getName,
-      arity2("dot_product", DotProduct(_, _))),
-    ("simhash32", classOf[SimHash32].getName, arity1("simhash32", SimHash32)),
-    ("simhash60", classOf[SimHash60].getName, arity1("simhash60", SimHash60)),
-    ("rp_band_codes", classOf[RpBandCodes].getName,
-      arity1("rp_band_codes", RpBandCodes)),
-    ("md5_prefix48", classOf[Md5Prefix48].getName,
-      arity1("md5_prefix48", Md5Prefix48)),
-    ("collect_sorted_capped", classOf[CollectSortedCapped].getName,
-      arity2("collect_sorted_capped",
-        (e, c) => CollectSortedCapped(e, c).toAggregateExpression())),
-  )
-}
-
-/** Session registration for graft's native expressions (idempotent) — the
-  * temp-function path for sessions not built with [[GraftExtensions]].
-  * The FIRST register() on a session always createOrReplaces, so graft's
-  * implementations are guaranteed even when a foreign function already
-  * squats on one of the table's names (a skip-if-exists would silently let a
-  * user's own `cosine_sim` win in every dedup/similarity query — wrong
-  * values, no error); later calls on the same session are no-ops via a
-  * weak per-session memo, keeping the many defensive per-producer
-  * register() calls from spamming a replaced-function WARN per query
-  * build. Extension-built sessions get the SAME builders shadowed from
-  * the same table — semantically identical. */
-object GraftFunctions {
-  private val registered = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  def register(spark: SparkSession): Unit =
-    if (registered.put(spark, java.lang.Boolean.TRUE) == null)
-      GraftFunctionTable.entries.foreach { case (name, _, builder) =>
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name, builder, "built-in")
-      }
-}
-
-/** Production wiring: register graft's native expressions and the
-  * [[PresentSort]] planner rule through `SparkSessionExtensions` (builder
-  * `.withExtensions` or the `spark.sql.extensions` conf — how a cluster
-  * deployment loads them). graft.Sessions applies this to every session it
-  * builds. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    GraftFunctionTable.entries.foreach { case (name, className, builder) =>
-      e.injectFunction((
-        FunctionIdentifier(name), new ExpressionInfo(className, name), builder))
-    }
-    e.injectQueryStagePrepRule(_ => PresentSort)
-  }
 }

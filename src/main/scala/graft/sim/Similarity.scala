@@ -75,7 +75,6 @@ object Similarity extends SimilarityServeQueries with SimilarityEvalQueries {
     "NOT exists(embedding, x -> x IS NULL OR isnan(x) OR abs(x) > CAST(1e9 AS FLOAT))"
 
   private[sim] def vecs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.embeddings(s, d)
       .filter(col("embedding").isNotNull)
       .filter(expr(finiteEmbSql))

@@ -520,9 +520,6 @@ object DocsStream {
     // per-arrival hot path for the same O(sources) table). The draw
     // expression is the shared mixtureKeepPredicate, so the stream's keep
     // decision provably cannot drift from the batch sampler's.
-    // The predicate uses the native md5_prefix48 — register on the frame's
-    // session for GraftExtensions-less callers (the withSplit rule).
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .join(broadcast(rates.select(col("source"), col("n_target"), col("thresh"))),
         Seq("source"))

@@ -31,7 +31,6 @@ object EmbedStream {
     * greater cosine replaces the running best (EmbedStreamSpec pins the
     * tie case and stream≡batch on the fixture). */
   def cellExpr(s: SparkSession, cents: Seq[(Int, Seq[Double])], v: Column): Column = {
-    graft.functions.GraftFunctions.register(s)
     val centsLit = typedLit(cents.sortBy(_._1))
     val init = struct(lit(-2.0).as("best"), lit(-1).as("cid"))
     aggregate(centsLit, init, (acc, c) => {

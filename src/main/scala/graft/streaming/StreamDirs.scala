@@ -40,7 +40,7 @@ private[streaming] object StreamRuns {
   }
 }
 
-private[streaming] object StreamDirs {
+private[graft] object StreamDirs {
 
   def deleteRecursively(root: java.nio.file.Path): Unit = {
     import java.nio.file.Files

@@ -189,10 +189,6 @@ object TextStats extends TextDp with TextBpe
     * and the registered query can never disagree on membership. */
   private[graft] def withSplit(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    // The assignment hash is the native md5_prefix48 — register it on the
-    // frame's session so the transform works on sessions not built with
-    // GraftExtensions (the simhash()/dd_embed_cosine foreign-session rule).
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .withColumn("h16", expr("md5_prefix48(CAST(doc_id AS STRING)) % 65536"))
       .withColumn("split",
@@ -233,8 +229,6 @@ object TextStats extends TextDp with TextBpe
     * and stream, which is what lets DocsStreamSpec pin stream ≡ batch. */
   private[graft] def sampleByThreshold(docs: org.apache.spark.sql.DataFrame,
       rates: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    // mixtureKeepPredicate uses the native md5_prefix48 (withSplit rule).
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .join(broadcast(rates.select(col("source"), col("thresh"))), Seq("source"))
       .filter(expr(mixtureKeepPredicate))
@@ -252,7 +246,6 @@ object TextStats extends TextDp with TextBpe
   def cdcChunkRows(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val wLead = Window.partitionBy("doc_id").orderBy("pos")
     val wCum = wLead.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.documents(s, d)
@@ -323,7 +316,6 @@ object TextStats extends TextDp with TextBpe
     * post-Generate `size(tk)` is O(1) against the carried array pointer. */
   def winnowedFpRows(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // OPTIMIZATION r21 (guide §2.4): fully ROW-LOCAL winnowing — the gram
     // md5 array materializes as its own column, the 5-window minima are
     // array_min over slices, and the per-doc distinct is array_distinct —

@@ -67,7 +67,7 @@ object BpeDepthProbe {
     val synWords = if (args.length > 2) args(2).toInt else 200000
 
     // --- 1. the real fixture dictionary (one distributed pass) ----------
-    val s = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val s = graft.Sessions.local(graft.Sessions.defaultCpus)
     val dt0 = System.nanoTime()
     val dict = graft.text.TextStats.wordFreqDict(graft.Tables.documents(s, d))
     val dictSec = (System.nanoTime() - dt0) / 1e9

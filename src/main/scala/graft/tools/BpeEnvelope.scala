@@ -18,7 +18,7 @@ object BpeEnvelope {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val rounds = if (args.length > 1) args(1).toInt else 64
-    val s = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val s = graft.Sessions.local(graft.Sessions.defaultCpus)
     // Job/task counters: distinguishes an executor-side task explosion
     // (tasks grow per round) from driver-side planning cost (flat tasks,
     // growing wall) when a round's cost is not flat.

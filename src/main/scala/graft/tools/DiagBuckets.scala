@@ -18,8 +18,7 @@ object DiagBuckets {
     val d = args.headOption.getOrElse("/tmp/graft_sf1x100")
     val families = args.lift(1).map(_.split(",").toSet).getOrElse(Set("rp", "simhash", "phash"))
     val forcedBits = args.lift(2).map(_.toInt)
-    val s = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    graft.functions.GraftFunctions.register(s)
+    val s = graft.Sessions.local(graft.Sessions.defaultCpus)
 
     def census(label: String, buckets: org.apache.spark.sql.DataFrame): Unit = {
       // buckets: one row per posting with bucket-key column "k"

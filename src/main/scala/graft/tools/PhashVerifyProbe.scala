@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
 object PhashVerifyProbe {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/tmp/graft_docs512")
-    val s = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    graft.functions.GraftFunctions.register(s)
+    val s = graft.Sessions.local(graft.Sessions.defaultCpus)
     val nDocs = graft.Tables.documents(s, d).count()
     val bits = args.lift(1).map(_.toInt)
       .getOrElse(graft.dedup.Dedup.simBitsFor(nDocs))

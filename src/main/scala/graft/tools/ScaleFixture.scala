@@ -65,7 +65,7 @@ object ScaleFixture {
       println(s"[scalefixture] $out already staged")
       return
     }
-    val s = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val s = graft.Sessions.local(graft.Sessions.defaultCpus)
     def replicated(table: String) =
       s.read.parquet(s"$src/$table.parquet")
         .select(col("*"), explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))

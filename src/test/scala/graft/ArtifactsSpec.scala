@@ -17,7 +17,7 @@ class ArtifactsSpec extends AnyFunSuite {
   }
 
   test("indexParquetPath builds once per content and publishes atomically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_art1").toString
+    val dir = TestSpark.tempDir("graft_art1").toString
     writeDocs(dir, Seq((1L, "a b c"), (2L, "d e f")))
     var builds = 0
     def build = { builds += 1; Tables.documents(spark, dir).select("doc_id") }
@@ -31,7 +31,7 @@ class ArtifactsSpec extends AnyFunSuite {
   }
 
   test("an in-place dataset rewrite forces a rebuild — stale reads impossible") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_art2").toString
+    val dir = TestSpark.tempDir("graft_art2").toString
     writeDocs(dir, Seq((1L, "a b c"), (2L, "d e f")))
     var builds = 0
     def build = { builds += 1; Tables.documents(spark, dir).select("doc_id") }
@@ -45,7 +45,7 @@ class ArtifactsSpec extends AnyFunSuite {
   }
 
   test("memo keys (k-means / PQ / corpus-size discipline) track content") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_art3").toString
+    val dir = TestSpark.tempDir("graft_art3").toString
     writeDocs(dir, Seq((1L, "a b c")))
     val k1 = Artifacts.contentKey(dir, "documents")
     assert(Artifacts.contentKey(dir, "documents") == k1) // stable while unchanged
@@ -62,8 +62,8 @@ class ArtifactsSpec extends AnyFunSuite {
     // hazard: under parallel suite execution a concurrent suite's publish
     // during the window landed in this private root and was torn down with
     // it. Explicit root parameters keep the blast radius to this test.
-    val isoRoot = java.nio.file.Files.createTempDirectory("graft_art5_store").toString
-    val dir = java.nio.file.Files.createTempDirectory("graft_art5").toString
+    val isoRoot = TestSpark.tempDir("graft_art5_store").toString
+    val dir = TestSpark.tempDir("graft_art5").toString
     writeDocs(dir, Seq((1L, "a b c"), (2L, "d e f")))
     var builds = 0
     def build = { builds += 1; Tables.documents(spark, dir).select("doc_id") }
@@ -89,8 +89,8 @@ class ArtifactsSpec extends AnyFunSuite {
   }
 
   test("an artifact swept out-of-band (another JVM's janitor) self-heals on next handout") {
-    val isoRoot = java.nio.file.Files.createTempDirectory("graft_art6_store").toString
-    val dir = java.nio.file.Files.createTempDirectory("graft_art6").toString
+    val isoRoot = TestSpark.tempDir("graft_art6_store").toString
+    val dir = TestSpark.tempDir("graft_art6").toString
     writeDocs(dir, Seq((1L, "a b c"), (2L, "d e f")))
     var builds = 0
     def build = { builds += 1; Tables.documents(spark, dir).select("doc_id") }
@@ -111,8 +111,8 @@ class ArtifactsSpec extends AnyFunSuite {
   }
 
   test("a handout refreshes _SUCCESS mtime, so hot artifacts outlive the janitor horizon") {
-    val isoRoot = java.nio.file.Files.createTempDirectory("graft_art8_store").toString
-    val dir = java.nio.file.Files.createTempDirectory("graft_art8").toString
+    val isoRoot = TestSpark.tempDir("graft_art8_store").toString
+    val dir = TestSpark.tempDir("graft_art8").toString
     writeDocs(dir, Seq((1L, "a b c")))
     def build = Tables.documents(spark, dir).select("doc_id")
     val p = Artifacts.indexParquetPath(spark, "spec_touch", dir, "documents", isoRoot)(build)
@@ -130,7 +130,7 @@ class ArtifactsSpec extends AnyFunSuite {
   }
 
   test("gc ages writer temps by their NEWEST inner file, sparing a live build") {
-    val isoRoot = java.nio.file.Files.createTempDirectory("graft_art9_store").toString
+    val isoRoot = TestSpark.tempDir("graft_art9_store").toString
     val old = System.currentTimeMillis() - 3600 * 1000L
     // live build: dir mtime is old (dirs keep their creation mtime while
     // Spark stages output under _temporary) but an inner file is FRESH
@@ -157,7 +157,7 @@ class ArtifactsSpec extends AnyFunSuite {
   }
 
   test("tableSig walks nested layouts: a leaf rewrite under a partition dir changes the key") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_art10").toString
+    val dir = TestSpark.tempDir("graft_art10").toString
     val leaf = new java.io.File(s"$dir/t.parquet/part=1/f1.parquet")
     leaf.getParentFile.mkdirs()
     java.nio.file.Files.write(leaf.toPath, "aaaa".getBytes)
@@ -173,9 +173,9 @@ class ArtifactsSpec extends AnyFunSuite {
   test("two roots with one content key never serve each other's paths") {
     // The fast-path map is keyed by (root, name, sig): a second store root
     // must publish its own copy, not hand out the first root's path.
-    val rootA = java.nio.file.Files.createTempDirectory("graft_art7a").toString
-    val rootB = java.nio.file.Files.createTempDirectory("graft_art7b").toString
-    val dir = java.nio.file.Files.createTempDirectory("graft_art7").toString
+    val rootA = TestSpark.tempDir("graft_art7a").toString
+    val rootB = TestSpark.tempDir("graft_art7b").toString
+    val dir = TestSpark.tempDir("graft_art7").toString
     writeDocs(dir, Seq((1L, "a b c")))
     def build = Tables.documents(spark, dir).select("doc_id")
     val pA = Artifacts.indexParquetPath(spark, "spec_roots", dir, "documents", rootA)(build)
@@ -185,7 +185,7 @@ class ArtifactsSpec extends AnyFunSuite {
   }
 
   test("a consumer (winnow fp index) rebuilds over the rewritten corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_art4").toString
+    val dir = TestSpark.tempDir("graft_art4").toString
     val t1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     val t2 = "one two three four five six seven eight nine ten eleven twelve"
     writeDocs(dir, Seq((1L, t1), (2L, t1)))

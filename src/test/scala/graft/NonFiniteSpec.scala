@@ -18,7 +18,7 @@ class NonFiniteSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_nonfinite").toString
+    val d = TestSpark.tempDir("graft_nonfinite").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val eschema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", LongType),

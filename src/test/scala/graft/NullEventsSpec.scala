@@ -41,7 +41,7 @@ class NullEventsSpec extends AnyFunSuite {
   private def mins(m: Long): Long = m * 60L * 1000000000L
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_nullev").toString
+    val d = TestSpark.tempDir("graft_nullev").toString
     writeEvents(d, Seq(
       (1L, Long.box(T0), Long.box(7L), "view", Double.box(1.0), """{"k": "free"}"""),
       (2L, Long.box(T0 + mins(10)), Long.box(7L), "purchase", Double.box(2.0), """{"k": "free"}"""),
@@ -131,7 +131,7 @@ class NullEventsSpec extends AnyFunSuite {
   }
 
   test("s1_scan_events_json: an all-NULL-ts corpus still fails loudly as drift") {
-    val d2 = java.nio.file.Files.createTempDirectory("graft_nullev_drift").toString
+    val d2 = TestSpark.tempDir("graft_nullev_drift").toString
     writeEvents(d2, Seq(
       (1L, null, Long.box(7L), "view", Double.box(1.0), """{"k": "x"}"""),
       (2L, null, Long.box(8L), "view", Double.box(2.0), """{"k": "y"}""")))

@@ -18,7 +18,7 @@ class NullRelationalSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_nullrel_spec").toString
+    val d = TestSpark.tempDir("graft_nullrel_spec").toString
     val oschema = StructType(Seq(
       StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
       StructField("o_orderstatus", StringType), StructField("o_totalprice", DoubleType),

@@ -16,7 +16,7 @@ class NullTextSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_nulltext").toString
+    val d = TestSpark.tempDir("graft_nulltext").toString
     val rows = Seq[(java.lang.Long, String, String, String, java.lang.Long)](
       (1L, "the quick brown fox jumps over the lazy dog again and again", "en", "src0", 60L),
       (2L, "a completely different second document with many plain words here", "en", "src0", 66L),
@@ -110,7 +110,7 @@ class NullTextSpec extends AnyFunSuite {
   }
 
   test("dd_soft_dedup: two NULL-text docs are NOT mutual duplicates") {
-    val d2 = java.nio.file.Files.createTempDirectory("graft_nulltext2").toString
+    val d2 = TestSpark.tempDir("graft_nulltext2").toString
     val rows = Seq[(java.lang.Long, String)](
       (1L, "one real document with several plain words"),
       (98L, null), (99L, null)).map { case (id, t) =>

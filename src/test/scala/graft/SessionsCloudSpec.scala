@@ -139,7 +139,7 @@ class SessionsCloudSpec extends AnyFunSuite {
   }
 
   test("the reference's dwh.cfg shape wires end to end through resolveCfg") {
-    val tmp = java.nio.file.Files.createTempFile("dwh", ".cfg")
+    val tmp = TestSpark.tempDir("dwh").resolve("dwh.cfg")
     java.nio.file.Files.write(tmp,
       """[AWS]
         |KEY=AKIDEXAMPLE

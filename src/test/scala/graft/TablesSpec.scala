@@ -83,7 +83,7 @@ class TablesSpec extends AnyFunSuite {
     // Tables.events to normalize each to the same values — this is the
     // "flip a dtype and the spec must notice" check, run in the positive
     // direction (each supported shape converges to identical nanos).
-    val tmp = java.nio.file.Files.createTempDirectory("tables-spec-").toString
+    val tmp = TestSpark.tempDir("tables-spec-").toString
     val base = Tables.events(s, d).selectExpr("event_id", "ts").limit(50)
     base.write.mode("overwrite").parquet(s"$tmp/long/events.parquet")
     base.selectExpr("event_id", "timestamp_micros(ts div 1000) AS ts")

@@ -84,7 +84,7 @@ class DedupSpec extends AnyFunSuite {
     assert(sc.getCheckpointDir.isEmpty, "precondition: no checkpoint dir configured")
     // local-checkpoint baseline FIRST, while no dir is configured
     val baseline = run("dd_dup_clusters").collect().toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = TestSpark.tempDir("graft_ckpt").toString
     sc.setCheckpointDir(dir)
     try {
       val reliable = run("dd_dup_clusters").collect().toSeq
@@ -238,7 +238,7 @@ class DedupSpec extends AnyFunSuite {
     // operator touches, so agreement proves the index file carries all the
     // corpus knowledge the screen needs.
     val registered = run("dd_incremental").collect().toSeq
-    val batchDir = java.nio.file.Files.createTempDirectory("graft_batch_only")
+    val batchDir = TestSpark.tempDir("graft_batch_only")
     graft.Tables.documents(spark, sf).filter(expr("doc_id % 5 = 0"))
       .write.mode("overwrite").parquet(batchDir.resolve("documents.parquet").toString)
     val batchFps = graft.text.TextStats.winnowedFpRows(spark, batchDir.toString)
@@ -257,7 +257,7 @@ class DedupSpec extends AnyFunSuite {
     val s = spark; import s.implicits._
     // srcA: "x y" (duplicated by srcB), "u v" (duplicated INSIDE srcA), "u v", "solo a"
     // srcB: "x y" (cross-source dup), "solo b"
-    val dir = java.nio.file.Files.createTempDirectory("srcdup_docs").toString
+    val dir = TestSpark.tempDir("srcdup_docs").toString
     Seq(
       (1L, "x y", "en", "srcA", 3L),
       (2L, "u v", "en", "srcA", 3L),
@@ -286,7 +286,7 @@ class DedupSpec extends AnyFunSuite {
     val big = (0 until 100).map(i => s"w$i").mkString(" ")
     val slice = (10 until 20).map(i => s"w$i").mkString(" ")
     val other = (0 until 20).map(i => s"z$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("cont_docs").toString
+    val dir = TestSpark.tempDir("cont_docs").toString
     Seq(
       (1L, big, "en", "srcA", big.length.toLong),
       (2L, slice, "en", "srcB", slice.length.toLong),
@@ -357,7 +357,7 @@ class DedupSpec extends AnyFunSuite {
     // Planted: doc B repeats doc A's only span; only B's copy is removed,
     // and A keeps first-occurrence priority by doc_id order.
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("line_dedup").toString
+    val dir = TestSpark.tempDir("line_dedup").toString
     Seq((900000L, "alpha beta gamma delta", "en", "s0", 22L),
         (900001L, "alpha beta gamma other words here", "en", "s0", 33L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -370,7 +370,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("dd_line_dedup_apply: reconstruction keeps first occurrences in span order") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("line_apply").toString
+    val dir = TestSpark.tempDir("line_apply").toString
     // A: two spans, both novel. B: repeats A's first span + one novel span
     // (kept span must survive IN ORDER after the removed one is dropped).
     // C: under one span width -> empty reconstruction, md5('') pinned.
@@ -435,7 +435,7 @@ class DedupSpec extends AnyFunSuite {
     // jaccard 10/11).
     val s = spark; import s.implicits._
     val w = (1 to 12).map(i => s"word$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("funnel_plant").toString
+    val dir = TestSpark.tempDir("funnel_plant").toString
     Seq((1L, ("the " * 11).trim, "en", "s0", 43L),
         (2L, w, "en", "s0", w.length.toLong),
         (3L, w, "en", "s0", w.length.toLong),
@@ -535,7 +535,7 @@ class DedupSpec extends AnyFunSuite {
     // (b, r, 0, 0, 0, 0) row. An empty corpus is the degenerate case where
     // all three arms are empty — and it additionally proves the whole
     // signature/pair-graph artifact chain builds cleanly over zero docs.
-    val dir = java.nio.file.Files.createTempDirectory("band_empty").toString
+    val dir = TestSpark.tempDir("band_empty").toString
     Seq.empty[(Long, String, String, String, Long)]
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -559,13 +559,12 @@ class DedupSpec extends AnyFunSuite {
       (i, s"w${i % 37} x${(i * 7) % 41} y${(i * 13) % 43} z${(i * 29) % 47}",
         s"src${i % 3}"))
       .toDF("doc_id", "text", "source")
-    val dir = java.nio.file.Files.createTempDirectory("graft_simshape").toString
+    val dir = TestSpark.tempDir("graft_simshape").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     assert(Dedup.simBitsFor(n.toLong) == 20, "17k docs must select the 20-bit regime")
     val got = Dedup.simhashPairGraph(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // independent reference from the (separately spec-pinned) code table
-    graft.functions.GraftFunctions.register(spark)
     val codes = graft.Tables.documents(spark, dir)
       .selectExpr("doc_id", "simhash60(array_distinct(split(trim(text), ' +'))) AS c")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -599,7 +598,6 @@ class DedupSpec extends AnyFunSuite {
     // must appear in the graph; (b) the whole graph must equal an
     // independent JVM banding of the (separately spec-pinned) code table.
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // candidate search: base doc + one-token variants; a one-token swap
     // over 9 tokens flips ~7 of 60 bits in expectation, and ~(1/2)^h of
     // those land entirely inside one band — deterministic given the fixed
@@ -625,7 +623,7 @@ class DedupSpec extends AnyFunSuite {
         (i, s"w${i % 37} x${(i * 7) % 41} y${(i * 13) % 43} z${(i * 29) % 47} u$i", "src0")) ++
       Seq((9001L, baseText, "src1"), (9002L, plantedText, "src1")))
       .toDF("doc_id", "text", "source")
-    val dir = java.nio.file.Files.createTempDirectory("graft_simtop").toString
+    val dir = TestSpark.tempDir("graft_simtop").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Dedup.simhashBandedPairs(spark, dir, 30).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet

@@ -12,7 +12,7 @@ import graft.TestSpark
   * the corpus; tokenizer vocab trained on the train split only). */
 class CorpusPipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  lazy val out = java.nio.file.Files.createTempDirectory("corpus_pipe").toString
+  lazy val out = TestSpark.tempDir("corpus_pipe").toString
   // Fixed stand-in for the per-release SECRET seed (main draws one from
   // SecureRandom) so the spec can replay the data card deterministically.
   val specSeed = "spec-release-seed:"
@@ -94,13 +94,13 @@ class CorpusPipelineSpec extends AnyFunSuite {
     // — the exact-dup keeper keeps only that doc, the eval-source
     // exclusion then empties the corpus by construction.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("corpus_empty_in").toString
+    val dir = TestSpark.tempDir("corpus_empty_in").toString
     val text = "quick brown foxes jump over lazy dogs beside seven silver rivers"
     (0L to 9L).map(i => (i, text, "en",
         if (i == 0L) RunCorpusPipeline.EvalSource else "src1", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val outE = java.nio.file.Files.createTempDirectory("corpus_empty_out").toString
+    val outE = TestSpark.tempDir("corpus_empty_out").toString
     val c = RunCorpusPipeline.run(spark, dir, outE, specSeed)
     assert(c.nInput == 10 && c.nClean == 1)
     assert(c.nSampled == 0 && c.nPacked == 0 && c.nMerges == 0 &&

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftConfig
+import graft.{GraftConfig, TestSpark}
 
 class RunEtlConfigSpec extends AnyFunSuite {
 
@@ -65,7 +65,7 @@ class RunEtlConfigSpec extends AnyFunSuite {
   }
 
   test("RunEtl resolution: config supplies defaults, argv overrides") {
-    val path = Files.createTempFile("dwh", ".cfg")
+    val path = TestSpark.tempDir("dwh").resolve("dwh.cfg")
     Files.writeString(path, dwhCfg)
     // env pinned empty: these assertions exercise the config/argv legs and
     // must not flip when the harness itself exports SPARK_GRAFT_CPUS.

@@ -23,7 +23,7 @@ class StarCatalogSpec extends AnyFunSuite {
   }
 
   test("end-to-end ETL: pipeline writes five tables and register serves them") {
-    val out = java.nio.file.Files.createTempDirectory("etl_out").toString
+    val out = TestSpark.tempDir("etl_out").toString
     StarCatalog.reset(spark)
     val results = StarPipeline.run(spark, sf, out)
     assert(results.map(_.name) ==

@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -11,7 +9,7 @@ class StarPipelineSpec extends AnyFunSuite {
   val sf = TestSpark.sf
 
   test("pipeline materializes all five star tables, idempotently") {
-    val out = Files.createTempDirectory("star").toString
+    val out = TestSpark.tempDir("star").toString
     val r1 = StarPipeline.run(spark, sf, out)
     assert(r1.map(_.name) == Seq("songplays", "users", "songs", "artists", "time"))
     assert(r1.forall(_.rows > 0))

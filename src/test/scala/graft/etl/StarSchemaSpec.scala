@@ -22,7 +22,7 @@ class StarSchemaSpec extends AnyFunSuite {
   test("typed tables collect rows the NULL contract keeps") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_star_nulls").toString
+    val dir = TestSpark.tempDir("graft_star_nulls").toString
     def write(table: String, schema: StructType, rows: Seq[Row]): Unit =
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
         .write.mode("overwrite").parquet(s"$dir/$table.parquet")

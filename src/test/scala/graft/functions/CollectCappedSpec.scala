@@ -20,7 +20,6 @@ class CollectCappedSpec extends AnyFunSuite {
   }
 
   test("scalar elements: capped aggregate == two-pass HAVING form, bucket by bucket") {
-    graft.functions.GraftFunctions.register(spark)
     val p = postings(5000, 3)
     val cap = 40
     val one = p.groupBy("bk")
@@ -36,7 +35,6 @@ class CollectCappedSpec extends AnyFunSuite {
   }
 
   test("struct elements: ordering matches sort_array's field-by-field order") {
-    graft.functions.GraftFunctions.register(spark)
     val p = postings(3000, 5)
       .select(col("bk"), struct(col("doc_id"), col("payload")).as("e"))
     val cap = 50
@@ -51,7 +49,6 @@ class CollectCappedSpec extends AnyFunSuite {
   }
 
   test("cap boundary: == cap kept complete, cap+1 dropped; nulls skipped") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rows = (1 to 3).map(i => ("at", Some(i.toLong))) ++
       (1 to 4).map(i => ("over", Some(i.toLong))) ++
@@ -71,7 +68,6 @@ class CollectCappedSpec extends AnyFunSuite {
     // band postings frame runs in. The fallback path drives update() on
     // key-sorted runs instead of map probes; the capped aggregate must not
     // care. 997 keys forces the fallback on every partition.
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val p = (0 until 60000).map { i =>
       val k = if (i % 40 == 0) "hot" else s"k${i % 997}"
@@ -97,7 +93,6 @@ class CollectCappedSpec extends AnyFunSuite {
     // result IS NULL iff the bucket's true size exceeds the cap, with NO
     // empty-bucket exception, so the two-pass equivalence holds bucket by
     // bucket including buckets the size filter KEEPS with an empty list.
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rows = Seq(("allnull", Option.empty[Long]), ("allnull", Option.empty[Long]),
       ("mixed", Some(7L)), ("mixed", Option.empty[Long]))
@@ -127,7 +122,6 @@ class CollectCappedSpec extends AnyFunSuite {
     // any arrival-order leak visible: a stable-sort-of-partials
     // implementation would order duplicate keys by partition, and the
     // cross-partitioning comparison below would catch it.
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rows = (0 until 4000).map { i =>
       val k = if (i % 11 == 0) "hot" else s"k${i % 97}"
@@ -197,7 +191,6 @@ class CollectCappedSpec extends AnyFunSuite {
   }
 
   test("arity and cap validation are loud") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(("a", 1L)).toDF("bk", "v")
     intercept[Exception] {

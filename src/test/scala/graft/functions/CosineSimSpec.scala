@@ -10,7 +10,6 @@ class CosineSimSpec extends AnyFunSuite {
   val sf = TestSpark.sf
 
   test("cosine_sim is bit-identical to the left-fold HOF formula on fixture vectors") {
-    GraftFunctions.register(spark)
     val e = graft.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val l = e.select(col("vec_id").as("a"), col("v").as("va"))
@@ -27,7 +26,6 @@ class CosineSimSpec extends AnyFunSuite {
   }
 
   test("cosine_sim basics: self-similarity 1, orthogonal 0, opposite -1") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1.0, 2.0, 3.0), Array(1.0, 2.0, 3.0)),
@@ -38,7 +36,6 @@ class CosineSimSpec extends AnyFunSuite {
   }
 
   test("dot_product is bit-identical to the left-fold HOF dot on fixture vectors") {
-    GraftFunctions.register(spark)
     val e = graft.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val l = e.select(col("vec_id").as("a"), col("v").as("va"))
@@ -60,7 +57,6 @@ class CosineSimSpec extends AnyFunSuite {
   }
 
   test("dot_product basics: orthogonal 0, scaling linear, shorter vector truncates") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1.0, 0.0), Array(0.0, 5.0)),

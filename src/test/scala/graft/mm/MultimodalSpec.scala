@@ -68,7 +68,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(viaSeam.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       viaExpr.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     // end-to-end on the same fixture: docs 1 and 2 must pair, 3 must not
-    val dir = java.nio.file.Files.createTempDirectory("phash_mb").toString
+    val dir = TestSpark.tempDir("phash_mb").toString
     docs.select(col("doc_id"), col("text"), lit("de").as("lang"),
         lit("s0").as("source"), length(col("text")).cast("long").as("n_chars"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -84,7 +84,7 @@ class MultimodalSpec extends AnyFunSuite {
     // doc 3 alternates two very different byte classes -> different code.
     val a = Seq.tabulate(120)(i => ('a' + i % 26).toChar).mkString
     val c = Seq.tabulate(120)(i => if (i % 2 == 0) ' ' else '~').mkString
-    val dir = java.nio.file.Files.createTempDirectory("phash_docs").toString
+    val dir = TestSpark.tempDir("phash_docs").toString
     Seq((1L, a, "en", "s0", 120L), (2L, a, "en", "s0", 120L), (3L, c, "en", "s0", 120L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -113,7 +113,7 @@ class MultimodalSpec extends AnyFunSuite {
     val base = (0 until 60).map(k => (100L + k, mk(k), "en", "s0", 120L))
     val a = mk(7)
     val docs = base ++ Seq((9001L, a, "en", "s1", 120L), (9002L, a, "en", "s1", 120L))
-    val dir = java.nio.file.Files.createTempDirectory("phash_top").toString
+    val dir = TestSpark.tempDir("phash_top").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Multimodal.phashBandedPairs(spark, dir, 30).collect()
@@ -176,7 +176,7 @@ class MultimodalSpec extends AnyFunSuite {
     // two payloads share a second frame, the pair output must be empty —
     // the cap property the shared bucket expansion guarantees for frames.
     val black = "B" * 32
-    val dir = java.nio.file.Files.createTempDirectory("video_hot").toString
+    val dir = TestSpark.tempDir("video_hot").toString
     (0 until 1200).map { i =>
       val uniq = (0 until 15).map(j => f"u${i}%04d_${j}%02d".padTo(10, 'x')).mkString("")
       (i.toLong, black + uniq, "en", "s0", (32 + uniq.length).toLong)
@@ -196,7 +196,7 @@ class MultimodalSpec extends AnyFunSuite {
     val base = (0 until 16).map(i => ('a' + i % 26).toChar.toString * 32).mkString
     val edited = "Z" * 32 + base.drop(32)
     val other = (0 until 16).map(i => ('A' + (i * 7) % 26).toChar.toString * 32).mkString
-    val dir = java.nio.file.Files.createTempDirectory("video_docs").toString
+    val dir = TestSpark.tempDir("video_docs").toString
     Seq((1L, base, "en", "s0", 512L), (2L, edited, "en", "s0", 512L),
         (3L, other, "en", "s0", 512L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -13,7 +13,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // The fixture's sources are uniform (zero flattening signal), so plant
     // a skewed corpus: 400/100/25 docs -> sqrt weights 20/10/5, every share
     // and boost an exact integer the assertions can state literally.
-    val dir = java.nio.file.Files.createTempDirectory("temp_sample_docs").toString
+    val dir = TestSpark.tempDir("temp_sample_docs").toString
     val docs = (0 until 400).map(i => (i.toLong, "a b c", "en", "srcA", 5L)) ++
       (0 until 100).map(i => (400L + i, "a b c", "en", "srcB", 5L)) ++
       (0 until 25).map(i => (500L + i, "a b c", "en", "srcC", 5L))
@@ -158,7 +158,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // (1940 s) exceeds the 1800 s threshold, so a second session starts.
     // user 2: a lone event. ts is epoch-NANOS in the fixture schema.
     def ns(ms: Long) = ms * 1000000L
-    val dir = java.nio.file.Files.createTempDirectory("sess_events").toString
+    val dir = TestSpark.tempDir("sess_events").toString
     Seq(
       (1L, ns(0L), 1L, "view", 0.0),
       (2L, ns(60000L), 1L, "view", 0.0),
@@ -200,7 +200,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // day 0: 3xA 1xB; day 1: 1xA 3xB. Global mix: 50/50. Per-day TV =
     // |750000-500000| + |250000-500000| = 500000 micro. ts in epoch-nanos.
     def ns(day: Long, i: Long) = (day * 86400000L + i) * 1000000L
-    val dir = java.nio.file.Files.createTempDirectory("drift_events").toString
+    val dir = TestSpark.tempDir("drift_events").toString
     val rows = Seq.tabulate(3)(i => (i.toLong, ns(0, i), 1L, "A", 0.0)) ++
       Seq((3L, ns(0, 9), 1L, "B", 0.0), (4L, ns(1, 0), 1L, "A", 0.0)) ++
       Seq.tabulate(3)(i => (5L + i, ns(1, i + 1), 1L, "B", 0.0))
@@ -236,7 +236,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // days 0..9 carry 10 events each, day 10 carries 100: mean 18.2,
     // sigma 25.9 -> only day 10 exceeds the 2-sigma gate.
     def ns(day: Long, i: Long) = (day * 86400000L + i) * 1000000L
-    val dir = java.nio.file.Files.createTempDirectory("anom_events").toString
+    val dir = TestSpark.tempDir("anom_events").toString
     val rows = (for (day <- 0L until 10L; i <- 0L until 10L)
       yield (day * 100 + i, ns(day, i), 1L, "A", 0.0)) ++
       (0L until 100L).map(i => (1000L + i, ns(10, i), 1L, "A", 0.0))
@@ -334,7 +334,7 @@ class AnalyticsSpec extends AnyFunSuite {
   test("an_backfill_plan: planted day holes are counted; the complete fixture plans nothing") {
     import spark.implicits._
     def ns(day: Long, i: Long) = (day * 86400000L + i) * 1000000L
-    val dir = java.nio.file.Files.createTempDirectory("backfill_events").toString
+    val dir = TestSpark.tempDir("backfill_events").toString
     // type A covers days 0..9; type B skips days 3 and 7
     val rows = (for (day <- 0L until 10L) yield (day, ns(day, 0), 1L, "A", 0.0)) ++
       (for (day <- 0L until 10L if day != 3 && day != 7)
@@ -374,7 +374,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // sub-k stratum: a 3-doc source must deliver ALL 3 rows with dense
     // ranks (every fixture stratum has >= 10 docs, so plant one)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("fixed_sample_docs").toString
+    val dir = TestSpark.tempDir("fixed_sample_docs").toString
     ((0 until 3).map(i => (i.toLong, "a b", "en", "tiny", 3L)) ++
       (0 until 40).map(i => (100L + i, "a b", "en", "big", 3L)))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -407,7 +407,7 @@ class AnalyticsSpec extends AnyFunSuite {
         .substring(0, 15), 16) % 100 < 50) "A" else "B"
     val aUsers = (1L to 4000L).filter(arm(_) == "A").take(60)
     val bUsers = (1L to 4000L).filter(arm(_) == "B").take(3)
-    val dir = java.nio.file.Files.createTempDirectory("srm_events").toString
+    val dir = TestSpark.tempDir("srm_events").toString
     (aUsers ++ bUsers).zipWithIndex
       .map { case (u, i) => (i.toLong, (i.toLong + 1) * 1000000000L, u, "click", 0.0) }
       .toDF("event_id", "ts", "user_id", "event_type", "value")

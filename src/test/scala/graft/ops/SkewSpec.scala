@@ -13,7 +13,7 @@ class SkewSpec extends AnyFunSuite {
     df.write.format("noop").mode("overwrite").save()
 
   test("MaxBucket keeps an adversarial 10^4-copy hot corpus bounded through the REAL queries") {
-    val dir = java.nio.file.Files.createTempDirectory("hot_corpus").toString
+    val dir = TestSpark.tempDir("hot_corpus").toString
     StressFixtures.stageHotCorpus(spark, dir, nHot = 10000)
     val b = StressFixtures.PlantBase
     // n-gram Jaccard: every hot-shingle bucket (10^4 docs) is dropped by the

@@ -22,7 +22,7 @@ class NullEmbeddingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_nullembed").toString
+    val d = TestSpark.tempDir("graft_nullembed").toString
     val rnd = new scala.util.Random(11)
     val real = (0L until 9L).map(i =>
       (i, Array.fill(8)(rnd.nextFloat() - 0.5f), (i % 3).toInt))

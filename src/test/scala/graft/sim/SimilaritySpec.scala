@@ -37,7 +37,7 @@ class SimilaritySpec extends AnyFunSuite {
     // identical vectors agree on every sign bit, so they share ALL bands:
     // recall on true duplicates is 1 by construction. Planted via a copy of
     // vec 0 staged into a temp corpus.
-    val dir = java.nio.file.Files.createTempDirectory("rp_dup").toString
+    val dir = TestSpark.tempDir("rp_dup").toString
     val dup = graft.Tables.embeddings(spark, sf)
     dup.unionAll(dup.filter(col("vec_id") === 0)
         .select(lit(900000L).as("vec_id"), col("embedding"), col("label")))
@@ -163,7 +163,7 @@ class SimilaritySpec extends AnyFunSuite {
     // (np, 0, 0, NULL) row. The query sample is vec_id < 8, so a corpus
     // whose ids all sit above 8 trains the index normally (K=5 centroids
     // from 20 vectors) but scores nothing.
-    val dir = java.nio.file.Files.createTempDirectory("sweep_nosample").toString
+    val dir = TestSpark.tempDir("sweep_nosample").toString
     graft.Tables.embeddings(spark, sf)
       .filter(col("vec_id") < 20)
       .select((col("vec_id") + 100L).as("vec_id"), col("embedding"), col("label"))
@@ -393,7 +393,7 @@ class SimilaritySpec extends AnyFunSuite {
     // exclusion in both paths is what keeps them equivalent. Planted via a
     // temp corpus with an all-zero candidate (vec 9; queries are vec_id<8).
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-zeronorm").toString
+    val tmp = TestSpark.tempDir("graft-zeronorm").toString
     val rnd = new scala.util.Random(7)
     val rows: Seq[(Long, Array[Float], Int)] =
       (0L until 9L).map(i => (i, Array.fill(8)(rnd.nextFloat() - 0.5f), (i % 3).toInt)) :+
@@ -447,7 +447,6 @@ class SimilaritySpec extends AnyFunSuite {
     // into 8 16-bit bands (bits=16 regime, N > 16384). Pin the SQL
     // transform/aggregate regrouping against an independent JVM regroup of
     // the SAME collected codes: band gi = code[2gi] | code[2gi+1] << 8.
-    graft.functions.GraftFunctions.register(spark)
     val codesDf = graft.Tables.embeddings(spark, sf)
       .selectExpr("vec_id",
         "rp_band_codes(transform(CAST(embedding AS ARRAY<DOUBLE>), " +
@@ -483,7 +482,6 @@ class SimilaritySpec extends AnyFunSuite {
     // cos 0.95 — so the deterministic floor is what a spec can pin; the
     // banding itself agreeing with the JVM reference covers "survives iff
     // the regrouped codes collide").
-    graft.functions.GraftFunctions.register(spark)
     val codesDf = graft.Tables.embeddings(spark, sf)
       .selectExpr("vec_id",
         "rp_band_codes(transform(CAST(embedding AS ARRAY<DOUBLE>), " +

@@ -11,7 +11,7 @@ class IngestSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def tmpJson(name: String, lines: Seq[String]): String = {
-    val dir = Files.createTempDirectory("ingest").toString
+    val dir = TestSpark.tempDir("ingest").toString
     Files.write(java.nio.file.Paths.get(s"$dir/$name"),
       lines.mkString("\n").getBytes("UTF-8"))
     s"$dir/$name"

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +12,7 @@ class LayoutPruningSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("filter on the partition column prunes partitions at the scan") {
-    val out = Files.createTempDirectory("part").toString + "/orders_by_year"
+    val out = TestSpark.tempDir("part").toString + "/orders_by_year"
     val orders = graft.Tables.orders(spark, TestSpark.sf)
       .withColumn("o_year", year(col("o_orderdate")))
     Layout.writePartitioned(orders, out, "o_year")

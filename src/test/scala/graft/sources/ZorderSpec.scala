@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,7 +25,7 @@ class ZorderSpec extends AnyFunSuite {
   }
 
   test("partitioning by z-bucket prunes BOTH dimensions of a box predicate") {
-    val out = Files.createTempDirectory("zorder").toString + "/pts"
+    val out = TestSpark.tempDir("zorder").toString + "/pts"
     // bucket = top 8 z-bits = the 16x16 quadtree cell: equivalently the
     // interleave of the two 4-bit cell coordinates
     val pts = grid.withColumn("zbucket", expr("zval >> 8"))

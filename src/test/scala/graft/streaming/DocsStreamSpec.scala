@@ -12,7 +12,7 @@ class DocsStreamSpec extends AnyFunSuite {
   test("streaming exact dedup equals batch dd_exact fingerprint groups (multi-batch)") {
     // Stage the fixture as two files split by doc_id so duplicate texts can
     // span the micro-batch boundary; maxFilesPerTrigger=1 forces two batches.
-    val dir = java.nio.file.Files.createTempDirectory("docs_dedup").toString
+    val dir = TestSpark.tempDir("docs_dedup").toString
     val docs = graft.Tables.documents(spark, sf)
     val mid = docs.selectExpr("percentile_approx(doc_id, 0.5)").head.getLong(0)
     def stage(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
@@ -40,7 +40,7 @@ class DocsStreamSpec extends AnyFunSuite {
   }
 
   test("checkpointed parquet-sink dedup resumes across separate runs (incremental ingestion)") {
-    val land = java.nio.file.Files.createTempDirectory("docs_land").toString
+    val land = TestSpark.tempDir("docs_land").toString
     val out = s"$land/out"
     val ckpt = s"$land/ckpt"
     val src = s"$land/src"
@@ -76,7 +76,7 @@ class DocsStreamSpec extends AnyFunSuite {
     // The stream sees ONLY a landing dir of new-batch docs plus the index
     // parquet — the old corpus is absent from every streaming input — and
     // must produce the batch st_incremental_dedup verdicts exactly.
-    val land = java.nio.file.Files.createTempDirectory("docs_screen").toString
+    val land = TestSpark.tempDir("docs_screen").toString
     graft.Tables.documents(spark, sf).filter(expr("doc_id % 5 = 0"))
       .write.mode("overwrite").parquet(s"$land/arrivals")
     val idxPath = graft.dedup.Dedup.winnowFpIndexPath(spark, sf)
@@ -97,7 +97,7 @@ class DocsStreamSpec extends AnyFunSuite {
     // Same contract as the winnow screen: the stream sees ONLY the arrivals
     // dir plus the frame index parquet, and must produce the batch
     // st_media_dedup verdicts exactly.
-    val land = java.nio.file.Files.createTempDirectory("media_screen").toString
+    val land = TestSpark.tempDir("media_screen").toString
     graft.Tables.documents(spark, sf).filter(expr("doc_id % 5 = 0"))
       .write.mode("overwrite").parquet(s"$land/arrivals")
     val idxPath = graft.mm.Multimodal.frameFpIndexPath(spark, sf)
@@ -117,7 +117,7 @@ class DocsStreamSpec extends AnyFunSuite {
       .filter(expr("doc_id % 5 <> 0 AND length(text) >= 512"))
       .orderBy("doc_id").select("text").head.getString(0)
     val remux = "Z" * 32 + donor.drop(32)
-    val dir2 = java.nio.file.Files.createTempDirectory("media_remux").toString
+    val dir2 = TestSpark.tempDir("media_remux").toString
     Seq((990000L, remux, "en", "s0", remux.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir2/arrivals")
@@ -134,7 +134,7 @@ class DocsStreamSpec extends AnyFunSuite {
     // EXACTLY one verdict per arrival — offsets must skip screened files,
     // re-listing must pick up the new ones — matching the batch
     // st_incremental_dedup verdicts for the same docs.
-    val land = java.nio.file.Files.createTempDirectory("docs_screen_ckpt").toString
+    val land = TestSpark.tempDir("docs_screen_ckpt").toString
     val (src, out, ckpt) = (s"$land/src", s"$land/out", s"$land/ckpt")
     new java.io.File(src).mkdirs()
     val arrivals = graft.Tables.documents(spark, sf).filter(expr("doc_id % 5 = 0"))
@@ -178,7 +178,7 @@ class DocsStreamSpec extends AnyFunSuite {
     // function composes with it: two waves, restart between them with
     // maxFilesPerTrigger=1, exactly one verdict per arrival, equal to the
     // batch st_media_dedup rows.
-    val land = java.nio.file.Files.createTempDirectory("media_ckpt").toString
+    val land = TestSpark.tempDir("media_ckpt").toString
     val (src, out, ckpt) = (s"$land/src", s"$land/out", s"$land/ckpt")
     new java.io.File(src).mkdirs()
     val arrivals = graft.Tables.documents(spark, sf).filter(expr("doc_id % 5 = 0"))
@@ -211,7 +211,7 @@ class DocsStreamSpec extends AnyFunSuite {
   }
 
   test("streaming quality gate equals the registered batch variant") {
-    val land = java.nio.file.Files.createTempDirectory("docs_gate").toString
+    val land = TestSpark.tempDir("docs_gate").toString
     graft.Tables.documents(spark, sf)
       .write.mode("overwrite").parquet(s"$land/arrivals")
     val streamed = DocsStream.runQualityGateStream(
@@ -228,7 +228,7 @@ class DocsStreamSpec extends AnyFunSuite {
   }
 
   test("streaming PII gate equals the registered batch variant; rates restate the planted rule") {
-    val land = java.nio.file.Files.createTempDirectory("docs_pii").toString
+    val land = TestSpark.tempDir("docs_pii").toString
     graft.Tables.documents(spark, sf)
       .write.mode("overwrite").parquet(s"$land/arrivals")
     val streamed = DocsStream.runPiiGateStream(
@@ -254,7 +254,7 @@ class DocsStreamSpec extends AnyFunSuite {
 
   test("streaming BPE fertility equals the batch variant; OOV arrivals fall back to chars") {
     val s = spark; import s.implicits._
-    val land = java.nio.file.Files.createTempDirectory("docs_fert").toString
+    val land = TestSpark.tempDir("docs_fert").toString
     graft.Tables.documents(spark, sf)
       .write.mode("overwrite").parquet(s"$land/arrivals")
     val dict = graft.text.TextStats.bpeSubwordDict(spark, sf)
@@ -267,7 +267,7 @@ class DocsStreamSpec extends AnyFunSuite {
     // drifted traffic: a source of words the tokenizer never saw must score
     // at char-count fertility (the byte-fallback rule) — here 'zzzzz' = 5
     // subwords per 1 word -> 5000 permille, far above any in-dict source
-    val oov = java.nio.file.Files.createTempDirectory("docs_fert_oov").toString
+    val oov = TestSpark.tempDir("docs_fert_oov").toString
     Seq((900001L, "zzzzz zzzzz", "xx", "oov_src", 11L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$oov/arrivals")
@@ -282,7 +282,7 @@ class DocsStreamSpec extends AnyFunSuite {
 
   test("streaming mixture quota-fill equals the batch variant; skewed arrivals drift") {
     val s = spark; import s.implicits._
-    val land = java.nio.file.Files.createTempDirectory("docs_mix").toString
+    val land = TestSpark.tempDir("docs_mix").toString
     graft.Tables.documents(spark, sf)
       .write.mode("overwrite").parquet(s"$land/arrivals")
     val rates = graft.text.TextStats.mixtureRates(graft.Tables.documents(spark, sf))
@@ -302,7 +302,7 @@ class DocsStreamSpec extends AnyFunSuite {
     // hash threshold puts it — the monitor's verdict is deterministic, not
     // a statistical assertion.
     val extra = (0 until 75).map(i => (800000L + i, s"skew doc $i pad pad", "en", "src0", 16L))
-    val skewDir = java.nio.file.Files.createTempDirectory("docs_mix_skew").toString
+    val skewDir = TestSpark.tempDir("docs_mix_skew").toString
     graft.Tables.documents(spark, sf)
       .unionByName(extra.toDF("doc_id", "text", "lang", "source", "n_chars"))
       .write.parquet(s"$skewDir/arrivals")

@@ -13,7 +13,7 @@ class EmbedStreamSpec extends AnyFunSuite {
     // Stage the arriving split (vec_id % 5 = 0) as its own directory — the
     // stream must see ONLY arrivals; the index side never streams.
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("embed_arrivals").toString
+    val dir = TestSpark.tempDir("embed_arrivals").toString
     graft.Tables.embeddings(spark, sf).filter(expr("vec_id % 5 = 0"))
       .write.mode("overwrite").parquet(dir)
     val cents = graft.sim.Similarity.trainKMeans(spark, sf)
@@ -32,10 +32,10 @@ class EmbedStreamSpec extends AnyFunSuite {
     // (maxFilesPerTrigger = 1): first the ORIGINAL % 5 = 0 vectors, then
     // their rotated re-embeddings. Latest-wins compaction must keep only
     // the rotated assignments — exactly the batch query's new_cell column.
-    val dir = java.nio.file.Files.createTempDirectory("embed_upsert").toString
+    val dir = TestSpark.tempDir("embed_upsert").toString
     val t0 = System.currentTimeMillis()
     def stage(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("embed_upsert_w").toString
+      val tmp = TestSpark.tempDir("embed_upsert_w").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head

@@ -10,7 +10,7 @@ class EventsStreamSpec extends AnyFunSuite {
 
   test("streaming hourly counts (AvailableNow) equal the batch aggregation") {
     // FileStreamSource wants a directory of arriving files: stage one.
-    val dir = java.nio.file.Files.createTempDirectory("events_stream").toString
+    val dir = TestSpark.tempDir("events_stream").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -26,7 +26,7 @@ class EventsStreamSpec extends AnyFunSuite {
     // declared BIGINT-nanos schema instead of throwing 'Unable to infer
     // schema' before the query starts (ADVICE r11). Zero batches => empty
     // result, no exception.
-    val dir = java.nio.file.Files.createTempDirectory("events_empty").toString
+    val dir = TestSpark.tempDir("events_empty").toString
     val empty = EventsStream.runHourlyCountsStream(spark, dir, "hourly_empty_spec")
     assert(empty.collect().isEmpty)
     // once files land, a fresh query over the same dir probes the real
@@ -41,7 +41,7 @@ class EventsStreamSpec extends AnyFunSuite {
   }
 
   test("stream-static enrichment (customer dim join) equals the batch rollup") {
-    val dir = java.nio.file.Files.createTempDirectory("events_enrich").toString
+    val dir = TestSpark.tempDir("events_enrich").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -55,7 +55,7 @@ class EventsStreamSpec extends AnyFunSuite {
   }
 
   test("stateful sessionization (flatMapGroupsWithState) equals the batch gaps-and-islands") {
-    val dir = java.nio.file.Files.createTempDirectory("events_sess").toString
+    val dir = TestSpark.tempDir("events_sess").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -70,7 +70,7 @@ class EventsStreamSpec extends AnyFunSuite {
     // Split the fixture at the time median into two files so sessions span
     // the batch boundary; per-user event order is preserved (all of file1's
     // events precede file2's). maxFilesPerTrigger=1 forces two micro-batches.
-    val dir = java.nio.file.Files.createTempDirectory("events_sess2").toString
+    val dir = TestSpark.tempDir("events_sess2").toString
     val ev = graft.Tables.events(spark, sf).withColumn("ms", expr("ts div 1000000"))
     val mid = ev.selectExpr("percentile_approx(ms, 0.5)").head.getLong(0)
     def stage(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
@@ -100,7 +100,7 @@ class EventsStreamSpec extends AnyFunSuite {
     // sums to NULL). Pin the parity on both shapes: a mixed-null session
     // and an all-null session.
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("events_nullval").toString
+    val root = TestSpark.tempDir("events_nullval").toString
     val dir = s"$root/events.parquet"
     new java.io.File(dir).mkdirs()
     val t0 = 1600000000000L
@@ -133,7 +133,7 @@ class EventsStreamSpec extends AnyFunSuite {
     // event time would fall foul of the watermark. Both rows must simply
     // be absent, identically to sessionizeBatch.
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("events_nullkey").toString
+    val root = TestSpark.tempDir("events_nullkey").toString
     val dir = s"$root/events.parquet"
     new java.io.File(dir).mkdirs()
     val t0 = 1600000000000L
@@ -161,7 +161,7 @@ class EventsStreamSpec extends AnyFunSuite {
   test("cross-batch LATE event merges without rewinding the gap horizon (stream == batch)") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("events_late").toString
+    val root = TestSpark.tempDir("events_late").toString
     val dir = s"$root/events.parquet" // a directory both Tables.events and readStream accept
     new java.io.File(dir).mkdirs()
     val t0 = 1600000000000L
@@ -201,7 +201,7 @@ class EventsStreamSpec extends AnyFunSuite {
   test("late event BEFORE the open session's start: rewinds the start, bridges pending sessions, tombstones the old key") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("events_rewind").toString
+    val root = TestSpark.tempDir("events_rewind").toString
     val dir = s"$root/events.parquet"
     new java.io.File(dir).mkdirs()
     val t0 = 1600000000000L
@@ -252,7 +252,7 @@ class EventsStreamSpec extends AnyFunSuite {
   test("sessionizer state EXPIRES: idle user emits a final session and its state row is removed") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("events_expiry").toString
+    val dir = TestSpark.tempDir("events_expiry").toString
     val t0 = 1600000000000L // epoch ms
     val Min = 60000L; val Hour = 3600000L
     // Rows shaped like the fixture: ts is BIGINT nanoseconds.
@@ -317,7 +317,7 @@ class EventsStreamSpec extends AnyFunSuite {
     // (a) emits only watermark-certified sessions, (b) keeps the rest live.
     assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
       .contains("RocksDB"), "sessionizer spec must run on the at-scale state store")
-    val dir = java.nio.file.Files.createTempDirectory("events_timeout").toString
+    val dir = TestSpark.tempDir("events_timeout").toString
     val t0 = 1600000000000L
     val Min = 60000L; val Hour = 3600000L
     def stage(name: String, mtime: Long, rows: (Long, Long, Long)*): Unit = {
@@ -375,7 +375,7 @@ class EventsStreamSpec extends AnyFunSuite {
     // UNABLE_TO_INFER_SCHEMA in all three monitors; the shared
     // runCountsMonitor lifecycle now reads under the aggregation's own
     // schema, so the scorers see an empty table and return empty verdicts.
-    val dir = java.nio.file.Files.createTempDirectory("events_mon_empty").toString
+    val dir = TestSpark.tempDir("events_mon_empty").toString
     assert(EventsStream.runDriftStream(spark, dir, "drift_empty_spec")
       .collect().isEmpty)
     assert(EventsStream.runBackfillStream(spark, dir, "backfill_empty_spec")
@@ -385,7 +385,7 @@ class EventsStreamSpec extends AnyFunSuite {
   }
 
   test("streaming drift gate equals the registered batch variant") {
-    val land = java.nio.file.Files.createTempDirectory("events_drift").toString
+    val land = TestSpark.tempDir("events_drift").toString
     graft.Tables.events(spark, sf)
       .write.mode("overwrite").parquet(s"$land/arrivals")
     val streamed = EventsStream.runDriftStream(
@@ -403,7 +403,7 @@ class EventsStreamSpec extends AnyFunSuite {
 
   test("streaming k-anon gate equals batch; unseen cells fail closed across micro-batches") {
     import org.apache.spark.sql.functions._
-    val land = java.nio.file.Files.createTempDirectory("events_kanon").toString
+    val land = TestSpark.tempDir("events_kanon").toString
     graft.Tables.events(spark, sf)
       .write.mode("overwrite").parquet(s"$land/arrivals")
     val streamed = EventsStream.runKanonGateStream(
@@ -417,7 +417,7 @@ class EventsStreamSpec extends AnyFunSuite {
       s"fixture must exercise both gate branches, got $verdicts")
     // fail-closed: an arriving event type the census has never seen must
     // suppress, even in a later micro-batch (artifact re-read per batch)
-    val land2 = java.nio.file.Files.createTempDirectory("events_kanon2").toString
+    val land2 = TestSpark.tempDir("events_kanon2").toString
     val ghost = graft.Tables.events(spark, sf).limit(1)
       .withColumn("event_type", lit("ghost_type"))
       .withColumn("event_id", lit(999999901L))
@@ -431,7 +431,7 @@ class EventsStreamSpec extends AnyFunSuite {
 
   test("streaming backfill monitor equals the batch planner; a hole arriving later closes") {
     import org.apache.spark.sql.functions._
-    val land = java.nio.file.Files.createTempDirectory("events_backfill").toString
+    val land = TestSpark.tempDir("events_backfill").toString
     graft.Tables.events(spark, sf)
       .write.mode("overwrite").parquet(s"$land/arrivals")
     val streamed = EventsStream.runBackfillStream(
@@ -442,7 +442,7 @@ class EventsStreamSpec extends AnyFunSuite {
     assert(batch.nonEmpty)
     // incrementality: drop one day of one type, stream -> 'backfill'; the
     // missing day then ARRIVES in a second file and the verdict closes
-    val land2 = java.nio.file.Files.createTempDirectory("events_backfill2").toString
+    val land2 = TestSpark.tempDir("events_backfill2").toString
     val all = graft.Tables.events(spark, sf)
       .withColumn("day", expr("(ts div 1000000) div 86400000"))
     val someDay = all.select(max("day")).head.getLong(0) - 1
@@ -464,7 +464,7 @@ class EventsStreamSpec extends AnyFunSuite {
 
   test("streaming freshness audit equals the batch query; a dead producer goes stale") {
     import org.apache.spark.sql.functions._
-    val land = java.nio.file.Files.createTempDirectory("events_fresh").toString
+    val land = TestSpark.tempDir("events_fresh").toString
     graft.Tables.events(spark, sf)
       .write.mode("overwrite").parquet(s"$land/arrivals")
     val streamed = EventsStream.runFreshnessStream(

@@ -17,7 +17,7 @@ class TextStatsSpec extends AnyFunSuite {
     // 17 tokens t0..t16: masked groups g = i div 3 with g % 5 = 0 are
     // g=0 (i=0,1,2) and g=5 (i=15,16) -> sentinels <extra_id_0>, <extra_id_1>.
     val text = (0 until 17).map(i => s"t$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("mask_docs").toString
+    val dir = TestSpark.tempDir("mask_docs").toString
     Seq((1L, text, "en", "s0", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
@@ -43,7 +43,7 @@ class TextStatsSpec extends AnyFunSuite {
     //   doc 2: cum_excl 100, cum 700 -> win [0, 2]  (straddles 3 windows)
     //   doc 3: cum_excl 700, cum 730 -> win [2, 2]
     def words(n: Int) = Seq.fill(n)("w").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("pack_docs").toString
+    val dir = TestSpark.tempDir("pack_docs").toString
     Seq(
       (1L, words(100), "en", "s0", 100L),
       (2L, words(600), "en", "s0", 600L),
@@ -71,7 +71,7 @@ class TextStatsSpec extends AnyFunSuite {
     // the two-level scan is actually exercised: the per-shard windows must
     // each see at most 64 rows while the SOURCE has 200.
     def words(n: Int) = Seq.fill(n)("w").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("pack_shard_docs").toString
+    val dir = TestSpark.tempDir("pack_shard_docs").toString
     (0L until 200L).map(i => (i, words((i % 13 + 1).toInt), "en", "s0", i))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -122,7 +122,7 @@ class TextStatsSpec extends AnyFunSuite {
   test("tx_tfidf: rare term outranks frequent-everywhere term; score is exact tf*1e6 div df") {
     val s = spark; import s.implicits._
     // df: apple 1, banana 2, cherry 2, the 3
-    val dir = java.nio.file.Files.createTempDirectory("tfidf_docs").toString
+    val dir = TestSpark.tempDir("tfidf_docs").toString
     Seq(
       (1L, "the apple apple banana", "en", "s0", 22L),
       (2L, "the banana cherry", "en", "s0", 17L),
@@ -145,7 +145,7 @@ class TextStatsSpec extends AnyFunSuite {
   test("tx_winnowing: docs sharing an 8+-token run share a fingerprint; disjoint docs don't") {
     val s = spark; import s.implicits._
     val shared = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val dir = java.nio.file.Files.createTempDirectory("winnow_docs").toString
+    val dir = TestSpark.tempDir("winnow_docs").toString
     Seq(
       (1L, s"one two $shared three four five six", "en", "s0", 0L),
       (2L, s"seven eight nine ten $shared eleven", "en", "s0", 0L),
@@ -239,7 +239,7 @@ class TextStatsSpec extends AnyFunSuite {
     // re-synchronization (not periodicity) can make chunks match
     val base = Seq.tabulate(240)(i => s"w$i")
     val edited = (base.take(150) :+ "INSERTED") ++ base.drop(150)
-    val dir = java.nio.file.Files.createTempDirectory("cdc_docs").toString
+    val dir = TestSpark.tempDir("cdc_docs").toString
     Seq(
       (1L, base.mkString(" "), "en", "srcA", 0L),
       (2L, edited.mkString(" "), "en", "srcB", 0L))
@@ -282,7 +282,7 @@ class TextStatsSpec extends AnyFunSuite {
     // Corpus where round 1 learns (a,a): "aaa" must segment as [aa, a]
     // (2 subwords) — the fold's just-merged slot must NOT re-match as the
     // left half of the same pair — and "aaaa" as [aa, aa].
-    val dir = java.nio.file.Files.createTempDirectory("bpe_apply").toString
+    val dir = TestSpark.tempDir("bpe_apply").toString
     Seq((1L, "aaa aaa aaa aaaa", "en", "s0", 16L),
         (2L, "aaaa b", "en", "s0", 6L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -446,7 +446,7 @@ class TextStatsSpec extends AnyFunSuite {
 
   test("bpe merge table is a persisted content-keyed artifact, probed instead of retrained") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bpe_artifact").toString
+    val dir = TestSpark.tempDir("bpe_artifact").toString
     def write(text: String): Unit =
       Seq((1L, text, "en", "s0", text.length.toLong))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -518,7 +518,7 @@ class TextStatsSpec extends AnyFunSuite {
     // must count 2 per class (body + footer) — the battery scrubs raw
     // text, not just the planted spans.
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pii_docs").toString
+    val dir = TestSpark.tempDir("pii_docs").toString
     Seq((77L,
       "reach bob.smith@mail.example.org from 10.1.2.3 call 555-0100 ref 12345678",
       "en", "s0", 0L))
@@ -681,7 +681,7 @@ class TextStatsSpec extends AnyFunSuite {
     // the reference mix is corpus-wide: a large outlier would drag every
     // healthy source's TV up with it (the monitor flags the outlier, but
     // the healthy-source assertion needs the mix barely perturbed).
-    val dir = java.nio.file.Files.createTempDirectory("len_drift_docs").toString
+    val dir = TestSpark.tempDir("len_drift_docs").toString
     val healthy = for (src <- Seq("a", "b", "c", "d"); i <- 0 until 40) yield
       (src.hashCode.toLong * 1000 + i, (0 until (if (i % 2 == 0) 40 else 100))
         .map(_ => "w").mkString(" "), "en", src, 5L)

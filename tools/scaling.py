@@ -16,6 +16,7 @@ kept-vs-verified aggregations, ~6 min of which is the pHash one)
 """
 import json
 import math
+import os
 import re
 import subprocess
 import sys
@@ -111,14 +112,19 @@ def purge_artifacts() -> None:
             shutil.rmtree(p, ignore_errors=True)
 
 
+def main_env(**extra: str) -> dict:
+    """Environment of a launched main: the caller's, pinned to the 32 cores
+    SCALING.md is measured on (the mains default to every host core), plus
+    `extra`."""
+    return {**os.environ, "SPARK_GRAFT_CPUS": "32", **extra}
+
+
 def run_bench(sf_dir: str, label: str, name_filter: str | None = None,
               driver_mem: str | None = None) -> dict:
     print(f"[scaling] benching {label} ...", flush=True)
-    env = {"SPARK_GRAFT_SF_DIR": sf_dir, "SPARK_GRAFT_CPUS": "32",
-           "SPARK_GRAFT_BENCH_RUNS": "3"}
+    child_env = main_env(SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_BENCH_RUNS="3")
     if driver_mem:
-        env["SPARK_DRIVER_MEM"] = driver_mem
-    child_env = {**__import__("os").environ, **env}
+        child_env["SPARK_DRIVER_MEM"] = driver_mem
     # The artifact must reflect the intended query set at the pinned run
     # count — a stray dev-loop filter or run-count override inherited from
     # the caller would silently produce a subset SCALING.md.
@@ -152,7 +158,7 @@ def bench_extra_decade() -> dict:
     pair family plus the steep non-pair queries on it in one run."""
     out = subprocess.run(
         ["sbt", "-batch", f"runMain graft.tools.ScaleFixture {SF1X_DIR}"],
-        capture_output=True, text=True)
+        capture_output=True, text=True, env=main_env())
     if "[scalefixture]" not in out.stdout:
         sys.exit(f"ScaleFixture failed:\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
     pattern = "^(" + "|".join(DECADE_QUERIES + NONPAIR_DECADE_QUERIES) + ")$"
@@ -166,7 +172,7 @@ def bench_extra_decade_100x() -> dict:
         ["sbt", "-batch",
          f"runMain graft.tools.ScaleFixture {X100_DIR} /root/testdata/sf0.1 "
          "100 documents,embeddings,part"],
-        capture_output=True, text=True)
+        capture_output=True, text=True, env=main_env())
     if "[scalefixture]" not in out.stdout:
         sys.exit(f"ScaleFixture 100x failed:\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
     pattern = "^(" + "|".join(X100_QUERIES) + ")$"
@@ -195,7 +201,7 @@ def stage_fixture(out_dir: str, replicas: int, tables: str) -> None:
         ["sbt", "-batch",
          f"runMain graft.tools.ScaleFixture {out_dir} /root/testdata/sf0.1 "
          f"{replicas} {tables}"],
-        capture_output=True, text=True)
+        capture_output=True, text=True, env=main_env())
     if "[scalefixture]" not in out.stdout:
         sys.exit(f"ScaleFixture {out_dir} failed:"
                  f"\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
@@ -206,7 +212,8 @@ def run_diag(d: str, families: str, forced_bits: int | None = None) -> dict:
     reports what the banded expansion WILL keep without running it)."""
     arg = f"runMain graft.tools.DiagBuckets {d} {families}" + (
         f" {forced_bits}" if forced_bits else "")
-    out = subprocess.run(["sbt", "-batch", arg], capture_output=True, text=True)
+    out = subprocess.run(["sbt", "-batch", arg], capture_output=True, text=True,
+                         env=main_env())
     rows = {}
     for m in re.finditer(
             r"\[diag\] (\w+)\(bits=(\d+), n=(\d+)\) buckets=(\d+) max=(\d+) "
@@ -230,8 +237,7 @@ def run_profile(args: str, **env: str) -> tuple[list[dict], str]:
     plus the run's stdout for failure messages."""
     out = subprocess.run(
         ["sbt", "-batch", f"runMain graft.tools.Profile {args}"],
-        capture_output=True, text=True,
-        env={**__import__("os").environ, **env})
+        capture_output=True, text=True, env=main_env(**env))
     recs = [json.loads(m.group(1)) for m in
             re.finditer(r"GRAFT_PROFILE (\{.*\})", out.stdout)]
     return recs, out.stdout
@@ -253,10 +259,9 @@ def run_phash_verify(d: str) -> dict:
     pHash kept-vs-verified measurement (round 18). Counts the same DISTINCT
     candidate frame mm_phash_dedup filters; no artifact write, no second
     expansion."""
-    env = {**__import__("os").environ, "SPARK_DRIVER_MEM": "24g"}
     out = subprocess.run(
         ["sbt", "-batch", f"runMain graft.tools.PhashVerifyProbe {d}"],
-        capture_output=True, text=True, env=env)
+        capture_output=True, text=True, env=main_env(SPARK_DRIVER_MEM="24g"))
     m = re.search(r"\[phashverify\] dir=\S+ n_docs=(\d+) bits=(\d+) "
                   r"candidates=(\d+) verified=(\d+) ratio=([0-9.]+) "
                   r"wall=([0-9.]+)s floor_div=(\d+)", out.stdout)
@@ -285,8 +290,7 @@ def run_pipeline(sf_dir: str, out_dir: str, label: str) -> dict | None:
         ["sbt", "-batch",
          f"runMain graft.etl.RunCorpusPipeline {sf_dir} {out_dir} "
          f"{PIPELINE_MIN_SHINGLES}"],
-        capture_output=True, text=True,
-        env={**__import__("os").environ, "SPARK_GRAFT_CPUS": "32"})
+        capture_output=True, text=True, env=main_env())
     m = re.search(r"GRAFT_PIPELINE (\{.*\})", out.stdout)
     if not m:
         print(f"[scaling] pipeline {label} FAILED:\n{out.stdout[-1500:]}",
@@ -299,8 +303,7 @@ def run_warmup_probe(sf_dir: str, query: str, prescan: str) -> dict | None:
     """Fresh-JVM warm-up decomposition for one query (graft.tools.Profile
     --prescan): prescan1..3 split input first-touch from JIT ramp, query
     run1..run3 show the warmed floor. Values are wall seconds."""
-    recs, _ = run_profile(f"{sf_dir} {query} --runs 3 --prescan {prescan}",
-                          SPARK_GRAFT_CPUS="32")
+    recs, _ = run_profile(f"{sf_dir} {query} --runs 3 --prescan {prescan}")
     walls = {("prescan" if "prescan" in r else "run") + str(r["run"]):
              r["wall_s"] for r in recs}
     return walls if len(walls) == 6 else None
@@ -903,7 +906,7 @@ def main() -> None:
     # ---- BPE merge-round cost envelope --------------------------------------
     env_out = subprocess.run(
         ["sbt", "-batch", "runMain graft.tools.BpeEnvelope /root/testdata/sf0.1 64"],
-        capture_output=True, text=True)
+        capture_output=True, text=True, env=main_env())
     m = re.search(r"GRAFT_BPE_ENVELOPE (\{.*\})", env_out.stdout)
     lines += [
         "",
@@ -976,7 +979,7 @@ def main() -> None:
     # ---- BPE driver-heap trainer at production depth (round-16 #3) ---------
     depth_out = subprocess.run(
         ["sbt", "-batch", "runMain graft.tools.BpeDepthProbe /root/testdata/sf0.1 32768"],
-        capture_output=True, text=True)
+        capture_output=True, text=True, env=main_env())
     dm = re.search(r"GRAFT_BPE_DEPTH (\{.*\})", depth_out.stdout)
     lines += [
         "",
