@@ -578,13 +578,12 @@ object Dedup extends DedupPairQueries with DedupCorpusQueries {
     * sizeInBytes into the next round's LogicalRDD, and Catalyst's default
     * join-stats estimate is the PRODUCT of child sizes — so the estimate's
     * BigInt digit count roughly doubles per round here (two labels-derived
-    * join inputs). That exact mechanism made the BPE training loop's
-    * driver time explode at depth (TextStats.bpeMergesUncached, fixed by
-    * removing its self-joins); THIS loop is safe because pointer doubling
-    * converges in O(log diameter) rounds and bucket caps bound component
-    * diameter — ≤ ~10 rounds ⇒ ~2^10·20 digits, microseconds of stats
-    * arithmetic. If the loop shape ever changes to one round per hop,
-    * re-audit. */
+    * join inputs). Over many rounds that compounding has the driver
+    * spending minutes per round in BigInt stats arithmetic; THIS loop is
+    * safe because pointer doubling converges in O(log diameter) rounds
+    * and bucket caps bound component diameter — ≤ ~10 rounds ⇒ ~2^10·20
+    * digits, microseconds of stats arithmetic. If the loop shape ever
+    * changes to one round per hop, re-audit. */
   private[dedup] def connectedComponents(pairs: DataFrame): (DataFrame, Int) = {
     val p = ckpt(pairs)
     val sym = p.unionAll(p.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))

@@ -59,8 +59,8 @@ object RunCorpusPipeline {
     * screen threshold convention). */
   final val DecontamMinShingles = 2
 
-  /** BPE depth for the pipeline tokenizer — past DriverHeapCrossover on
-    * purpose, so the pipeline exercises the production trainer path. */
+  /** BPE depth for the pipeline tokenizer — a production-like depth, far
+    * past the registered queries' 8 rounds. */
   final val PipelineBpeRounds = 300
 
   /** Min-count dictionary floor for the pipeline tokenizer (the

@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** The BPE tokenizer lifecycle behind `tx_bpe_merges` / `tx_bpe_apply` /
-  * `st_bpe_fertility`: exact relational training (oracle-replayable), the
-  * FastBPE-shape driver-heap trainer for production round counts, the
-  * word-frequency dictionary with its bounded-collect `minCount` floor, the
-  * persisted merge-table artifact and its consumers, and the DuckDB replay
-  * SQL. Mixed into [[TextStats]] (split out of TextStats.scala in round 15
-  * — same package, no behavior change); all call sites go through
-  * `TextStats.*`. Self-typed to the object so shared lexer constants
-  * ([[TextStats.toks]]) resolve without duplication. */
+  * `st_bpe_fertility`: the FastBPE-shape driver-heap trainer, the
+  * word-frequency dictionary it trains on (with its bounded-collect
+  * `minCount` floor), the persisted merge-table artifact and its
+  * consumers, and the DuckDB replay SQL. Mixed into [[TextStats]] (split
+  * out of TextStats.scala in round 15 — same package, no behavior change);
+  * all call sites go through `TextStats.*`. Self-typed to the object so
+  * shared lexer constants ([[TextStats.toks]]) resolve without
+  * duplication. */
 private[text] trait TextBpe { this: TextStats.type =>
   /** Merge rounds trained by [[bpeMerges]] (the tokenizer-prep analog of
     * Similarity.Iters: enough rounds to exercise selection, application,
@@ -25,13 +25,13 @@ private[text] trait TextBpe { this: TextStats.type =>
     * uninitialized 0 even without the inlining.) */
   final val BpeRounds = 8
 
-  /** Character splitter over a `word` column — the symbol alphabet both
-    * trainers, the apply dictionary, and the streaming fertility fallback
-    * derive pairs from, stated ONCE (the `toks` discipline; four sites
-    * previously restated it). filter(x <> ''): Java-regex split("") can
-    * emit a trailing empty token the DuckDB splitter doesn't — strip it so
-    * both engines pair the same symbols. The JVM-side twin is
-    * [[codePointSyms]] (code points, never UTF-16 units). */
+  /** Character splitter over a `word` column — the symbol alphabet the
+    * apply dictionary and the streaming fertility fallback derive pairs
+    * from, stated ONCE (the `toks` discipline). filter(x <> ''): Java-regex
+    * split("") can emit a trailing empty token the DuckDB splitter
+    * doesn't — strip it so both engines see the same symbols. The JVM-side
+    * twin the trainer uses is [[codePointSyms]] (code points, never UTF-16
+    * units). */
   private[graft] val charsExpr = "filter(split(word, ''), x -> x <> '')"
 
   // In-JVM fast path over the PERSISTED merge-table artifact (below) —
@@ -49,24 +49,19 @@ private[text] trait TextBpe { this: TextStats.type =>
     * verbatim like [[graft.sim.Similarity.duckKmeansChain]] replays
     * k-means).
     *
-    * Scale shape — the part that matters at 100 TB: training input is the
-    * WORD-FREQUENCY DICTIONARY (one corpus tokenize+count pass — the only
-    * corpus-scale step, the same shuffle tx_tokens already pays), and every
-    * merge round runs on the vocabulary-sized (word, syms) frame: explode
-    * to symbol pairs, one weighted count, a 1-ROW collect of the argmax
-    * (model state, the k-means discipline), and a PURE-WINDOW
-    * leftmost-greedy rewrite: mark matching positions, group consecutive
-    * marks into islands (pos − running match count), keep odd ranks within
-    * each island, lag-drop the absorbed right halves — no per-row loop, no
-    * UDF, and deliberately NO self-joins (Catalyst's join-stats product
-    * compounds through checkpointed rounds — see the in-loop comment).
-    * Each round is localCheckpointed so lineage stays one round deep. The trained merge table is a PERSISTED content-keyed artifact
-    * (the Artifacts.indexParquetPath discipline — `_SUCCESS` guard, atomic
-    * rename): training runs once per corpus content, and every consumer —
-    * [[bpeSubwordDict]] behind tx_bpe_apply and st_bpe_fertility — probes
-    * the published merge table across sessions exactly like the ANN cell
-    * tables and winnow fingerprint indexes. The in-JVM memo on top is only
-    * a fast path over the artifact read. */
+    * Scale shape: the corpus is touched ONCE, distributed — the
+    * word-frequency dictionary pass ([[wordFreqDict]], the same
+    * tokenize+count shuffle tx_tokens already pays) — and every merge
+    * round runs on the driver over that vocabulary-sized dictionary
+    * ([[bpeMergesDriverHeap]]): no per-round Spark job, so depth costs
+    * heap operations, not job submissions. The trained merge table is a
+    * PERSISTED content-keyed artifact (the Artifacts.indexParquetPath
+    * discipline — `_SUCCESS` guard, atomic rename): training runs once per
+    * corpus content, and every consumer — [[bpeSubwordDict]] behind
+    * tx_bpe_apply and st_bpe_fertility — probes the published merge table
+    * across sessions exactly like the ANN cell tables and winnow
+    * fingerprint indexes. The in-JVM memo on top is only a fast path over
+    * the artifact read. */
   def bpeMerges(s: org.apache.spark.sql.SparkSession, d: String,
       rounds: Int = BpeRounds): Seq[(Long, String, String, String, Long)] =
     graft.Artifacts.memo(bpeModels,
@@ -74,73 +69,33 @@ private[text] trait TextBpe { this: TextStats.type =>
       val path = graft.Artifacts.indexParquetPath(
           s, s"bpe_merges_r$rounds", d, "documents") {
         import s.implicits._
-        // Path choice by depth (spec-pinned equal): the relational loop
-        // for shallow oracle-replayable training, the driver heap once
-        // per-round job submission would dominate (production vocabs).
-        // This registered path trains EXACT (no dictionary floor) so the
-        // artifact replays on any engine; a web-scale caller bounds the
-        // collect with wordFreqDict's minCount knob, as the corpus
-        // pipeline's tokenizer stage does (RunCorpusPipeline.BpeMinCount).
-        val trained =
-          if (rounds > DriverHeapCrossover)
-            bpeMergesDriverHeap(wordFreqDict(Tables.documents(s, d)), rounds)
-          else bpeMergesUncached(Tables.documents(s, d), rounds)
-        trained.toDF("merge_rank", "lhs", "rhs", "merged", "n_pairs")
+        // EXACT training (no dictionary floor) so the artifact replays on
+        // any engine; a web-scale caller bounds the collect with
+        // wordFreqDict's minCount knob, as the corpus pipeline's tokenizer
+        // stage does (RunCorpusPipeline.BpeMinCount).
+        bpeMergesDriverHeap(wordFreqDict(Tables.documents(s, d)), rounds)
+          .toDF("merge_rank", "lhs", "rhs", "merged", "n_pairs")
       }
       s.read.parquet(path).orderBy("merge_rank").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getString(3), r.getLong(4))).toSeq
     }
 
-  /** Merge-round count above which [[bpeMerges]] trains on the driver heap
-    * ([[bpeMergesDriverHeap]]) instead of the per-round relational loop:
-    * the relational path costs a flat ~0.2 s of JOB-SUBMISSION LATENCY per
-    * round (SCALING.md envelope — data volume is irrelevant past the one
-    * dictionary pass), so by 256 rounds the driver path's one-time
-    * dictionary collect (~ms at fixture scale, dictionary-sized always)
-    * has been repaid hundreds of times. Both paths are proven equal by
-    * spec, so the switch is invisible semantically. */
-  final val DriverHeapCrossover = 256
-
-  /** FastBPE-shape BPE training, entirely ON THE DRIVER over the collected
-    * word-frequency dictionary — the production path for real vocab sizes
-    * (10⁴-10⁵ merges), where the relational loop's per-round job submission
-    * dominates (see [[bpeMergesUncached]]'s design note; the envelope in
-    * SCALING.md measures the crossover). The corpus is still touched
-    * exactly once, distributed (the tokenize+count dictionary pass); what
-    * moves to the driver is vocabulary-sized model state — the k-means
-    * discipline, same as the IVF centroids.
-    *
-    * Incremental, not recount: pair→weighted-count map plus a LAZY max-heap
-    * ((count, lhs, rhs) entries re-pushed on every count change; stale
-    * entries discarded on pop when their count no longer matches), and a
-    * pair→word-index posting map so a merge touches only words containing
-    * the pair (stale postings are skipped by a containment scan). Per
-    * affected word: subtract its old adjacent pairs, apply the
-    * leftmost-greedy merge, re-add the new ones — O(word length), exactly
-    * the FastBPE update rule. Selection order matches the relational path:
-    * count desc, then (lhs, rhs) ascending in CODE-POINT order
-    * ([[cpCompare]] — identical to Spark's and DuckDB's binary UTF-8
-    * string order; plain String.compareTo is UTF-16 order, which sorts a
-    * supplementary character BELOW U+E000..U+FFFF by its surrogate halves
-    * and would silently pick a different merge on real web text).
-    * Equality with [[bpeMergesUncached]] is spec-pinned on the fixture, on
-    * seeded adversarial corpora, and on a supplementary-vs-BMP tie. */
   /** Code-point symbols — the JVM twin of [[charsExpr]]. NOT
     * `String.split("")`: that splits between UTF-16 units, halving a
     * supplementary character (𝛼, emoji — ordinary web text) into two
     * lone-surrogate "symbols" that Spark's and DuckDB's splitters never
-    * produce, so the driver-heap trainer would learn merges over a
-    * different alphabet than the oracle-replayable path (caught by the
-    * TextStatsSpec supplementary-tie pin). */
+    * produce, so the trainer would learn merges over a different alphabet
+    * than the apply dictionary and the oracle (caught by the TextStatsSpec
+    * supplementary-tie pin). */
   private def codePointSyms(w: String): Array[String] =
     w.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
 
   /** Code-point (= binary UTF-8) string order — the tie-break order the
-    * relational trainer inherits from Spark's UTF8String comparison and
-    * the oracle from DuckDB's VARCHAR order. UTF-8 byte order equals
-    * code-point order by construction, so comparing code points avoids
-    * the per-comparison byte-array allocation. */
+    * oracle inherits from DuckDB's VARCHAR order (and Spark's UTF8String
+    * comparison). UTF-8 byte order equals code-point order by
+    * construction, so comparing code points avoids the per-comparison
+    * byte-array allocation. */
   private def cpCompare(a: String, b: String): Int = {
     val n = math.min(a.length, b.length)
     var i = 0
@@ -153,6 +108,29 @@ private[text] trait TextBpe { this: TextStats.type =>
     Integer.compare(a.length, b.length)
   }
 
+  /** FastBPE-shape BPE training, entirely ON THE DRIVER over the collected
+    * word-frequency dictionary — the one trainer, for the registered
+    * 8-round queries and real vocab sizes (10⁴-10⁵ merges) alike. The
+    * corpus is touched exactly once, distributed (the tokenize+count
+    * dictionary pass); what lives on the driver is vocabulary-sized model
+    * state — the k-means discipline, same as the IVF centroids.
+    *
+    * Incremental, not recount: pair→weighted-count map plus a LAZY max-heap
+    * ((count, lhs, rhs) entries re-pushed on every count change; stale
+    * entries discarded on pop when their count no longer matches), and a
+    * pair→word-index posting map so a merge touches only words containing
+    * the pair (stale postings are skipped by a containment scan). Per
+    * affected word: subtract its old adjacent pairs, apply the
+    * leftmost-greedy merge, re-add the new ones — O(word length), exactly
+    * the FastBPE update rule. Selection order matches the oracle: count
+    * desc, then (lhs, rhs) ascending in CODE-POINT order ([[cpCompare]] —
+    * identical to Spark's and DuckDB's binary UTF-8 string order; plain
+    * String.compareTo is UTF-16 order, which sorts a supplementary
+    * character BELOW U+E000..U+FFFF by its surrogate halves and would
+    * silently pick a different merge on real web text). Training stops
+    * early once no pair is left (exhaustion). Equality with an in-memory
+    * reference BPE is spec-pinned on the fixture and on seeded adversarial
+    * corpora, and the supplementary-vs-BMP tie is pinned literally. */
   private[graft] def bpeMergesDriverHeap(wordFreqs: Seq[(String, Long)],
       rounds: Int): Seq[(Long, String, String, String, Long)] = {
     import scala.collection.mutable
@@ -232,12 +210,13 @@ private[text] trait TextBpe { this: TextStats.type =>
   }
 
   /** The one distributed corpus pass feeding [[bpeMergesDriverHeap]]: the
-    * word-frequency dictionary (same tokenizer + empty-token filter as the
-    * relational path, so both trainers pair identical symbols).
+    * word-frequency dictionary (the [[TextStats.toks]] tokenizer and the
+    * empty-token filter the apply dictionary and the oracle share, so
+    * training sees the same words they segment).
     *
     * `minCount` is the production BOUND on this collect — the one formerly
-    * unbounded driver-side collect in the library (VERDICT r13 #1). The
-    * in-code 100-TB note used to assume ~10⁶ distinct words, but real
+    * unbounded driver-side collect in the library (VERDICT r13 #1). A
+    * dictionary-sized collect sounds like ~10⁶ distinct words, but real
     * web-scale text has 10⁸⁺ (URLs, typos, numbers); every production BPE
     * trainer prunes with a min-count floor before heap training, and the
     * floor bounds the collect because distinct-words-with-freq ≥ F is at
@@ -264,122 +243,6 @@ private[text] trait TextBpe { this: TextStats.type =>
       .filter(col("freq") >= lit(minCount))
       .orderBy(col("word"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-
-  /** Training loop over an explicit documents frame (spec entry point;
-    * `onRound` receives (round, seconds) — graft.tools.BpeEnvelope uses it
-    * to measure the per-round cost curve at production-like round counts).
-    *
-    * 100-TB design note: this loop is O(rounds) DRIVER-COORDINATED Spark
-    * jobs over the vocabulary-sized dictionary — each round's cost is flat
-    * in the corpus (the corpus is touched exactly once, in the initial
-    * tokenize+count), but a production 32k-merge vocab means 32k job
-    * submissions, and job-submission latency (not data volume) becomes the
-    * bottleneck. The documented scale-out for that regime is the FastBPE
-    * shape: ONE job computes partition-local (pair → weighted count) maps
-    * over the dictionary, the driver merges them into a heap and replays
-    * merges against the heap DRIVER-SIDE (the dictionary of a 100-TB corpus
-    * is heap-sized: ~10⁶ distinct words × ~10 symbols), re-counting on
-    * Spark only when the heap's stale-count bound is exceeded — turning
-    * O(vocab) jobs into O(vocab / batch) with identical output (the merge
-    * order is a pure function of the counts). The relational per-round loop
-    * below is kept as the registered, oracle-replayable form; the envelope
-    * measurement (SCALING.md) bounds its per-round cost so the crossover
-    * point is a measured number, not a guess. */
-  private[graft] def bpeMergesUncached(docs: org.apache.spark.sql.DataFrame,
-      rounds: Int,
-      onRound: (Int, Double) => Unit = (_, _) => ()): Seq[(Long, String, String, String, Long)] = {
-    import org.apache.spark.sql.expressions.Window
-    val wPos = Window.partitionBy(col("word")).orderBy(col("pos"))
-    // localCheckpoint (not persist): each round's frame references
-    // the previous round's plan several times, and Catalyst copies shared
-    // subtrees during optimization — 8 rounds of persist-only lineage grew
-    // the logical plan exponentially (observed as analyzer OOM); truncating
-    // to a LogicalRDD per round keeps planning cost flat, the same reason
-    // dd_dup_clusters checkpoints its label-propagation loop.
-    var words = docs
-      .select(explode(expr(toks)).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      .withColumn("syms", expr(charsExpr))
-      .localCheckpoint(true)
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, String, Long)]
-    // Exhaustion BREAKS the loop (the driver-heap twin's `exhausted` rule):
-    // once the argmax comes back empty `words` can never change, so each
-    // remaining round would re-submit an identical guaranteed-empty job —
-    // ~0.2 s of pure submission latency per dead round on a small corpus
-    // driven to a deep round count.
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val rt0 = System.nanoTime()
-      val ex = words
-        .select(col("word"), col("freq"), posexplode(col("syms")).as(Seq("pos", "sym")))
-        .withColumn("nxt", lead(col("sym"), 1).over(wPos))
-      val bestRows = ex.filter(col("nxt").isNotNull)
-        .groupBy(col("sym").as("a"), col("nxt").as("b"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (bestRows.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt) =
-          (bestRows(0).getString(0), bestRows(0).getString(1), bestRows(0).getLong(2))
-        out += ((r.toLong, a, b, a + b, cnt))
-        // leftmost-greedy non-overlap: within each run of consecutive
-        // matching positions, merge the 1st, 3rd, 5th… ("aaaa" + (a,a)
-        // merges positions 0 and 2, never the overlapping 1).
-        //
-        // PURE-WINDOW formulation (no self-joins) — gaps-and-islands over a
-        // running match count: `cum` = matches so far in the word, so
-        // `pos - cum` is constant exactly within a consecutive run of
-        // matches (the island id), and a second running sum of `m` within
-        // (word, island) ranks each match inside its run; keep odd ranks,
-        // drop the row AFTER any kept match (lag). Two window partitionings
-        // (`word`, then `(word, island)`), zero joins. The earlier
-        // formulation rewrote via two left joins against the kept set —
-        // semantically identical, but Catalyst's default join-stats
-        // estimate is the PRODUCT of child sizeInBytes, and localCheckpoint
-        // snapshots the round's stats into the next round's LogicalRDD, so
-        // sizeInBytes CUBED every round: its BigInt digit count tripled per
-        // round and by round ~13 the driver was spending minutes per round
-        // in stats-visitor BigInteger multiplication (thread dumps showed
-        // Toom-Cook frames; measured 0.5 s/round through round 11, then
-        // 4 s → 18 s → 116 s → 639 s). Window/project/filter estimators
-        // scale stats linearly, so per-round cost stays flat at any merge
-        // depth — see graft.tools.BpeEnvelope for the measured curve.
-        // The rewrite feeds only the NEXT round's argmax: on the final
-        // round it would be one full eagerly-checkpointed job whose output
-        // nobody reads — ~1/rounds of total training cost, billed by
-        // BpeEnvelope into the last round's figure for nothing.
-        if (r < rounds) {
-          val cumFrame = wPos.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          val marked = ex
-            .withColumn("m",
-              when(col("sym") === a && col("nxt") === b, 1L).otherwise(0L))
-            .withColumn("cum", sum(col("m")).over(cumFrame))
-            .withColumn("rr", sum(col("m")).over(
-              Window.partitionBy(col("word"), col("pos") - col("cum"))
-                .orderBy(col("pos"))
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-            .withColumn("is_k", col("m") === 1L && col("rr") % 2 === 1)
-            .withColumn("is_d", coalesce(lag(col("is_k"), 1).over(wPos), lit(false)))
-          val next = marked
-            .filter(!col("is_d")) // the absorbed right half of each merge
-            .withColumn("ns",
-              when(col("is_k"), concat(col("sym"), col("nxt"))).otherwise(col("sym")))
-            .groupBy(col("word"), col("freq"))
-            .agg(expr("transform(sort_array(collect_list(struct(pos, ns))), p -> p.ns)")
-              .as("syms"))
-            .localCheckpoint(true) // materializes eagerly; truncates lineage
-          words = next
-        }
-      }
-      onRound(r, (System.nanoTime() - rt0) / 1e9)
-      r += 1
-    }
-    out.toSeq
-  }
 
   /** [[bpeMerges]] as the registered query frame. */
   def bpeMergesDf(s: org.apache.spark.sql.SparkSession, d: String)

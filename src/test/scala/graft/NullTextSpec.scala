@@ -73,6 +73,23 @@ class NullTextSpec extends AnyFunSuite {
       s"NULL doc must report NULL line stats (oracle len(NULL) = NULL): $row")
   }
 
+  test("tx_bpe_merges / tx_bpe_apply: the NULL-text doc trains nothing and gets no row") {
+    // Training sees only the two non-NULL docs' words, exactly as the
+    // oracle's unnest drops the NULL text before counting.
+    val words = Seq(
+      "the quick brown fox jumps over the lazy dog again and again",
+      "a completely different second document with many plain words here")
+      .flatMap(_.split(" "))
+    val merges = run("tx_bpe_merges").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
+      .toSeq
+    assert(merges == graft.text.TextStatsSpec.refBpe(words, graft.text.TextStats.BpeRounds),
+      s"merges must be trained on the non-NULL docs alone: $merges")
+    val applied = run("tx_bpe_apply").collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(applied == Seq(1L -> 12L, 2L -> 10L),
+      s"doc 99 must have no row (oracle's unnest emits none): $applied")
+  }
+
   // ---- The NULL-fingerprint contract (round 19): a NULL fingerprint is
   // not dedupable. dd_exact's scaladoc states the family rule; these pin
   // each sibling's half of it.

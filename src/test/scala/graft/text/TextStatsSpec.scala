@@ -10,7 +10,12 @@ import graft.TestSpark
   * MORE than two windows with contiguous coverage, and quantized codes must
   * dequantize within the scheme's error bound. */
 class TextStatsSpec extends AnyFunSuite {
+  import TextStatsSpec.refBpe
   lazy val spark = TestSpark.spark
+
+  /** The one BPE trainer over a documents frame, as `bpeMerges` runs it. */
+  private def train(docs: org.apache.spark.sql.DataFrame, rounds: Int) =
+    TextStats.bpeMergesDriverHeap(TextStats.wordFreqDict(docs), rounds)
 
   test("tx_mask_spans: planted doc corrupts to the exact T5 span schedule") {
     val s = spark; import s.implicits._
@@ -265,15 +270,15 @@ class TextStatsSpec extends AnyFunSuite {
     // ONLY (parity rule: the overlapping middle pair never merges), so
     // round 2 sees "aa aa" and picks (aa,aa)=3 — which also proves a merged
     // symbol re-pairs with itself.
-    val m1 = TextStats.bpeMergesUncached(docs("aaaa aaaa aaaa ab ab"), 2)
+    val m1 = train(docs("aaaa aaaa aaaa ab ab"), 2)
     assert(m1 == Seq((1L, "a", "a", "aa", 9L), (2L, "aa", "aa", "aaaa", 3L)),
       s"got $m1")
     // pure tie: (x,y) and (y,z) both count 2 -> lexicographically smallest
     // (lhs, rhs) wins
-    val m2 = TextStats.bpeMergesUncached(docs("xy xy yz yz"), 1)
+    val m2 = train(docs("xy xy yz yz"), 1)
     assert(m2 == Seq((1L, "x", "y", "xy", 2L)), s"got $m2")
     // single-char words contribute no pairs and survive every round
-    val m3 = TextStats.bpeMergesUncached(docs("a b c d"), 1)
+    val m3 = train(docs("a b c d"), 1)
     assert(m3.isEmpty, s"no pairs exist, got $m3")
   }
 
@@ -293,9 +298,10 @@ class TextStatsSpec extends AnyFunSuite {
     // becomes 1 subword except words whose intermediate states pin the
     // greedy rule. Compute expected by replaying the learned merges in
     // Scala on each word.
-    val merges = TextStats.bpeMergesUncached(
+    val merges = train(
       Seq((1L, "aaa aaa aaa aaaa", "en", "s0", 16L), (2L, "aaaa b", "en", "s0", 6L))
         .toDF("doc_id", "text", "lang", "source", "n_chars"), TextStats.BpeRounds)
+    assert(merges == refBpe("aaa aaa aaa aaaa aaaa b".split(" ").toSeq, TextStats.BpeRounds))
     def apply1(syms: List[String], a: String, b: String): List[String] = {
       val out = scala.collection.mutable.ListBuffer.empty[String]
       var i = 0
@@ -316,33 +322,8 @@ class TextStatsSpec extends AnyFunSuite {
     assert(rows == expect, s"got $rows expect $expect (merges=$merges)")
   }
 
-  test("tx_bpe_merges: windows-path training equals the in-memory reference on seeded random corpora") {
+  test("tx_bpe_merges: training equals the in-memory reference on seeded random corpora") {
     val s = spark; import s.implicits._
-    // In-memory reference: standard BPE (weighted naive-adjacent counts,
-    // count-desc/(lhs,rhs)-asc selection, leftmost-greedy rescan apply).
-    def refBpe(words: Map[String, Long], rounds: Int): Seq[(Long, String, String, String, Long)] = {
-      var syms = words.keys.map(w => w -> w.split("").filter(_.nonEmpty).toList).toMap
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
-      for (r <- 1 to rounds) {
-        val cnt = scala.collection.mutable.Map.empty[(String, String), Long]
-        for ((w, f) <- words; Seq(a, b) <- syms(w).sliding(2) if syms(w).length >= 2)
-          cnt((a, b)) = cnt.getOrElse((a, b), 0L) + f
-        if (cnt.nonEmpty) {
-          val ((a, b), c) = cnt.toSeq.minBy { case ((x, y), n) => (-n, x, y) }
-          out += ((r.toLong, a, b, a + b, c))
-          syms = syms.map { case (w, sy) =>
-            val ns = scala.collection.mutable.ListBuffer.empty[String]
-            var i = 0
-            while (i < sy.length) {
-              if (i + 1 < sy.length && sy(i) == a && sy(i + 1) == b) { ns += (a + b); i += 2 }
-              else { ns += sy(i); i += 1 }
-            }
-            w -> ns.toList
-          }
-        }
-      }
-      out.toSeq
-    }
     val rng = new scala.util.Random(7)
     for (trial <- 1 to 6) {
       // tiny alphabet forces dense overlaps and ties — the adversarial zone
@@ -350,23 +331,26 @@ class TextStatsSpec extends AnyFunSuite {
       val words = Seq.fill(5 + rng.nextInt(6))(
         Seq.fill(1 + rng.nextInt(6))("ab" (rng.nextInt(2))).mkString)
       val text = words.mkString(" ")
-      val freqs = words.groupBy(identity).map { case (w, g) => w -> g.size.toLong }
       val docs = Seq((1L, text, "en", "s0", text.length.toLong))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
-      val got = TextStats.bpeMergesUncached(docs, 3)
-      val exp = refBpe(freqs, 3)
+      val got = train(docs, 3)
+      val exp = refBpe(words, 3)
       assert(got == exp, s"trial $trial corpus='$text': got $got expect $exp")
     }
   }
 
-  test("bpeMergesDriverHeap: equals the relational trainer on the fixture and adversarial corpora") {
+  test("bpeMergesDriverHeap: equals the in-memory reference on the fixture and adversarial corpora") {
     val s = spark; import s.implicits._
     // fixture corpus, past the registered depth (stale-heap entries, merged
-    // re-pairing, and posting staleness all get exercised by 24 rounds)
+    // re-pairing, and posting staleness all get exercised by 24 rounds);
+    // the reference counts words with a plain Scala split, independent of
+    // wordFreqDict
     val fixture = graft.Tables.documents(spark, TestSpark.sf)
-    val dict = TextStats.wordFreqDict(fixture)
-    assert(TextStats.bpeMergesDriverHeap(dict, 24) ==
-      TextStats.bpeMergesUncached(fixture, 24))
+    val fixtureWords = fixture.select("text").as[String].collect().toSeq
+      .flatMap(_.trim.split(" +")).filter(_.nonEmpty)
+    val fixtureGot = train(fixture, 24)
+    assert(fixtureGot.length == 24, s"fixture must sustain 24 merges: $fixtureGot")
+    assert(fixtureGot == refBpe(fixtureWords, 24))
     // adversarial: tiny alphabet, dense overlaps and count ties; deeper than
     // any word so the exhausted-heap stop path also runs
     val rng = new scala.util.Random(11)
@@ -375,30 +359,29 @@ class TextStatsSpec extends AnyFunSuite {
         Seq.fill(1 + rng.nextInt(7))("ab" (rng.nextInt(2))).mkString)
       val docs = Seq((1L, words.mkString(" "), "en", "s0", 1L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
-      val got = TextStats.bpeMergesDriverHeap(TextStats.wordFreqDict(docs), 12)
-      val exp = TextStats.bpeMergesUncached(docs, 12)
+      val got = train(docs, 12)
+      val exp = refBpe(words, 12)
       assert(got == exp, s"trial $trial corpus='${words.mkString(" ")}'")
     }
-    // crossover path end-to-end: a past-crossover depth routes bpeMerges
-    // through the driver heap AND the artifact store, and BPE's
-    // prefix-stability makes it directly checkable against the shallow
-    // relational training (merge k never depends on the rounds budget)
-    val deep = TextStats.bpeMerges(spark, TestSpark.sf, TextStats.DriverHeapCrossover + 44)
+    // prefix stability end-to-end through the artifact store: merge k never
+    // depends on the rounds budget, so a deep table starts with the
+    // registered 8-round one
+    val deep = TextStats.bpeMerges(spark, TestSpark.sf, 300)
     val shallow = TextStats.bpeMerges(spark, TestSpark.sf)
     assert(deep.take(shallow.length) == shallow)
     assert(deep.length > shallow.length)
     // non-ASCII tie-break: a supplementary char (U+1D6FC, a surrogate pair)
     // vs a BMP char (U+FF71) with tied pair counts — UTF-16 compareTo would
     // order the surrogate pair FIRST (0xD835 < 0xFF71) while Spark/DuckDB
-    // binary UTF-8 order (= code-point order) puts U+FF71 first. Both
-    // trainers must agree on the code-point order.
+    // binary UTF-8 order (= code-point order) puts U+FF71 first. refBpe
+    // cannot judge this (String.split("") halves the surrogate pair), so
+    // the expected merge is pinned literally.
     val supp = new String(Character.toChars(0x1D6FC)) // 𝛼
     val bmp = "ｱ"                                // ｱ
     val tieDocs = Seq((1L, s"${supp}a ${bmp}a", "en", "s0", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val heapGot = TextStats.bpeMergesDriverHeap(TextStats.wordFreqDict(tieDocs), 1)
-    val relGot = TextStats.bpeMergesUncached(tieDocs, 1)
-    assert(heapGot == relGot, s"tie-break divergence: heap=$heapGot rel=$relGot")
+    val heapGot = train(tieDocs, 1)
+    assert(heapGot == Seq((1L, bmp, "a", bmp + "a", 1L)), s"got $heapGot")
     assert(heapGot.head._2 == bmp,
       s"code-point order must pick U+FF71 over U+1D6FC, got lhs=${heapGot.head._2}")
   }
@@ -495,7 +478,7 @@ class TextStatsSpec extends AnyFunSuite {
     val text = "d't d't d't a\\b a\\b a\\b"
     val docs = Seq((1L, text, "en", "s0", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val merges = TextStats.bpeMergesUncached(docs, 4)
+    val merges = train(docs, 4)
     assert(merges.exists(_._4.contains("'")), s"no quote-carrying merge in $merges")
     assert(merges.exists(_._4.contains("\\")), s"no backslash-carrying merge in $merges")
     val dict = TextStats.bpeSubwordDictFor(docs, merges).collect()
@@ -741,5 +724,36 @@ class TextStatsSpec extends AnyFunSuite {
     val raw = df.select(org.apache.spark.sql.functions
         .expr("size(split(trim(text), ' +'))").as("n")).collect()
     assert(raw(1).getInt(0) == -1, "non-ANSI size(NULL) contract changed?")
+  }
+}
+
+object TextStatsSpec {
+  /** In-memory reference BPE: standard BPE over a corpus's word tokens
+    * (weighted naive-adjacent counts, count-desc/(lhs,rhs)-asc selection,
+    * leftmost-greedy rescan apply), recounting every round. Symbols are
+    * `String.split("")` units, so keep its inputs in the BMP. */
+  def refBpe(tokens: Seq[String], rounds: Int): Seq[(Long, String, String, String, Long)] = {
+    val words = tokens.groupBy(identity).map { case (w, g) => w -> g.size.toLong }
+    var syms = words.keys.map(w => w -> w.split("").filter(_.nonEmpty).toList).toMap
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
+    for (r <- 1 to rounds) {
+      val cnt = scala.collection.mutable.Map.empty[(String, String), Long]
+      for ((w, f) <- words; Seq(a, b) <- syms(w).sliding(2) if syms(w).length >= 2)
+        cnt((a, b)) = cnt.getOrElse((a, b), 0L) + f
+      if (cnt.nonEmpty) {
+        val ((a, b), c) = cnt.toSeq.minBy { case ((x, y), n) => (-n, x, y) }
+        out += ((r.toLong, a, b, a + b, c))
+        syms = syms.map { case (w, sy) =>
+          val ns = scala.collection.mutable.ListBuffer.empty[String]
+          var i = 0
+          while (i < sy.length) {
+            if (i + 1 < sy.length && sy(i) == a && sy(i + 1) == b) { ns += (a + b); i += 2 }
+            else { ns += sy(i); i += 1 }
+          }
+          w -> ns.toList
+        }
+      }
+    }
+    out.toSeq
   }
 }

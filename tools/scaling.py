@@ -11,7 +11,7 @@ meaningful as exponents.
 Usage: python3 tools/scaling.py  (from the repo root; ~40-50 min, idle
 machine — three full-suite benches + the extra-decade bench + two composed
 corpus-pipeline runs + two fresh-JVM warmup probes + the isolated tail
-bench + the 64-round BPE envelope + the rung censuses and the two
+bench + the 32k-merge BPE depth probe + the rung censuses and the two
 kept-vs-verified aggregations, ~6 min of which is the pHash one)
 """
 import json
@@ -903,79 +903,6 @@ def main() -> None:
         "the suite tail is session-state tax, not query work.",
     ]
 
-    # ---- BPE merge-round cost envelope --------------------------------------
-    env_out = subprocess.run(
-        ["sbt", "-batch", "runMain graft.tools.BpeEnvelope /root/testdata/sf0.1 64"],
-        capture_output=True, text=True, env=main_env())
-    m = re.search(r"GRAFT_BPE_ENVELOPE (\{.*\})", env_out.stdout)
-    lines += [
-        "",
-        "## BPE merge-round cost envelope (tx_bpe_merges at production-like depth)",
-        "",
-        "The registered query trains 8 merges; a production vocab is 10^4-10^5,",
-        "and the loop is one driver-coordinated job set per merge round. This",
-        "measures 64 rounds on sf0.1 (graft.tools.BpeEnvelope): each round is",
-        "dictionary-sized (the corpus is touched once, before round 1), so the",
-        "per-round cost should be FLAT in the round index — confirming total",
-        "training cost is rounds x a constant, and the crossover to the",
-        "FastBPE driver-heap shape (documented in TextStats.bpeMergesUncached)",
-        "is a job-submission-latency threshold, not a data-volume one.",
-        "",
-        "An untimed 8-round warm-up run precedes the measurement (round-13",
-        "verdict #4: octile 1 used to read 0.73 s/round vs ~0.3 steady —",
-        "first-touch parquet/codegen/JIT cost billed into the curve's head;",
-        "warmed, the head spike is gone).",
-        "",
-    ]
-    if m:
-        env = json.loads(m.group(1))
-        octs = env["octile_means"]
-        lines += [
-            "| octile (8 rounds each) | " +
-            " | ".join(str(i + 1) for i in range(len(octs))) + " |",
-            "|---|" + "---|" * len(octs),
-            "| mean sec/round | " + " | ".join(f"{t:.2f}" for t in octs) + " |",
-            "",
-            f"Total {env['total']:.1f}s / {env['rounds']} rounds "
-            f"({env['total'] / max(env['rounds'], 1):.2f}s per round); "
-            f"last-octile / first-octile = {env['flatness_last_over_first']:.2f}x. "
-            "The failure mode this envelope guards against is a ratio "
-            "materially ABOVE 1x (per-round cost growing with the "
-            "accumulated merge table = a compounding loop); a mild decline "
-            "is HotSpot still tiering the per-round driver path toward the "
-            "~0.2s job-submission constant, not growth.",
-            "",
-            f"Driver-heap trainer (TextStats.bpeMergesDriverHeap — the "
-            f"FastBPE-shape production path, one distributed dictionary pass "
-            f"then incremental in-heap merges): {env['driver_heap_total']:.2f}s "
-            f"for the same {env['rounds']} merges, output "
-            f"{'EQUAL' if env['driver_heap_equal'] else '** DIVERGED **'} to the "
-            "relational trainer. The relational loop's cost is job-submission "
-            "latency x rounds; bpeMerges switches to the driver heap above "
-            "rounds = TextStats.DriverHeapCrossover (256), where a 32k-merge "
-            "production vocab goes from ~hours of job submission to seconds.",
-        ]
-        if "dict_words" in env:
-            lines += [
-                "",
-                f"Dictionary-collect accounting (round-13 verdict #1 — the "
-                f"driver-heap trainer's one collect): {env['dict_words']} "
-                f"distinct words / {env['dict_bytes']} bytes collected at this "
-                f"fixture scale; with the minCount=2 floor "
-                f"{env['dict_words_minCount2']} words / "
-                f"{env['dict_bytes_minCount2']} bytes "
-                "(the synthetic corpus has no hapax words, so the floor prunes "
-                "nothing HERE — it is the production bound, not a fixture "
-                "optimization: distinct-words-with-freq>=F <= total-tokens/F, "
-                "so a web-scale corpus' 10^8+ hapax vocabulary never reaches "
-                "the driver). Exactness contract + spec: "
-                "TextStats.wordFreqDict scaladoc and TextStatsSpec "
-                "\"wordFreqDict minCount floor\".",
-            ]
-    else:
-        lines.append("BpeEnvelope run FAILED — no GRAFT_BPE_ENVELOPE line "
-                     "(rerun `sbt -batch 'runMain graft.tools.BpeEnvelope'`).")
-
     # ---- BPE driver-heap trainer at production depth (round-16 #3) ---------
     depth_out = subprocess.run(
         ["sbt", "-batch", "runMain graft.tools.BpeDepthProbe /root/testdata/sf0.1 32768"],
@@ -985,7 +912,7 @@ def main() -> None:
         "",
         "## BPE driver-heap trainer at 32k-merge production depth (round-15 verdict #3)",
         "",
-        "The crossover claim (\"a 32k-merge production vocab trains in",
+        "The depth claim (\"a 32k-merge production vocab trains in",
         "seconds on the driver heap\") measured instead of extrapolated",
         "(graft.tools.BpeDepthProbe). Two dictionaries: the REAL sf0.1",
         "dictionary (which exhausts long before 32k — the fixture corpus has",
@@ -1014,15 +941,13 @@ def main() -> None:
             f"train in {dep['syn_sec']:.1f}s on the driver with a "
             f"{dep['syn_heap_peak_mb']:.0f} MB heap peak — the FastBPE-shape "
             "incremental trainer (lazy heap + pair→word postings, "
-            "TextBpe.bpeMergesDriverHeap) is vocabulary-bounded as designed, "
-            "and the DriverHeapCrossover=256 switch is conservative by ~2 "
-            "orders of magnitude against the relational loop's ~0.2s/round "
-            "job-submission floor (32k relational rounds ≈ 1.8h of submission "
-            "latency vs this measured figure). The fixture dictionary "
+            "TextBpe.bpeMergesDriverHeap — the one BPE trainer, behind the "
+            "registered 8-round queries and the corpus pipeline alike) is "
+            "vocabulary-bounded as designed: no merge round submits a Spark "
+            "job, so depth costs heap operations only. The fixture dictionary "
             f"exhausts at {dep['fixture_merges']} merges in "
-            f"{dep['fixture_sec']:.3f}s — exhaustion BREAKS the loop "
-            "(no dead-round job submissions), the same rule both trainers "
-            "state.",
+            f"{dep['fixture_sec']:.3f}s — the trainer stops once no pair is "
+            "left instead of running dead rounds.",
         ]
     else:
         lines.append("BpeDepthProbe run FAILED — no GRAFT_BPE_DEPTH line "
