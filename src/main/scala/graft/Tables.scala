@@ -63,25 +63,12 @@ object Tables {
     * column, sql_queries.py:16-28) is `ts: LongType` nanos; fixtures have
     * shipped it both as parquet TIMESTAMP(NANOS) (read as BIGINT via
     * `nanosAsLong`) and as TIMESTAMP(MICROS) (read as a timestamp type).
-    * Dispatching on the observed dtype here — instead of at the ~20 call
-    * sites doing `ts div 1000000` — means a fixture regeneration changes
-    * exactly one line of plan, not 20 queries. The session TZ is pinned
-    * UTC (Sessions.scala), so casting a TIMESTAMP_NTZ value to timestamp
-    * is exact and `unix_micros * 1000` loses nothing the reference kept.
-    *
-    * TIMELINE DOMAIN: non-negative epoch (ts ≥ 0, i.e. 1970+), matching
-    * the reference's log data (epoch-ms app logs, sql_queries.py:152).
-    * Every ms/hour/day/week bucketing in the engine uses Spark `div`,
-    * and its oracles use DuckDB `//` and `epoch_ms`: BOTH truncate toward
-    * zero (DuckDB 1.0.0: `(-1500000)::BIGINT // 1000000` is -1), so a
-    * pre-1970 event lands in the same WRONG bucket in both engines (day 0
-    * for 1969-12-31 23:59:59, hour-of-day -2 for 22:00 that day) and no
-    * hash mismatch shows it. A pre-1970 timestamp is therefore outside
-    * the stated domain (the corresponding class for UNKNOWN positions —
-    * NULL ts — has a full contract: kept as accounting groups, excluded
-    * from timelines). TablesSpec's 2020-2030 range check on the fixture
-    * is the only guard; a pre-1970 feed needs exact floor division at
-    * every call site. */
+    * Dispatching on the observed dtype here means a fixture regeneration
+    * changes exactly one line of plan. The session TZ is pinned UTC
+    * (Sessions.scala), so casting a TIMESTAMP_NTZ value to timestamp is
+    * exact and `unix_micros * 1000` loses nothing the reference kept.
+    * Every time bucket of `ts` (ms, second, hour, day, week, hour-of-day)
+    * and its oracle text goes through [[EpochTime]]. */
   def events(s: SparkSession, d: String): DataFrame = {
     val df = read(s, d, "events")
     df.schema("ts").dataType match {

@@ -163,8 +163,7 @@ object RunCorpusPipeline {
       .drop("thresh")
     // 4. split on sampler-disjoint bits.
     val splitDocs = graft.text.TextStats.withSplit(sampled).drop("h16")
-    splitDocs.write.mode("overwrite").partitionBy("split")
-      .parquet(s"$outDir/shards.parquet")
+    graft.sources.Layout.writePartitioned(splitDocs, s"$outDir/shards.parquet", "split")
     val shards = spark.read.schema(splitDocs.schema).parquet(s"$outDir/shards.parquet")
     val nSampled = shards.count()
     val splitCounts = shards.groupBy(col("split")).count()
@@ -184,8 +183,7 @@ object RunCorpusPipeline {
         Seq("split", "source"))
       .select(Seq(col("split"), col("source"), col("doc_id"), col("n_tokens"))
         ++ graft.text.TextStats.windowIndexCols: _*)
-    packed.write.mode("overwrite").partitionBy("split")
-      .parquet(s"$outDir/packed.parquet")
+    graft.sources.Layout.writePartitioned(packed, s"$outDir/packed.parquet", "split")
     val nPacked = spark.read.schema(packed.schema).parquet(s"$outDir/packed.parquet").count()
     stageDone("pack")
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{EpochTime, Tables}
 
 /** Star-schema ELT: the reference's five INSERT…SELECT pipelines
   * (/root/reference/sql_queries.py:140-220) re-expressed Spark-first over the
@@ -12,7 +12,8 @@ import graft.Tables
   *
   * Semantics deliberately preserved from the reference (SURVEY.md §2):
   *  - E1: epoch-millis BIGINT → TIMESTAMP via *integer* division by 1000
-  *    (sql_queries.py:152,211) — `ms div 1000`, never double division.
+  *    (sql_queries.py:152,211) — exact floor division ([[EpochTime]]),
+  *    never double division.
   *  - DECIMAL(9,0) load-rounding: the J1 join compares HALF_UP-rounded
   *    measurements (sql_queries.py:34,59,164).
   *  - A2 quirk: the users dedup key includes the mutable attribute, so one
@@ -36,21 +37,20 @@ object StarEtl {
   /** staging_events analog: fixture `events` plus the BIGINT epoch-millis
     * column the reference stages as `ts` (sql_queries.py:43).
     *
-    * The fixture stores `ts` as parquet TIMESTAMP(NANOS), which Spark only
-    * reads with `spark.sql.legacy.parquet.nanosAsLong=true` (set by
-    * [[graft.Sessions]]) — so `ts` arrives as BIGINT nanoseconds, just like
-    * the reference's staged BIGINT epoch. ns→ms MUST be integer division:
-    * a double-divide can round up across an integer boundary (quotients sit
-    * within 1e-6 of an integer, below double ulp at 1e12). */
+    * [[Tables.events]] hands `ts` over as BIGINT epoch-nanos, just like the
+    * reference's staged BIGINT epoch; `ms` is its [[EpochTime.Ms]] floor —
+    * exact BIGINT division (a double-divide can round up across an integer
+    * boundary), and a pre-1970 instant's ms is floored, not truncated. */
   def stagingEvents(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.events(spark, sfDir).withColumn("ms", expr("ts div 1000000"))
+    Tables.events(spark, sfDir).withColumn("ms", EpochTime.Ms.of(col("ts")))
 
   /** E1 — `TIMESTAMP 'epoch' + ts/1000 * INTERVAL '1 second'`
-    * (sql_queries.py:152): BIGINT integer division truncates the millisecond
-    * component before the timestamp is built. Epoch millis are positive, so
-    * divide-then-cast truncation equals the reference's integer division. */
+    * (sql_queries.py:152): BIGINT division drops the millisecond component
+    * before the timestamp is built. The division floors ([[EpochTime]]), so
+    * it equals the reference's truncating `/` on every ms ≥ 0, and a
+    * pre-1970 ms lands in its own calendar second instead of the next one. */
   def epochToTimestamp(ms: Column): Column =
-    timestamp_seconds(call_function("div", ms, lit(1000)))
+    timestamp_seconds(EpochTime.floorDiv(ms, EpochTime.Second.ms))
 
   private def startTime = epochToTimestamp(expr("ms")).as("start_time")
 

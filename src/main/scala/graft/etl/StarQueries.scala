@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.QueryDef
+import graft.{EpochTime, QueryDef}
 
 /** Driver-facing registrations for the star-schema ETL (StarEtl) with their
   * DuckDB oracles. The two `*_fixed` entries are the documented deviations
@@ -16,7 +16,7 @@ import graft.QueryDef
   */
 object StarQueries {
   /** The oracle's staged view events (the [[StarEtl.stagingEvents]] analog). */
-  private val SeCte = "se AS (SELECT *, epoch_ms(ts) AS ms FROM events WHERE event_type = 'view')"
+  private val SeCte = s"se AS (SELECT *, ${EpochTime.Ms.sql("ts")} AS ms FROM events WHERE event_type = 'view')"
 
   /** [[StarEtl.songDim]]'s oracle: the DECIMAL(9,0)-rounded purchase dim. */
   private val DimCte =
@@ -26,7 +26,7 @@ object StarQueries {
 
   /** The songplays build over `se` and `dim`. */
   private val SongplaysSelect =
-    """SELECT DISTINCT make_timestamp((se.ms // 1000) * 1000000) AS start_time,
+    s"""SELECT DISTINCT make_timestamp(${EpochTime.floorDivSql("se.ms", EpochTime.Second.ms)} * 1000000) AS start_time,
       |       CAST(se.user_id AS VARCHAR) AS user_id, dim.song_id,
       |       CAST(se.event_id AS VARCHAR) AS session_id, se.props AS user_agent
       |FROM se JOIN dim ON se.user_id = dim.d_user
@@ -58,10 +58,10 @@ object StarQueries {
     QueryDef(
       "users_fixed",
       (s, d) => StarEtl.usersFixed(s, d),
-      Some("""SELECT user_id, level FROM (
-             |  SELECT user_id, json_extract_string(props, '$.k') AS level,
+      Some(s"""SELECT user_id, level FROM (
+             |  SELECT user_id, json_extract_string(props, '$$.k') AS level,
              |         row_number() OVER (PARTITION BY user_id
-             |                            ORDER BY epoch_ms(ts) DESC, event_id DESC) AS rn
+             |                            ORDER BY ${EpochTime.Ms.sql("ts")} DESC, event_id DESC) AS rn
              |  FROM events WHERE event_type = 'view')
              |WHERE rn = 1 ORDER BY user_id NULLS FIRST""".stripMargin)),
     QueryDef(
@@ -79,7 +79,7 @@ object StarQueries {
     QueryDef(
       "time_build",
       StarSchema.time.frame,
-      Some("""WITH t AS (SELECT DISTINCT make_timestamp((epoch_ms(ts) // 1000) * 1000000) AS start_time
+      Some(s"""WITH t AS (SELECT DISTINCT ${EpochTime.secondStartSql("ts")} AS start_time
              |           FROM events WHERE event_type = 'view')
              |SELECT start_time,
              |       CAST(hour(start_time) AS INTEGER) AS hour,
@@ -92,7 +92,7 @@ object StarQueries {
     QueryDef(
       "time_fixed",
       (s, d) => StarSchema.time.present(StarEtl.timeFixed(s, d)),
-      Some("""WITH t AS (SELECT DISTINCT make_timestamp((epoch_ms(ts) // 1000) * 1000000) AS start_time
+      Some(s"""WITH t AS (SELECT DISTINCT ${EpochTime.secondStartSql("ts")} AS start_time
              |           FROM events WHERE event_type = 'view')
              |SELECT start_time,
              |       CAST(hour(start_time) AS INTEGER) AS hour,

@@ -88,7 +88,7 @@ object Multimodal {
     * explicit band width — the frame both the pair expansion buckets on and
     * the entropy guard censuses. Factored (round 18) so the guard's
     * distinct-bucket count and the expansion can never band differently. */
-  private[mm] def phashBands(s: SparkSession, d: String, bits: Int): DataFrame = {
+  private[graft] def phashBands(s: SparkSession, d: String, bits: Int): DataFrame = {
     val ph = decodeLumaPartitions(
         Tables.documents(s, d)
           .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")),

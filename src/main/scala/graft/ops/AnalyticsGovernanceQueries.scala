@@ -4,7 +4,7 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.{EpochTime, QueryDef, Tables}
 
 /** The dataset-GOVERNANCE half of the analytics query surface (round-17
   * split, same template as [[AnalyticsOlapQueries]]): deterministic
@@ -238,13 +238,13 @@ private[ops] trait AnalyticsGovernanceQueries { this: Analytics.type =>
       "an_shard_drift",
       (s, d) => tvDriftByUnit(
           Tables.events(s, d)
-            .select(expr("(ts div 1000000) div 86400000").as("day"), col("event_type")),
+            .select(EpochTime.Day.of(col("ts")).as("day"), col("event_type")),
           "day", "event_type", "n_events")
         // NULL day (a NULL-ts event's bucket) is a legitimate accounting
         // group in a monitor — kept, with the null direction pinned on both
         // sides (Spark ASC is NULLS FIRST, DuckDB NULLS LAST).
         .orderBy(col("day").asc_nulls_first),
-      Some("""WITH e AS (SELECT epoch_ms(ts) // 86400000 AS day, event_type FROM events),
+      Some(s"""WITH e AS (SELECT ${EpochTime.Day.sql("ts")} AS day, event_type FROM events),
              |sh AS (SELECT day, event_type, COUNT(*) AS cnt FROM e GROUP BY 1, 2),
              |tot AS (SELECT day, CAST(SUM(cnt) AS BIGINT) AS tot FROM sh GROUP BY 1),
              |g AS (SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS gcnt FROM sh GROUP BY 1),
@@ -346,7 +346,7 @@ private[ops] trait AnalyticsGovernanceQueries { this: Analytics.type =>
       "an_volume_anomaly",
       (s, d) => {
         val daily = Tables.events(s, d)
-          .select(expr("(ts div 1000000) div 86400000").as("day"))
+          .select(EpochTime.Day.of(col("ts")).as("day"))
           .groupBy(col("day")).agg(count(lit(1)).as("n_events"))
         val stats = daily.agg(count(lit(1)).as("n"),
           sum(col("n_events")).as("s"),
@@ -364,7 +364,7 @@ private[ops] trait AnalyticsGovernanceQueries { this: Analytics.type =>
           // an_shard_drift's NULL-day accounting-group pin
           .orderBy(col("day").asc_nulls_first)
       },
-      Some("""WITH daily AS (SELECT epoch_ms(ts) // 86400000 AS day, COUNT(*) AS n_events
+      Some(s"""WITH daily AS (SELECT ${EpochTime.Day.sql("ts")} AS day, COUNT(*) AS n_events
              |               FROM events GROUP BY 1),
              |st AS (SELECT COUNT(*) AS n, CAST(SUM(n_events) AS BIGINT) AS s,
              |              SUM(CAST(n_events AS HUGEINT) * n_events) AS sq
@@ -505,7 +505,7 @@ private[ops] trait AnalyticsGovernanceQueries { this: Analytics.type =>
       "an_kanon_audit",
       (s, d) => Tables.events(s, d)
         .select(col("event_type"),
-          expr("(ts div 1000000 div 3600000) % 24").as("hour_of_day"),
+          EpochTime.hourOfDay(col("ts")).as("hour_of_day"),
           // Tables.centsSql's measure guard (NaN or |x| > 9e16 → NULL)
           expr("CAST(floor(CASE WHEN isnan(value) OR abs(value) > 9e16D THEN NULL ELSE value END / 10.0D) AS BIGINT)").as("value_decade"),
           col("user_id"))
@@ -522,7 +522,7 @@ private[ops] trait AnalyticsGovernanceQueries { this: Analytics.type =>
         .orderBy(col("event_type").asc_nulls_first,
           col("hour_of_day").asc_nulls_first,
           col("value_decade").asc_nulls_first),
-      Some("""SELECT event_type, (epoch_ms(ts) // 3600000) % 24 AS hour_of_day,
+      Some(s"""SELECT event_type, ${EpochTime.hourOfDaySql("ts")} AS hour_of_day,
              |       CAST(floor(CASE WHEN (isfinite(value) AND abs(value) <= 9e16) THEN value END / 10) AS BIGINT) AS value_decade,
              |       COUNT(*) AS n_events, COUNT(DISTINCT user_id) AS n_users,
              |       CASE WHEN COUNT(DISTINCT user_id) >= 5 THEN 'ok'
@@ -599,7 +599,7 @@ private[ops] trait AnalyticsGovernanceQueries { this: Analytics.type =>
       (s, d) => {
         val perType = Tables.events(s, d)
           .groupBy(col("event_type"))
-          .agg(max(expr("ts div 1000000")).as("max_ms"))
+          .agg(max(EpochTime.Ms.of(col("ts"))).as("max_ms"))
         val global = perType.agg(max(col("max_ms")).as("global_max_ms"))
         perType.crossJoin(broadcast(global))
           .select(col("event_type"), col("max_ms"),
@@ -609,7 +609,7 @@ private[ops] trait AnalyticsGovernanceQueries { this: Analytics.type =>
           // NULL event_type is an accounting group — kept, null pin both sides
           .orderBy(col("event_type").asc_nulls_first)
       },
-      Some("""WITH m AS (SELECT event_type, MAX(epoch_ms(ts)) AS max_ms
+      Some(s"""WITH m AS (SELECT event_type, MAX(${EpochTime.Ms.sql("ts")}) AS max_ms
              |          FROM events GROUP BY 1),
              |g AS (SELECT MAX(max_ms) AS global_max_ms FROM m)
              |SELECT event_type, max_ms, global_max_ms - max_ms AS lag_ms,
@@ -636,7 +636,7 @@ private[ops] trait AnalyticsGovernanceQueries { this: Analytics.type =>
       (s, d) => {
         val td = Tables.events(s, d)
           .select(col("event_type"),
-            expr("(ts div 1000000) div 86400000").as("day")).distinct()
+            EpochTime.Day.of(col("ts")).as("day")).distinct()
         val span = td.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
         td.groupBy(col("event_type")).agg(count(lit(1)).as("n_days_present"))
           .crossJoin(broadcast(span))
@@ -648,8 +648,8 @@ private[ops] trait AnalyticsGovernanceQueries { this: Analytics.type =>
           // NULL event_type is an accounting group — kept, null pin both sides
           .orderBy(col("event_type").asc_nulls_first)
       },
-      Some("""WITH td AS (SELECT DISTINCT event_type,
-             |              epoch_ms(ts) // 86400000 AS day FROM events),
+      Some(s"""WITH td AS (SELECT DISTINCT event_type,
+             |              ${EpochTime.Day.sql("ts")} AS day FROM events),
              |span AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM td),
              |p AS (SELECT event_type, COUNT(*) AS n_days_present FROM td GROUP BY 1)
              |SELECT event_type, n_days_present, hi - lo + 1 AS span_days,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.{EpochTime, QueryDef, Tables}
 
 /** The OLAP half of the analytics query surface (split out of
   * Analytics.scala in round 17 — same package, no behavior change; the
@@ -325,7 +325,7 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
         val e = Tables.events(s, d)
           // an_sessionize's NULL-EVENT CONTRACT: no owner / no position
           .filter(col("user_id").isNotNull && col("ts").isNotNull)
-          .select(col("user_id"), col("event_type"), expr("ts div 1000000").as("ms"))
+          .select(col("user_id"), col("event_type"), EpochTime.Ms.of(col("ts")).as("ms"))
         val firstView = e.filter(col("event_type") === "view")
           .groupBy(col("user_id")).agg(min(col("ms")).as("first_view_ms"))
         val purchases = e.filter(col("event_type") === "purchase")
@@ -338,7 +338,7 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
           .withColumn("lag_ms", col("first_purchase_ms") - col("first_view_ms"))
           .orderBy("user_id")
       },
-      Some("""WITH ev AS (SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events
+      Some(s"""WITH ev AS (SELECT user_id, event_type, ${EpochTime.Ms.sql("ts")} AS ms FROM events
              |            WHERE user_id IS NOT NULL AND ts IS NOT NULL),
              |fv AS (SELECT user_id, MIN(ms) AS first_view_ms
              |            FROM ev WHERE event_type = 'view' GROUP BY user_id),
@@ -479,14 +479,14 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
         val e = Tables.events(s, d)
           // an_sessionize's NULL-EVENT CONTRACT: no owner / no position
           .filter(col("user_id").isNotNull && col("ts").isNotNull)
-          .select(col("user_id"), expr("(ts div 1000000) div 604800000").as("wk"))
+          .select(col("user_id"), EpochTime.Week.of(col("ts")).as("wk"))
         val first = e.groupBy(col("user_id")).agg(min(col("wk")).as("cohort_wk"))
         e.join(first, "user_id")
           .groupBy(col("cohort_wk"), (col("wk") - col("cohort_wk")).as("offset_wk"))
           .agg(countDistinct(col("user_id")).as("n_users"))
           .orderBy("cohort_wk", "offset_wk")
       },
-      Some("""WITH e AS (SELECT user_id, epoch_ms(ts) // 604800000 AS wk FROM events
+      Some(s"""WITH e AS (SELECT user_id, ${EpochTime.Week.sql("ts")} AS wk FROM events
              |           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
              |f AS (SELECT user_id, MIN(wk) AS cohort_wk FROM e GROUP BY user_id)
              |SELECT f.cohort_wk, e.wk - f.cohort_wk AS offset_wk,
@@ -559,7 +559,7 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
           .partitionBy(col("user_id")).orderBy(col("ms"))
         Tables.events(s, d)
           .filter(col("user_id").isNotNull && col("ts").isNotNull)
-          .select(col("user_id"), expr("ts div 1000000").as("ms"))
+          .select(col("user_id"), EpochTime.Ms.of(col("ts")).as("ms"))
           .withColumn("new_sess",
             when(col("ms") - lag(col("ms"), 1).over(w) > 1800000L, 1L)
               .otherwise(when(lag(col("ms"), 1).over(w).isNull, 1L).otherwise(0L)))
@@ -572,7 +572,7 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
           .withColumn("dur_ms", col("end_ms") - col("start_ms"))
           .orderBy("user_id", "session_seq")
       },
-      Some("""WITH e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events
+      Some(s"""WITH e AS (SELECT user_id, ${EpochTime.Ms.sql("ts")} AS ms FROM events
              |           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
              |m AS (SELECT user_id, ms,
              |        CASE WHEN lag(ms) OVER (PARTITION BY user_id ORDER BY ms) IS NULL
@@ -619,7 +619,7 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
           // an_sessionize's NULL-EVENT CONTRACT: no owner / no position
           .filter(col("user_id").isNotNull && col("ts").isNotNull)
           .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("ts div 1000000").as("ms"))
+            EpochTime.Ms.of(col("ts")).as("ms"))
           .withColumn("new_sess",
             when(lag(col("ms"), 1).over(wu).isNull, 1L)
               .when(col("ms") - lag(col("ms"), 1).over(wu) > 1800000L, 1L)
@@ -633,7 +633,7 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
             col("first_type"), (col("ms") - col("first_ms")).as("ms_to_convert"))
           .orderBy("event_id")
       },
-      Some("""WITH e AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ms
+      Some(s"""WITH e AS (SELECT event_id, user_id, event_type, ${EpochTime.Ms.sql("ts")} AS ms
              |           FROM events
              |           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
              |m AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL

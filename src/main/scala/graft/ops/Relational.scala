@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{QueryDef, Tables}
+import graft.{EpochTime, QueryDef, Tables}
 
 /** Per-operator micro-queries: one `queries` entry per inventory row of
   * SURVEY.md §2, plus the relational breadth (join types, aggregation
@@ -82,7 +82,7 @@ object Relational {
         col("o_orderkey"), lit(null).cast("long").as("event_id"))
     val events = Tables.events(s, d)
       .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("user_id").as("k"), expr("ts div 1000000").as("t"),
+      .select(col("user_id").as("k"), EpochTime.Ms.of(col("ts")).as("t"),
         lit(0).as("is_order"), lit(null).cast("long").as("o_orderkey"),
         col("event_id"))
     val w = Window.partitionBy(col("k"))
@@ -102,10 +102,10 @@ object Relational {
       (s, d) => Tables.events(s, d)
         .select(
           col("event_id"),
-          expr("ts div 1000000").as("ms"),
+          EpochTime.Ms.of(col("ts")).as("ms"),
           col("user_id"), col("event_type"), col("value"), col("props"))
         .orderBy("event_id"),
-      Some("""SELECT event_id, epoch_ms(ts) AS ms, user_id, event_type, value, props
+      Some(s"""SELECT event_id, ${EpochTime.Ms.sql("ts")} AS ms, user_id, event_type, value, props
              |FROM events ORDER BY event_id""".stripMargin)),
     QueryDef(
       "s2_scan_part",
@@ -150,12 +150,12 @@ object Relational {
       (s, d) => Tables.events(s, d)
         .select(
           col("event_id"),
-          expr("ts div 1000000").as("ms"),
-          expr("(ts div 1000000) div 1000").as("sec"),
-          timestamp_seconds(expr("(ts div 1000000) div 1000")).as("start_time"))
+          EpochTime.Ms.of(col("ts")).as("ms"),
+          EpochTime.Second.of(col("ts")).as("sec"),
+          EpochTime.secondStart(col("ts")).as("start_time"))
         .orderBy("event_id"),
-      Some("""SELECT event_id, epoch_ms(ts) AS ms, epoch_ms(ts) // 1000 AS sec,
-             |       make_timestamp((epoch_ms(ts) // 1000) * 1000000) AS start_time
+      Some(s"""SELECT event_id, ${EpochTime.Ms.sql("ts")} AS ms, ${EpochTime.Second.sql("ts")} AS sec,
+             |       ${EpochTime.secondStartSql("ts")} AS start_time
              |FROM events ORDER BY event_id""".stripMargin)),
 
     // ---- Join family -----------------------------------------------------
@@ -250,12 +250,12 @@ object Relational {
         .filter(col("is_order") === 0 && col("asof_orderkey").isNotNull)
         .select(col("event_id"), col("k").as("user_id"), col("asof_orderkey"))
         .orderBy("event_id"),
-      Some("""WITH o AS (SELECT o_custkey AS k, epoch_ms(o_orderdate) AS t,
+      Some(s"""WITH o AS (SELECT o_custkey AS k, epoch_ms(o_orderdate) AS t,
              |                  MAX(o_orderkey) AS o_orderkey
              |           FROM orders
              |           WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL
              |           GROUP BY 1, 2),
-             |e AS (SELECT user_id AS k, epoch_ms(ts) AS t, event_id FROM events
+             |e AS (SELECT user_id AS k, ${EpochTime.Ms.sql("ts")} AS t, event_id FROM events
              |      WHERE user_id IS NOT NULL AND ts IS NOT NULL)
              |SELECT e.event_id, e.k AS user_id, o.o_orderkey AS asof_orderkey
              |FROM e ASOF JOIN o ON e.k = o.k AND e.t >= o.t
@@ -279,12 +279,12 @@ object Relational {
           .select(col("event_id"), col("k").as("user_id"), col("asof_orderkey"))
           .orderBy("event_id")
       },
-      Some("""WITH o AS (SELECT o_custkey AS k, epoch_ms(o_orderdate) AS t,
+      Some(s"""WITH o AS (SELECT o_custkey AS k, epoch_ms(o_orderdate) AS t,
              |                  MAX(o_orderkey) AS o_orderkey
              |           FROM orders
              |           WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL
              |           GROUP BY 1, 2),
-             |e AS (SELECT user_id AS k, epoch_ms(ts) AS t, event_id FROM events
+             |e AS (SELECT user_id AS k, ${EpochTime.Ms.sql("ts")} AS t, event_id FROM events
              |      WHERE user_id IS NOT NULL AND ts IS NOT NULL)
              |SELECT e.event_id, e.k AS user_id, o.o_orderkey AS asof_orderkey
              |FROM e ASOF JOIN o ON e.k = o.k AND e.t >= o.t
@@ -300,8 +300,7 @@ object Relational {
     QueryDef(
       "jn_range",
       (s, d) => {
-        val DayMs = 86400000L
-        val W = 30 * DayMs
+        val W = 30 * EpochTime.Day.ms
         val o = Tables.orders(s, d).select(
           col("o_custkey").as("k"),
           col("o_orderkey"),

@@ -223,14 +223,14 @@ object Ingest {
           count(lit(1)).as("n_rows"))
         read.crossJoin(broadcast(chk))
           .select(col("evt_id"),
-            expr("""CASE WHEN n_rows > 0 AND n_ts = 0
-                   |  THEN CAST(raise_error(
-                   |    'staged events JSON: every ts_ns read null — serialized type drifted from BIGINT nanos') AS BIGINT)
-                   |  ELSE ts_ns div 1000000 END""".stripMargin).as("ms"),
+            when(col("n_rows") > 0 && col("n_ts") === 0,
+                raise_error(lit("staged events JSON: every ts_ns read null — " +
+                  "serialized type drifted from BIGINT nanos")).cast(LongType))
+              .otherwise(graft.EpochTime.Ms.of(col("ts_ns"))).as("ms"),
             col("uid"), col("etype"), col("val"), col("props_json"))
           .orderBy("evt_id")
       },
-      Some("""SELECT event_id AS evt_id, epoch_ms(ts) AS ms, user_id AS uid,
+      Some(s"""SELECT event_id AS evt_id, ${graft.EpochTime.Ms.sql("ts")} AS ms, user_id AS uid,
              |       event_type AS etype, value AS val, props AS props_json
              |FROM events ORDER BY evt_id""".stripMargin)))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.QueryDef
+import graft.{EpochTime, QueryDef}
 
 /** Incremental/streaming extension of the event pipeline (SURVEY.md §2.7:
   * the reference is batch-only; its ts-stamped append-only event grain maps
@@ -102,7 +102,7 @@ object EventsStream extends Serializable {
 
   private def hourly(events: DataFrame): DataFrame =
     events
-      .withColumn("start_time", timestamp_seconds(expr("(ts div 1000000) div 1000")))
+      .withColumn("start_time", EpochTime.secondStart(col("ts")))
       .withColumn("cents", expr(graft.Tables.centsSql("value")))
       .groupBy(
         date_trunc("hour", col("start_time")).as("hour_ts"),
@@ -140,7 +140,7 @@ object EventsStream extends Serializable {
   private def enrichSegment(events: DataFrame, customer: DataFrame): DataFrame =
     events
       .filter(col("event_type") === "purchase")
-      .withColumn("start_time", timestamp_seconds(expr("(ts div 1000000) div 1000")))
+      .withColumn("start_time", EpochTime.secondStart(col("ts")))
       .withColumn("cents", expr(graft.Tables.centsSql("value")))
       .join(broadcast(customer.select(col("c_custkey"), col("c_mktsegment"))),
         col("user_id") === col("c_custkey"))
@@ -167,7 +167,7 @@ object EventsStream extends Serializable {
       queryName, Seq("hour_ts", "segment"))
 
   /** Session gap: a new session starts after 60 minutes of user inactivity. */
-  val SessionGapMs = 3600000L
+  val SessionGapMs = EpochTime.Hour.ms
 
   /** Batch sessionization — gaps-and-islands with window functions: flag
     * session starts via lag(), number sessions via a running sum, aggregate
@@ -184,7 +184,7 @@ object EventsStream extends Serializable {
       // unfiltered NULL would crash the stateful path outright) and in the
       // oracle's WHERE.
       .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("user_id"), col("event_id"), expr("ts div 1000000").as("ms"),
+      .select(col("user_id"), col("event_id"), EpochTime.Ms.of(col("ts")).as("ms"),
         expr(graft.Tables.centsSql("value")).as("cents"))
       .withColumn("prev_ms", lag(col("ms"), 1).over(byUser))
       .withColumn("brk",
@@ -270,7 +270,7 @@ object EventsStream extends Serializable {
       // sessionizeBatch's NULL-EVENT CONTRACT (stream≡batch; also keeps
       // NULLs out of the primitive-Long Ev encoder and the watermark)
       .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("user_id"), col("event_id"), expr("ts div 1000000").as("ms"),
+      .select(col("user_id"), col("event_id"), EpochTime.Ms.of(col("ts")).as("ms"),
         expr(graft.Tables.centsSql("value")).as("cents"))
       .withColumn("et", expr("timestamp_millis(ms)"))
       .withWatermark("et", watermarkDelay)
@@ -338,14 +338,14 @@ object EventsStream extends Serializable {
     QueryDef(
       "st_sessionize",
       (s, d) => sessionizeBatch(s, d),
-      Some("""WITH g AS (
-             |  SELECT user_id, event_id, epoch_ms(ts) AS ms,
+      Some(s"""WITH g AS (
+             |  SELECT user_id, event_id, ${EpochTime.Ms.sql("ts")} AS ms,
              |         CAST(round(CASE WHEN (isfinite(value) AND abs(value) <= 9e16) THEN value END * 100) AS BIGINT) AS cents,
-             |         lag(epoch_ms(ts)) OVER (PARTITION BY user_id
-             |                                 ORDER BY epoch_ms(ts), event_id) AS prev_ms
+             |         lag(${EpochTime.Ms.sql("ts")}) OVER (PARTITION BY user_id
+             |                                 ORDER BY ${EpochTime.Ms.sql("ts")}, event_id) AS prev_ms
              |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
              |b AS (
-             |  SELECT *, CASE WHEN prev_ms IS NULL OR ms - prev_ms > 3600000
+             |  SELECT *, CASE WHEN prev_ms IS NULL OR ms - prev_ms > $SessionGapMs
              |                 THEN 1 ELSE 0 END AS brk FROM g),
              |sessions AS (
              |  SELECT *, SUM(brk) OVER (PARTITION BY user_id ORDER BY ms, event_id
@@ -358,7 +358,7 @@ object EventsStream extends Serializable {
     QueryDef(
       "st_hourly_counts",
       (s, d) => hourlyCountsBatch(s, d),
-      Some("""SELECT CAST(date_trunc('hour', make_timestamp((epoch_ms(ts) // 1000) * 1000000))
+      Some(s"""SELECT CAST(date_trunc('hour', ${EpochTime.secondStartSql("ts")})
              |            AS TIMESTAMP) AS hour_ts,
              |       event_type, COUNT(*) AS n,
              |       CAST(SUM(CAST(round(CASE WHEN (isfinite(value) AND abs(value) <= 9e16) THEN value END * 100) AS BIGINT)) AS BIGINT) AS sum_cents
@@ -367,7 +367,7 @@ object EventsStream extends Serializable {
     QueryDef(
       "st_enrich_segment",
       (s, d) => enrichSegmentBatch(s, d),
-      Some("""SELECT CAST(date_trunc('hour', make_timestamp((epoch_ms(ts) // 1000) * 1000000))
+      Some(s"""SELECT CAST(date_trunc('hour', ${EpochTime.secondStartSql("ts")})
              |            AS TIMESTAMP) AS hour_ts,
              |       c_mktsegment AS segment, COUNT(*) AS n,
              |       CAST(SUM(CAST(round(CASE WHEN (isfinite(value) AND abs(value) <= 9e16) THEN value END * 100) AS BIGINT)) AS BIGINT) AS sum_cents
@@ -388,7 +388,7 @@ object EventsStream extends Serializable {
     QueryDef(
       "st_drift",
       (s, d) => driftFromCounts(dayTypeCounts(graft.Tables.events(s, d))),
-      Some("""WITH e AS (SELECT epoch_ms(ts) // 86400000 AS day, event_type FROM events),
+      Some(s"""WITH e AS (SELECT ${EpochTime.Day.sql("ts")} AS day, event_type FROM events),
              |sh AS (SELECT day, event_type, COUNT(*) AS cnt FROM e GROUP BY 1, 2),
              |tot AS (SELECT day, CAST(SUM(cnt) AS BIGINT) AS tot FROM sh GROUP BY 1),
              |g AS (SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS gcnt FROM sh GROUP BY 1),
@@ -408,8 +408,8 @@ object EventsStream extends Serializable {
     QueryDef(
       "st_kanon_gate",
       (s, d) => kanonGateBatch(s, d),
-      Some("""WITH q AS (SELECT event_id, event_type,
-             |         (epoch_ms(ts) // 3600000) % 24 AS hour_of_day,
+      Some(s"""WITH q AS (SELECT event_id, event_type,
+             |         ${EpochTime.hourOfDaySql("ts")} AS hour_of_day,
              |         CAST(round(CASE WHEN (isfinite(value) AND abs(value) <= 9e16) THEN value END * 100) AS BIGINT) AS cents, user_id
              |       FROM events),
              |ok AS (SELECT event_type, hour_of_day FROM q WHERE event_id % 5 <> 0
@@ -427,7 +427,7 @@ object EventsStream extends Serializable {
     * a single aggregation, legal in complete mode. */
   def dayTypeCounts(events: DataFrame): DataFrame =
     events
-      .select(expr("(ts div 1000000) div 86400000").as("day"), col("event_type"))
+      .select(EpochTime.Day.of(col("ts")).as("day"), col("event_type"))
       .groupBy(col("day"), col("event_type")).agg(count(lit(1)).as("cnt"))
 
   /** Drift scoring over a day×type count table (day-sized, not data-sized):
@@ -528,7 +528,7 @@ object EventsStream extends Serializable {
     * audit (graft.ops.Analytics an_watermark_lag): ONE complete-mode
     * aggregation, O(types) state. */
   def typeWatermarks(events: DataFrame): DataFrame =
-    events.groupBy(col("event_type")).agg(max(expr("ts div 1000000")).as("max_ms"))
+    events.groupBy(col("event_type")).agg(max(EpochTime.Ms.of(col("ts"))).as("max_ms"))
 
   /** Freshness scoring over the watermark table (type-sized): lag vs the
     * table's own global max, 4h verdict — identical arithmetic to the
@@ -555,7 +555,7 @@ object EventsStream extends Serializable {
     * GENERALIZATION — drop the value decade so cells pool enough users —
     * and this is the cell the gate enforces. Row-local, stream-legal. */
   private def withCoarseQi(events: DataFrame): DataFrame =
-    events.withColumn("hour_of_day", expr("(ts div 1000000 div 3600000) % 24"))
+    events.withColumn("hour_of_day", EpochTime.hourOfDay(col("ts")))
 
   /** OK-cell census over the TRUSTED ingested shard (event_id % 5 ≠ 0 — the
     * same already-ingested/arriving split every st_ index uses): generalized

@@ -62,22 +62,12 @@ object DiagBuckets {
     }
 
     if (families("phash")) {
-      // third ladder family (round 16): the 60-bit pHash rides the same
-      // SimShape width over the same documents count
+      // third ladder family: the 60-bit pHash rides the same SimShape width
+      // over the same documents count, banded by mm_phash_dedup's own
+      // posting frame (Multimodal.phashBands)
       val bits = graft.dedup.Dedup.simBitsFor(nDoc)
-      val ph = graft.mm.Multimodal.decodeLumaPartitions(
-          graft.Tables.documents(s, d)
-            .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")),
-          "payload")
-        .withColumn("mean_b", expr("aggregate(luma, 0, (a, x) -> a + x) div 60"))
-        .withColumn("phash", expr(
-          "aggregate(zip_with(luma, sequence(0, 59), (b, i) -> " +
-            "IF(b > mean_b, shiftleft(CAST(1 AS BIGINT), CAST(i AS INT)), " +
-            "CAST(0 AS BIGINT))), CAST(0 AS BIGINT), (a, x) -> a + x)"))
-      val phKeys = (0 until 60 / bits).map(b =>
-        concat_ws(":", lit(b),
-          expr(s"shiftright(phash, ${b * bits}) & ${(1L << bits) - 1}")))
-      census(s"phash(bits=$bits, n=$nDoc)", ph.select(explode(array(phKeys: _*)).as("k")))
+      census(s"phash(bits=$bits, n=$nDoc)",
+        graft.mm.Multimodal.phashBands(s, d, bits).select(col("bk").as("k")))
     }
     s.stop()
   }

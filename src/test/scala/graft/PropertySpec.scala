@@ -11,11 +11,39 @@ object GraftProperties extends Properties("graft") {
   import spark.implicits._
 
   property("epoch→timestamp→epoch floors to whole seconds") =
-    forAll(Gen.chooseNum(0L, 4102444800000L)) { ms =>
+    forAll(Gen.chooseNum(-4102444800000L, 4102444800000L)) { ms =>
       val got = Seq(ms).toDF("ms")
         .select(unix_millis(etl.StarEtl.epochToTimestamp(col("ms"))).as("back"))
         .head.getLong(0)
-      got == (ms / 1000) * 1000
+      got == Math.floorDiv(ms, 1000L) * 1000
+    }
+
+  // ms, second, hour, day, week in nanos — written out, not read from EpochTime
+  private val bucketNs = Seq(1000000L, 1000000000L, 3600000000000L, 86400000000000L,
+    604800000000000L)
+  private val dayNs = bucketNs(3)
+  // 1900..2100 in epoch-nanos, plus k·u-1, k·u, k·u+1 for every width u
+  // around 1.7e18, 0 and -1.7e18 (the bucket edges a rounding bug misses)
+  private val tsGen: Gen[Long] = Gen.oneOf(
+    Gen.chooseNum(-2208988800000000000L, 4102444800000000000L),
+    for {
+      u <- Gen.oneOf(bucketNs)
+      near <- Gen.oneOf(1700000000000000000L, 0L, -1700000000000000000L)
+      d <- Gen.choose(-1L, 1L)
+    } yield near / u * u + d)
+
+  property("EpochTime buckets floor epoch-nanos; a k-day shift moves day by k only") =
+    forAll(tsGen, Gen.chooseNum(-20000L, 20000L)) { (ts, k) =>
+      val t = col("ts")
+      val t2 = col("ts") + lit(k * dayNs)
+      val r = Seq(ts).toDF("ts").select(
+        EpochTime.Ms.of(t), EpochTime.Second.of(t), EpochTime.Hour.of(t),
+        EpochTime.Day.of(t), EpochTime.Week.of(t), EpochTime.hourOfDay(t),
+        EpochTime.Day.of(t2), EpochTime.hourOfDay(t2)).head
+      val hod = Math.floorMod(Math.floorDiv(ts, bucketNs(2)), 24L)
+      bucketNs.indices.forall(i => r.getLong(i) == Math.floorDiv(ts, bucketNs(i))) &&
+        r.getLong(5) == hod &&
+        r.getLong(6) == r.getLong(3) + k && r.getLong(7) == hod
     }
 
   property("DECIMAL(9,0) cast is monotone (order-preserving rounding)") =

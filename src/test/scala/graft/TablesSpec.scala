@@ -24,19 +24,16 @@ class TablesSpec extends AnyFunSuite {
   test("events.ts normalizes to BIGINT epoch-nanos whatever the fixture's physical type") {
     // The raw fixture may ship LongType (TIMESTAMP(NANOS) + nanosAsLong) or
     // a timestamp type (TIMESTAMP(MICROS)); the engine contract is post-read
-    // BIGINT nanos — every `ts div 1000000` call site depends on it.
+    // BIGINT nanos — every EpochTime bucket depends on it.
     val events = Tables.events(s, d)
     assert(events.schema("ts").dataType == LongType,
       s"events.ts must be BIGINT nanos after normalization, got ${events.schema("ts").dataType}")
     // And the values really are nanos: ms derived from ts must land in a
     // plausible UTC-millis window (fixture event time is Jan 2024; allow
     // 2020..2030 so regenerations move freely without touching this spec).
-    // The min bound doubles as the TIMELINE-DOMAIN tripwire (Tables.events
-    // scaladoc): Spark `div` and the oracles' DuckDB `//` / `epoch_ms` both
-    // truncate toward zero, so a pre-1970 event gets the same wrong bucket
-    // in both engines and the oracle gate shows no mismatch. A fixture
-    // regeneration shipping pre-1970 events must fail HERE; nothing else
-    // catches it.
+    // A wrong unit (micros or ms read as nanos) lands decades away and
+    // fails here. Pre-1970 events are not out of contract: EpochTime
+    // floors every bucket, and the NULL-grid corpus carries such rows.
     val ms = events.selectExpr("min(ts div 1000000)", "max(ts div 1000000)").head()
     assert(ms.getLong(0) >= 1577836800000L && ms.getLong(1) <= 1893456000000L,
       s"ts div 1e6 outside plausible epoch-millis range: $ms — wrong unit after normalization?")

@@ -45,7 +45,7 @@ from local_check import (account_for_suite, fresh_artifact_store,
 
 SRC = "/root/testdata/sf0.001"
 FIXTURE = "/tmp/graft_nullgrid"
-MARKER_VERSION = "nullgrid-v6"  # v2: + NaN/±Infinity rows (the non-finite
+MARKER_VERSION = "nullgrid-v7"  # v2: + NaN/±Infinity rows (the non-finite
 # contract — Tables.centsSql's guard and the isfinite oracle mirrors)
 # v3 (VERDICT r20 #4 + ADVICE r19): poisoned embeddings (NULL vector,
 # NaN/±Inf/NULL COMPONENTS — the Similarity.finiteEmbSql reader contract)
@@ -73,8 +73,15 @@ MARKER_VERSION = "nullgrid-v6"  # v2: + NaN/±Infinity rows (the non-finite
 # NULLS FIRST pin), and a 5e16 l_extendedprice — passes the 9e16
 # measure guard yet overflows DECIMAL(18,2), firing the TRY_CAST
 # mirror of Spark's NULL-on-overflow decimal cast.
+# v7: the pre-1970 axis — events at 1969-12-31 22:00, 23:59:59.9995,
+# 1 us before the epoch and one week before that, per load-bearing event
+# type. Truncating division puts them in the wrong ms/second/hour/day/
+# week bucket (hour-of-day -2 at 22:00); graft.EpochTime floors on both
+# engines, and these rows compare its Spark forms with its DuckDB text.
 
 EVENT_TYPES = ["'view'", "'purchase'", "'click'", "NULL"]
+PRE_EPOCH_TS = ["1969-12-31 22:00:00", "1969-12-31 23:59:59.9995",
+                "1969-12-31 23:59:59.999999", "1969-12-24 23:59:59.999999"]
 
 
 def stage():
@@ -152,6 +159,13 @@ def stage():
     # asc_nulls_first pin's firing row — ADVICE r19).
     ev_rows.append(
         "(9200001, TIMESTAMP '2024-01-02 06:00:00', 9000004, 'purchase', 5.5, '{\"k\": 7}')")
+    # v7: pre-1970 events for one user, every load-bearing event_type
+    eid = 9300001
+    for ts in PRE_EPOCH_TS:
+        for et in EVENT_TYPES:
+            ev_rows.append(
+                f"({eid}, TIMESTAMP '{ts}', 17, {et}, 7.75, '{{\"k\": 7}}')")
+            eid += 1
     aug("events", "event_id, ts, user_id, event_type, value, props", ev_rows)
 
     aug("orders", "o_orderkey,o_custkey,o_orderstatus,o_totalprice,o_orderdate,o_orderpriority", [
@@ -262,7 +276,8 @@ def main():
                  "NULLed in at least one row, plus NaN/±Infinity rows in "
                  "every money/measure double, plus v3's poisoned embedding "
                  "vectors — NULL vector and NaN/±Inf/NULL components — and "
-                 "join-reachable NULL dim attributes) — the "
+                 "join-reachable NULL dim attributes, plus v7's pre-1970 "
+                 "events) — the "
                  "engine-divergence classes (NULL sort direction, NULL "
                  "group keys, NULL window keys, ASOF NULL probes; Spark's "
                  "non-ANSI non-finite casts vs DuckDB's erroring casts, "
