@@ -219,7 +219,7 @@ object Artifacts {
   /** [[indexParquetPath]] + read: the artifact as a DataFrame. */
   def indexParquet(s: SparkSession, name: String, d: String, table: String)
       (build: => DataFrame): DataFrame =
-    s.read.parquet(indexParquetPath(s, name, d, table)(build))
+    Tables.parquet(s, indexParquetPath(s, name, d, table)(build))
 
   /** Memoize a driver-state model under a content-signature key. The cache
     * grows one entry per corpus CONTENT actually seen — model-sized values

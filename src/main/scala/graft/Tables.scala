@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Fixture-table readers (TESTDATA.md).
   *
@@ -10,8 +11,12 @@ import org.apache.spark.sql.types.LongType
   * here so every consumer benefits from the same scan hygiene: columnar
   * parquet scans with Catalyst pushing filters/column pruning into the file
   * scan. At cluster scale these would be catalog tables (ideally bucketed /
-  * sorted per [[graft.sources.Layout]]); `spark.read.parquet` keeps the harness
-  * self-contained.
+  * sorted per [[graft.sources.Layout]]). Here every parquet read goes
+  * through [[parquet]], which infers a path's schema once and keys it by
+  * `(path, modification time of the path)`: a repeat read plans with no
+  * Spark job, and a path rewritten in place is inferred again. The memo is
+  * JVM-wide, which is sound because every `Sessions.builder` session infers
+  * with the same parquet conf (`nanosAsLong` included).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -48,7 +53,47 @@ object Tables {
       s"THEN NULL ELSE $c END * 100) AS BIGINT)"
 
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** A parquet path (file or directory of part files) as a DataFrame, read
+    * with its memoized schema. A bare `spark.read.parquet` runs a
+    * schema-inference job each time it is called, during analysis; this
+    * runs it the first time a `(path, mtime)` pair is seen and then reads
+    * `spark.read.schema(s).parquet(path)`, which plans with no job and
+    * builds a fresh relation (fresh attribute ids) on every call. A path
+    * that does not exist takes the inferring read, so it fails the way it
+    * always did. Read parquet through here, never `spark.read.parquet`. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    def inferred = spark.read.parquet(path)
+    modificationTime(spark, path) match {
+      case Some(t) => spark.read.schema(schemas(path, t)(inferred.schema)).parquet(path)
+      case None => inferred
+    }
+  }
+
+  /** One memo entry per path, holding the value computed at one
+    * modification time: a lookup at another time recomputes and replaces
+    * it. Callers take the time BEFORE computing, so a rewrite racing the
+    * computation leaves an entry under the older time, which the next
+    * lookup replaces. */
+  private final class FooterMemo[V] {
+    private val entries = scala.collection.concurrent.TrieMap.empty[String, (Long, V)]
+    def apply(path: String, mtime: Long)(compute: => V): V = entries.get(path) match {
+      case Some((`mtime`, v)) => v
+      case _ =>
+        val v = compute
+        entries.put(path, (mtime, v))
+        v
+    }
+  }
+  private val schemas = new FooterMemo[StructType]
+  private val rowGroups = new FooterMemo[Long]
+
+  private def modificationTime(s: SparkSession, path: String): Option[Long] = {
+    val p = new Path(path)
+    try Some(p.getFileSystem(s.sessionState.newHadoopConf()).getFileStatus(p).getModificationTime)
+    catch { case _: java.io.FileNotFoundException => None }
+  }
 
   def region(s: SparkSession, d: String): DataFrame = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = read(s, d, "nation")
@@ -90,23 +135,24 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = read(s, d, "embeddings")
 
   /** Parquet row-group count of `path` (file or directory of part files),
-    * memoized per path — footer metadata only, the thing a table catalog
-    * would already know; never reads data pages. This is what decides
-    * whether a scan can parallelize AT THE SOURCE: Spark splits files by
-    * byte range, but a split materializes only the row groups whose
-    * midpoint falls inside it, so a one-row-group file yields exactly one
-    * non-empty scan task no matter how many byte-range splits cover it. */
-  private val rowGroupMemo = scala.collection.concurrent.TrieMap.empty[String, Long]
-  private[graft] def rowGroupCount(s: SparkSession, path: String): Long =
-    rowGroupMemo.getOrElseUpdate(path, {
-      import org.apache.hadoop.fs.Path
+    * memoized by `(path, mtime)` like [[parquet]]'s schema, so a fixture
+    * rewritten in place is counted again — footer metadata only, the thing
+    * a table catalog would already know; never reads data pages. This is
+    * what decides whether a scan can parallelize AT THE SOURCE: Spark
+    * splits files by byte range, but a split materializes only the row
+    * groups whose midpoint falls inside it, so a one-row-group file yields
+    * exactly one non-empty scan task no matter how many byte-range splits
+    * cover it. */
+  private[graft] def rowGroupCount(s: SparkSession, path: String): Long = {
+    val conf = s.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val status = fs.getFileStatus(p)
+    rowGroups(path, status.getModificationTime) {
       import org.apache.parquet.hadoop.ParquetFileReader
       import org.apache.parquet.hadoop.util.HadoopInputFile
-      val conf = s.sessionState.newHadoopConf()
-      val p = new Path(path)
-      val fs = p.getFileSystem(conf)
       val files =
-        if (fs.getFileStatus(p).isDirectory)
+        if (status.isDirectory)
           fs.listStatus(p).toSeq.map(_.getPath)
             .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
         else Seq(p)
@@ -114,7 +160,8 @@ object Tables {
         val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
         try r.getFooter.getBlocks.size.toLong finally r.close()
       }.sum
-    })
+    }
+  }
 
   /** SCALE-ADAPTIVE scan spread (optimization guide §2.5 "input skew: one
     * huge unsplittable file … repartition immediately after the read").

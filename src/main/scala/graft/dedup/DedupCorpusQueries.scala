@@ -717,7 +717,7 @@ private[dedup] trait DedupCorpusQueries { this: Dedup.type =>
         val wGone = wPost.filter(expr(tomb)).select(col("fp")).distinct()
           .join(wPost.filter(expr(s"NOT ($tomb)")).select(col("fp")).distinct(),
             Seq("fp"), "left_anti")
-        val wn = s.read.parquet(winnowFpIndexPath(s, d))
+        val wn = Tables.parquet(s, winnowFpIndexPath(s, d))
           .agg(count(lit(1)).as("n_rows"))
           .crossJoin(wGone.agg(count(lit(1)).as("n_purged")))
           .select(lit("winnow_idx").as("artifact"), lit("rebuild").as("action"),

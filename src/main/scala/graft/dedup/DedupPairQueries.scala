@@ -133,7 +133,7 @@ private[dedup] trait DedupPairQueries { this: Dedup.type =>
     QueryDef(
       "dd_incremental",
       (s, d) => {
-        val idx = s.read.parquet(winnowFpIndexPath(s, d))
+        val idx = Tables.parquet(s, winnowFpIndexPath(s, d))
         val batch = graft.text.TextStats.winnowedFpRows(s, d)
           .filter(expr("doc_id % 5 = 0"))
           .select(col("doc_id"), col("fp"))

@@ -163,9 +163,9 @@ object RunCorpusPipeline {
       .drop("thresh")
     // 4. split on sampler-disjoint bits.
     val splitDocs = graft.text.TextStats.withSplit(sampled).drop("h16")
-    graft.sources.Layout.writePartitioned(splitDocs, s"$outDir/shards.parquet", "split")
+    val nSampled =
+      graft.sources.Layout.writePartitioned(splitDocs, s"$outDir/shards.parquet", "split")
     val shards = spark.read.schema(splitDocs.schema).parquet(s"$outDir/shards.parquet")
-    val nSampled = shards.count()
     val splitCounts = shards.groupBy(col("split")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     stageDone("sample_split")
@@ -183,8 +183,7 @@ object RunCorpusPipeline {
         Seq("split", "source"))
       .select(Seq(col("split"), col("source"), col("doc_id"), col("n_tokens"))
         ++ graft.text.TextStats.windowIndexCols: _*)
-    graft.sources.Layout.writePartitioned(packed, s"$outDir/packed.parquet", "split")
-    val nPacked = spark.read.schema(packed.schema).parquet(s"$outDir/packed.parquet").count()
+    val nPacked = graft.sources.Layout.writePartitioned(packed, s"$outDir/packed.parquet", "split")
     stageDone("pack")
 
     // 6. tokenizer trained on the TRAIN split only — the vocab must not

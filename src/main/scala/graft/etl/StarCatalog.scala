@@ -52,18 +52,4 @@ object StarCatalog {
     drop(spark)
     createStatements(Some((name: String) => s"$outDir/$name")).foreach(spark.sql(_))
   }
-
-  /** The COPY `STATUPDATE ON` analog for CATALOG consumers
-    * (sql_queries.py:130/135: Redshift refreshes planner statistics as part
-    * of the load). AQE already covers runtime stats (SURVEY §2.1 S3's
-    * mapping — the at-scale default); this is the explicit catalog-stats
-    * leg, so cost-based decisions that read the metastore (join reorder,
-    * broadcast thresholds with AQE off) see post-load row counts/sizes.
-    * `columns = true` adds per-column min/max/NDV (the
-    * `FOR ALL COLUMNS` form) — the Redshift ANALYZE equivalent. */
-  def analyze(spark: SparkSession, columns: Boolean = false): Unit =
-    StarSchema.tables.foreach { t =>
-      spark.sql(s"ANALYZE TABLE ${t.name} COMPUTE STATISTICS" +
-        (if (columns) " FOR ALL COLUMNS" else ""))
-    }
 }

@@ -17,6 +17,11 @@ import graft.{EpochTime, QueryDef, Tables}
   * reason. */
 private[ops] trait AnalyticsGovernanceQueries { this: Analytics.type =>
 
+  /** an_watermark_lag's freshness budget: an event type whose newest event
+    * lags the newest of all by less than 4 hours is fresh. The streaming
+    * twin ([[graft.streaming.EventsStream.freshnessFromMax]]) reads it too. */
+  val FreshnessBudgetMs: Long = 4 * EpochTime.Hour.ms
+
   private[ops] lazy val governanceDefs: Seq[QueryDef] = Seq(
 
     /** Deterministic stratified sampling — the training-data mixing
@@ -604,7 +609,7 @@ private[ops] trait AnalyticsGovernanceQueries { this: Analytics.type =>
         perType.crossJoin(broadcast(global))
           .select(col("event_type"), col("max_ms"),
             expr("global_max_ms - max_ms").as("lag_ms"),
-            expr("CASE WHEN global_max_ms - max_ms < 14400000 THEN 'fresh' " +
+            expr(s"CASE WHEN global_max_ms - max_ms < $FreshnessBudgetMs THEN 'fresh' " +
               "ELSE 'stale' END").as("freshness"))
           // NULL event_type is an accounting group — kept, null pin both sides
           .orderBy(col("event_type").asc_nulls_first)
@@ -613,7 +618,7 @@ private[ops] trait AnalyticsGovernanceQueries { this: Analytics.type =>
              |          FROM events GROUP BY 1),
              |g AS (SELECT MAX(max_ms) AS global_max_ms FROM m)
              |SELECT event_type, max_ms, global_max_ms - max_ms AS lag_ms,
-             |       CASE WHEN global_max_ms - max_ms < 14400000 THEN 'fresh'
+             |       CASE WHEN global_max_ms - max_ms < $FreshnessBudgetMs THEN 'fresh'
              |            ELSE 'stale' END AS freshness
              |FROM m, g ORDER BY event_type NULLS FIRST""".stripMargin)),
 

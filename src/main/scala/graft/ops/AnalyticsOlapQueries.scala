@@ -19,6 +19,11 @@ import graft.{EpochTime, QueryDef, Tables}
   * object-body vals, which initialize after trait bodies. */
 private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
 
+  /** an_sessionize / an_attribution session gap: a new session starts
+    * after 30 minutes without an event (the stream operators'
+    * st_sessionize gap is [[graft.streaming.EventsStream.SessionGapMs]]). */
+  private[ops] val SessionGapMs: Long = EpochTime.Hour.ms / 2
+
   private[ops] lazy val olapDefs: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -561,7 +566,7 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
           .filter(col("user_id").isNotNull && col("ts").isNotNull)
           .select(col("user_id"), EpochTime.Ms.of(col("ts")).as("ms"))
           .withColumn("new_sess",
-            when(col("ms") - lag(col("ms"), 1).over(w) > 1800000L, 1L)
+            when(col("ms") - lag(col("ms"), 1).over(w) > SessionGapMs, 1L)
               .otherwise(when(lag(col("ms"), 1).over(w).isNull, 1L).otherwise(0L)))
           .withColumn("session_seq", sum(col("new_sess")).over(
             w.rowsBetween(Window.unboundedPreceding,
@@ -576,7 +581,7 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
              |           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
              |m AS (SELECT user_id, ms,
              |        CASE WHEN lag(ms) OVER (PARTITION BY user_id ORDER BY ms) IS NULL
-             |               OR ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms) > 1800000
+             |               OR ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms) > $SessionGapMs
              |             THEN 1 ELSE 0 END AS new_sess
              |      FROM e),
              |s AS (SELECT user_id, ms,
@@ -622,7 +627,7 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
             EpochTime.Ms.of(col("ts")).as("ms"))
           .withColumn("new_sess",
             when(lag(col("ms"), 1).over(wu).isNull, 1L)
-              .when(col("ms") - lag(col("ms"), 1).over(wu) > 1800000L, 1L)
+              .when(col("ms") - lag(col("ms"), 1).over(wu) > SessionGapMs, 1L)
               .otherwise(0L))
           .withColumn("session_seq", sum(col("new_sess")).over(
             wu.rowsBetween(W.unboundedPreceding, W.currentRow)))
@@ -637,7 +642,7 @@ private[ops] trait AnalyticsOlapQueries { this: Analytics.type =>
              |           FROM events
              |           WHERE user_id IS NOT NULL AND ts IS NOT NULL),
              |m AS (SELECT *, CASE WHEN lag(ms) OVER w IS NULL
-             |                       OR ms - lag(ms) OVER w > 1800000
+             |                       OR ms - lag(ms) OVER w > $SessionGapMs
              |                     THEN 1 ELSE 0 END AS new_sess
              |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
              |s AS (SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id

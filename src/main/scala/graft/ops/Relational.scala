@@ -27,6 +27,13 @@ object Relational {
 
   private def cents(c: String) = expr(graft.Tables.centsSql(c))
 
+  /** jn_asof_tolerance's horizon: an as-of match older than this many ms
+    * is a miss (the fixture's order-to-event gap median, ~23 years). */
+  private val AsofToleranceMs = 730000000000L
+
+  /** jn_range's window: orders of one customer within 30 days. */
+  private val RangeWindowMs = 30 * EpochTime.Day.ms
+
   /** Candidate pairs for the multi-pass fuzzy join (see `jn_fuzzy_multiblock`
     * below for the recall contract). Factored out so RelationalSpec can drive
     * it with a planted hot block. Input: (p_partkey, p_name, p_brand,
@@ -272,10 +279,9 @@ object Relational {
     QueryDef(
       "jn_asof_tolerance",
       (s, d) => {
-        val TolMs = 730000000000L
         asofComposed(s, d)
           .filter(col("is_order") === 0 && col("asof_orderkey").isNotNull &&
-            col("t") - col("asof_t") <= TolMs)
+            col("t") - col("asof_t") <= AsofToleranceMs)
           .select(col("event_id"), col("k").as("user_id"), col("asof_orderkey"))
           .orderBy("event_id")
       },
@@ -288,7 +294,7 @@ object Relational {
              |      WHERE user_id IS NOT NULL AND ts IS NOT NULL)
              |SELECT e.event_id, e.k AS user_id, o.o_orderkey AS asof_orderkey
              |FROM e ASOF JOIN o ON e.k = o.k AND e.t >= o.t
-             |WHERE e.t - o.t <= 730000000000
+             |WHERE e.t - o.t <= $AsofToleranceMs
              |ORDER BY event_id""".stripMargin)),
 
     /** Range join, bucketized — the scale-correct shape for interval
@@ -300,7 +306,7 @@ object Relational {
     QueryDef(
       "jn_range",
       (s, d) => {
-        val W = 30 * EpochTime.Day.ms
+        val W = RangeWindowMs
         val o = Tables.orders(s, d).select(
           col("o_custkey").as("k"),
           col("o_orderkey"),
@@ -316,11 +322,11 @@ object Relational {
           .select(col("k").as("o_custkey"), col("a"), col("b")).distinct()
           .orderBy("o_custkey", "a", "b")
       },
-      Some("""SELECT DISTINCT l.o_custkey AS o_custkey, l.o_orderkey AS a, r.o_orderkey AS b
+      Some(s"""SELECT DISTINCT l.o_custkey AS o_custkey, l.o_orderkey AS a, r.o_orderkey AS b
              |FROM orders l JOIN orders r
              |  ON l.o_custkey = r.o_custkey AND l.o_orderkey < r.o_orderkey
-             | AND epoch_ms(r.o_orderdate) BETWEEN epoch_ms(l.o_orderdate) - 2592000000
-             |                                 AND epoch_ms(l.o_orderdate) + 2592000000
+             | AND epoch_ms(r.o_orderdate) BETWEEN epoch_ms(l.o_orderdate) - $RangeWindowMs
+             |                                 AND epoch_ms(l.o_orderdate) + $RangeWindowMs
              |ORDER BY o_custkey, a, b""".stripMargin)),
 
     /** Fuzzy (edit-distance) join, blocked — approximate string matching

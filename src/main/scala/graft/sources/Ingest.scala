@@ -12,7 +12,9 @@ import org.apache.spark.sql.types._
   *    `StructType` — fields are matched by name, missing fields are null,
   *    and the declared types drive parse-time coercion.
   *  - S2 `COPY staging_songs ... format as json 'auto'`: name matching,
-  *    which is Spark's default behavior with a declared schema.
+  *    which is Spark's default behavior with a declared schema. The star
+  *    build reads song metadata from the `part` fixture, so the S2 JSON
+  *    load has no production caller; `IngestSpec` holds it and pins it.
   *  - `STATUPDATE ON` (S3): planner stats during load — AQE's runtime stats
   *    play that role (Sessions enables AQE).
   *
@@ -55,19 +57,6 @@ object Ingest {
     StructField("userAgent", StringType),
     StructField("userId", IntegerType)))
 
-  /** staging_songs (sql_queries.py:50-61). */
-  val songsStagingSchema: StructType = StructType(Seq(
-    StructField("num_songs", IntegerType),
-    StructField("artist_id", StringType),
-    StructField("artist_latitude", DoubleType),
-    StructField("artist_longitude", DoubleType),
-    StructField("artist_location", StringType),
-    StructField("artist_name", StringType),
-    StructField("song_id", StringType),
-    StructField("title", StringType),
-    StructField("duration", DoubleType),
-    StructField("year", IntegerType)))
-
   /** S1: events log load — explicit mapping, DECIMAL load-cast, NOT NULL
     * validation on (sessionId, ts), and the VARCHAR(1) truncation the
     * star schema declares on gender (sql_queries.py:83): Redshift silently
@@ -77,13 +66,6 @@ object Ingest {
       .withColumn("length", col("length").cast(dec9))
       .withColumn("gender", substring(col("gender"), 1, 1))
       .filter(col("sessionId").isNotNull && col("ts").isNotNull)
-
-  /** S2: song metadata load — 'auto' name matching, DECIMAL load-casts. */
-  def readSongsJson(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(songsStagingSchema).json(path)
-      .withColumn("duration", col("duration").cast(dec9))
-      .withColumn("artist_latitude", col("artist_latitude").cast(dec9))
-      .withColumn("artist_longitude", col("artist_longitude").cast(dec9))
 
   /** Redshift jsonpaths manifest → (read schema, source→target renames).
     *

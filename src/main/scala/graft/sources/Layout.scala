@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Physical-layout helpers mirroring the reference's table hints
   * (SURVEY.md §4.2; /root/reference/sql_queries.py:40-117):
@@ -32,17 +33,40 @@ object Layout {
   }
 
   /** S4 table sink: idempotent overwrite parquet write (the reference's
-    * drop-create-insert cycle collapses to mode=overwrite). */
+    * drop-create-insert cycle collapses to mode=overwrite). Returns the
+    * rows written, counted by the write itself ([[countedWrite]]), the way
+    * the reference's INSERT reports the rows it loaded. */
   def writeParquet(df: DataFrame, path: String,
-      distKey: Option[String] = None, sortKey: Option[String] = None): Unit =
-    layout(df, distKey, sortKey).write.mode(SaveMode.Overwrite).parquet(path)
+      distKey: Option[String] = None, sortKey: Option[String] = None): Long =
+    countedWrite(layout(df, distKey, sortKey))(_.write.mode(SaveMode.Overwrite).parquet(path))
 
   /** Hive-style partitioned write: the time/tenant pruning lever. A query
     * filtering on the partition column reads only matching directories —
     * at 100 TB that is the difference between scanning a day and scanning
-    * the lake ("PartitionFilters" in the scan node; see LayoutPruningSpec). */
-  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(path)
+    * the lake ("PartitionFilters" in the scan node; see LayoutPruningSpec).
+    * Returns the rows written ([[countedWrite]]). */
+  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Long =
+    countedWrite(df)(_.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(path))
+
+  /** Runs `write` over `df` and returns the number of rows it wrote, with
+    * no job beyond the write: a `count(1)` [[Observation]] sits on the
+    * frame the writer consumes, above that frame's last exchange, so the
+    * metric is collected in the write's result stage. The DAG scheduler
+    * merges a result task's accumulators once per partition, so a retried
+    * or speculative task cannot count its rows twice; an observation below
+    * an exchange would run in a shuffle-map stage, which is counted again
+    * when the stage is resubmitted. The count arrives through a query
+    * listener, so the listener bus is drained first: a write that reports
+    * no count fails here instead of waiting for one. */
+  private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val written = Observation()
+    write(df.observe(written, count(lit(1)).as("rows")))
+    org.apache.spark.ProfileBus.drain(df.sparkSession.sparkContext)
+    written.future.value match {
+      case Some(scala.util.Success(row)) => row.getLong(0)
+      case other => throw new IllegalStateException(s"write reported no row count: $other")
+    }
+  }
 
   /** Bucketed catalog table: both sides of a repeated join on `bucketCol`
     * read pre-shuffled. Requires a warehouse-backed catalog (saveAsTable). */
@@ -66,7 +90,7 @@ object Layout {
     // shift amounts mod 64 into collisions — both silent corruptions of
     // the clustering this function promises.
     require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits")
-    import org.apache.spark.sql.functions.{lit, shiftleft, shiftright}
+    import org.apache.spark.sql.functions.{shiftleft, shiftright}
     val (al, bl) = (a.cast("bigint"), b.cast("bigint"))
     (0 until bits).flatMap { j =>
       Seq(shiftleft(shiftright(al, j).bitwiseAND(lit(1L)), 2 * j),

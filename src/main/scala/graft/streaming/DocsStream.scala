@@ -171,7 +171,7 @@ object DocsStream {
       verdicts: (DataFrame, DataFrame) => DataFrame): DataFrame =
     StreamRuns.completeToMemory(spark,
       verdicts(spark.readStream.schema(docsSchema).parquet(docsDir),
-        spark.read.parquet(idxPath)),
+        graft.Tables.parquet(spark, idxPath)),
       queryName, Seq("doc_id"))
 
   /** [[landingVerdicts]] as a CHECKPOINTED incremental landing job — the
@@ -221,7 +221,7 @@ object DocsStream {
       idxPath: String, outDir: String, checkpointDir: String,
       verdicts: (DataFrame, DataFrame) => DataFrame,
       maxFilesPerTrigger: Int): Unit = {
-    val idx = spark.read.parquet(idxPath)
+    val idx = graft.Tables.parquet(spark, idxPath)
     val reader = spark.readStream.schema(docsSchema)
     if (maxFilesPerTrigger > 0) reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
     val q = reader.parquet(docsDir)
@@ -352,7 +352,7 @@ object DocsStream {
       "st_incremental_dedup",
       (s, d) => landingVerdicts(
         graft.Tables.documents(s, d).filter(expr("doc_id % 5 = 0")),
-        s.read.parquet(graft.dedup.Dedup.winnowFpIndexPath(s, d)))
+        graft.Tables.parquet(s, graft.dedup.Dedup.winnowFpIndexPath(s, d)))
         .orderBy("doc_id"),
       Some(s"""WITH ${graft.text.TextStats.duckWinnowChain},
               |f AS (SELECT doc_id, unnest(fps) AS fp FROM m),
@@ -370,7 +370,7 @@ object DocsStream {
       "st_media_dedup",
       (s, d) => mediaVerdicts(
         graft.Tables.documents(s, d).filter(expr("doc_id % 5 = 0")),
-        s.read.parquet(graft.mm.Multimodal.frameFpIndexPath(s, d)))
+        graft.Tables.parquet(s, graft.mm.Multimodal.frameFpIndexPath(s, d)))
         .orderBy("doc_id"),
       Some("""WITH f0 AS (SELECT doc_id, hex(encode(text)) AS hx,
              |                   octet_length(encode(text)) AS nb

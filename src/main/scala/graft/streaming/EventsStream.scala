@@ -537,8 +537,8 @@ object EventsStream extends Serializable {
     m.crossJoin(broadcast(m.agg(max(col("max_ms")).as("global_max_ms"))))
       .select(col("event_type"), col("max_ms"),
         expr("global_max_ms - max_ms").as("lag_ms"),
-        expr("CASE WHEN global_max_ms - max_ms < 14400000 THEN 'fresh' " +
-          "ELSE 'stale' END").as("freshness"))
+        expr(s"CASE WHEN global_max_ms - max_ms < ${graft.ops.Analytics.FreshnessBudgetMs} " +
+          "THEN 'fresh' ELSE 'stale' END").as("freshness"))
       .orderBy("event_type")
 
   /** The freshness audit as an incremental stream — the [[runDriftStream]]

@@ -76,7 +76,7 @@ private[text] trait TextBpe { this: TextStats.type =>
         bpeMergesDriverHeap(wordFreqDict(Tables.documents(s, d)), rounds)
           .toDF("merge_rank", "lhs", "rhs", "merged", "n_pairs")
       }
-      s.read.parquet(path).orderBy("merge_rank").collect()
+      Tables.parquet(s, path).orderBy("merge_rank").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getString(3), r.getLong(4))).toSeq
     }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -92,5 +93,51 @@ class TablesSpec extends AnyFunSuite {
     assert(viaTs.schema("ts").dataType == LongType)
     assert(viaLong.exceptAll(viaTs).isEmpty && viaTs.exceptAll(viaLong).isEmpty,
       "normalized nanos differ between LongType and TIMESTAMP(MICROS) fixture shapes")
+  }
+
+  test("Tables.parquet's memoized schema equals the inferred one for every fixture table") {
+    // sf0.001 ships events.ts as TIMESTAMP(MICROS); the BIGINT copy covers
+    // the other shape Tables.events dispatches on.
+    val tmp = TestSpark.tempDir("tables-schema-").toString
+    Tables.events(s, d).write.parquet(s"$tmp/events.parquet")
+    assert(s.read.parquet(s"$tmp/events.parquet").schema("ts").dataType == LongType)
+    assert(s.read.parquet(s"$d/events.parquet").schema("ts").dataType != LongType)
+    val paths = Tables.names.map(t => s"$d/$t.parquet") :+ s"$tmp/events.parquet"
+    paths.foreach { p =>
+      Tables.parquet(s, p) // first read infers; the second reads the memo
+      assert(Tables.parquet(s, p).schema == s.read.parquet(p).schema, p)
+    }
+  }
+
+  test("a path rewritten in place is read with its new schema") {
+    val dir = TestSpark.tempDir("tables-rewrite-").toString
+    val path = s"$dir/events.parquet"
+    val src = Tables.events(s, d).orderBy("event_id").limit(20)
+    src.withColumn("ts", expr("timestamp_micros(ts div 1000)")).write.parquet(path)
+    assert(Tables.read(s, dir, "events").schema("ts").dataType != LongType)
+    val before = Tables.events(s, dir).collect().toSet
+    src.write.mode("overwrite").parquet(path)
+    assert(Tables.read(s, dir, "events").schema("ts").dataType == LongType,
+      "the second read kept the first write's TIMESTAMP schema")
+    // Tables.events now dispatches on BIGINT: ts passes through unconverted
+    assert(Tables.events(s, dir).collect().toSet == before)
+  }
+
+  test("a repeat read of a path plans with no Spark job") {
+    val dir = TestSpark.tempDir("tables-jobs-").toString
+    Tables.read(s, d, "part").write.parquet(s"$dir/part.parquet")
+    val first = graft.tools.Profile.run(s)(Tables.read(s, dir, "part").queryExecution.analyzed)
+    assert(first.jobs >= 1, "the first read infers the schema in a job")
+    val second = graft.tools.Profile.run(s)(Tables.read(s, dir, "part").queryExecution.analyzed)
+    assert(second.jobs == 0, s"${second.jobs} jobs to plan a repeat read")
+  }
+
+  test("rowGroupCount counts a path rewritten in place again") {
+    val path = s"${TestSpark.tempDir("tables-rowgroups-")}/part.parquet"
+    val part = Tables.part(s, d)
+    part.coalesce(1).write.parquet(path)
+    assert(Tables.rowGroupCount(s, path) == 1)
+    part.repartition(3).write.mode("overwrite").parquet(path)
+    assert(Tables.rowGroupCount(s, path) == 3, "the count kept the first write's row groups")
   }
 }

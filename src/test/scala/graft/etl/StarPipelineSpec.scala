@@ -20,4 +20,17 @@ class StarPipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/songplays").count() ==
       StarEtl.songplays(spark, sf).count())
   }
+
+  test("each TableResult counts the rows its table holds") {
+    def check(src: String): Unit = {
+      val results = StarPipeline.run(spark, src, TestSpark.tempDir("star-counts").toString)
+      results.foreach { r =>
+        assert(r.rows == spark.read.parquet(r.path).count(), s"${r.name} over $src")
+      }
+    }
+    check(java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString)
+    val nulls = TestSpark.tempDir("star-counts-nulls").toString
+    StarSchemaSpec.writeNullFixture(spark, nulls)
+    check(nulls)
+  }
 }

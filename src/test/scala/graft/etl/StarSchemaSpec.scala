@@ -20,9 +20,36 @@ class StarSchemaSpec extends AnyFunSuite {
   }
 
   test("typed tables collect rows the NULL contract keeps") {
+    val dir = TestSpark.tempDir("graft_star_nulls").toString
+    StarSchemaSpec.writeNullFixture(spark, dir)
+    val songplays = StarSchema.songplays.typed(spark, dir).collect()
+    assert(songplays.map(p => Option(p.start_time).isEmpty).toSeq == Seq(true, false),
+      "the NULL-ts view keeps its play, NULL start_time first")
+    val users = StarSchema.users.typed(spark, dir).collect()
+    assert(users.toSeq.contains(StarSchema.User(null, "free")), users.mkString(";"))
+    assert(users.length == 3)
+    val songs = StarSchema.songs.typed(spark, dir).collect()
+    assert(songs.find(_.song_id == 2L).get.year == null)
+    val artists = StarSchema.artists.typed(spark, dir).collect()
+    assert(artists.find(_.artist_id == 2L).get.location == null)
+    val time = StarSchema.time.typed(spark, dir).collect()
+    assert(time.length == 2 && time.head.start_time == null && time.head.hour == null &&
+      time.head.weekday == null, time.mkString(";"))
+  }
+
+  test("surrogate ids are unique (the documented NULL-id fix)") {
+    val ids = StarSchema.withSurrogateIds(spark, sf)
+    assert(ids.select("songplay_id").distinct().count() == ids.count())
+  }
+}
+
+object StarSchemaSpec {
+  /** The star build's inputs (events, part, supplier) with a NULL in each
+    * column the NULL contract keeps: a NULL-ts view, a NULL-user view, a
+    * NULL `p_size` and a NULL `s_nationkey`. */
+  def writeNullFixture(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = TestSpark.tempDir("graft_star_nulls").toString
     def write(table: String, schema: StructType, rows: Seq[Row]): Unit =
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
         .write.mode("overwrite").parquet(s"$dir/$table.parquet")
@@ -46,24 +73,5 @@ class StarSchemaSpec extends AnyFunSuite {
       StructField("s_nationkey", IntegerType), StructField("s_acctbal", DoubleType))), Seq(
       Row(1L, "s1", 3, 1.5),
       Row(2L, "s2", null, 2.5)))
-
-    val songplays = StarSchema.songplays.typed(spark, dir).collect()
-    assert(songplays.map(p => Option(p.start_time).isEmpty).toSeq == Seq(true, false),
-      "the NULL-ts view keeps its play, NULL start_time first")
-    val users = StarSchema.users.typed(spark, dir).collect()
-    assert(users.toSeq.contains(StarSchema.User(null, "free")), users.mkString(";"))
-    assert(users.length == 3)
-    val songs = StarSchema.songs.typed(spark, dir).collect()
-    assert(songs.find(_.song_id == 2L).get.year == null)
-    val artists = StarSchema.artists.typed(spark, dir).collect()
-    assert(artists.find(_.artist_id == 2L).get.location == null)
-    val time = StarSchema.time.typed(spark, dir).collect()
-    assert(time.length == 2 && time.head.start_time == null && time.head.hour == null &&
-      time.head.weekday == null, time.mkString(";"))
-  }
-
-  test("surrogate ids are unique (the documented NULL-id fix)") {
-    val ids = StarSchema.withSurrogateIds(spark, sf)
-    assert(ids.select("songplay_id").distinct().count() == ids.count())
   }
 }

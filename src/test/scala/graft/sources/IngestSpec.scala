@@ -2,13 +2,39 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
 class IngestSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** staging_songs (sql_queries.py:50-61). */
+  private val songsStagingSchema = StructType(Seq(
+    StructField("num_songs", IntegerType),
+    StructField("artist_id", StringType),
+    StructField("artist_latitude", DoubleType),
+    StructField("artist_longitude", DoubleType),
+    StructField("artist_location", StringType),
+    StructField("artist_name", StringType),
+    StructField("song_id", StringType),
+    StructField("title", StringType),
+    StructField("duration", DoubleType),
+    StructField("year", IntegerType)))
+
+  /** S2: song metadata load — 'auto' name matching, DECIMAL load-casts. The
+    * star build reads song metadata from the `part` fixture, so this load
+    * lives here, beside the test that pins it. */
+  private def readSongsJson(path: String): DataFrame = {
+    val dec9 = DecimalType(9, 0)
+    spark.read.schema(songsStagingSchema).json(path)
+      .withColumn("duration", col("duration").cast(dec9))
+      .withColumn("artist_latitude", col("artist_latitude").cast(dec9))
+      .withColumn("artist_longitude", col("artist_longitude").cast(dec9))
+  }
 
   private def tmpJson(name: String, lines: Seq[String]): String = {
     val dir = TestSpark.tempDir("ingest").toString
@@ -51,7 +77,7 @@ class IngestSpec extends AnyFunSuite {
     val path = tmpJson("songs.json", Seq(
       """{"num_songs":1,"artist_id":"AR1","artist_latitude":35.64957,"artist_longitude":-120.6998,"artist_name":"N","song_id":"SO1","title":"T","duration":218.93179,"year":2004}""",
       """{"num_songs":1,"artist_id":"AR2","artist_name":"M","song_id":"SO2","title":"U","duration":150.5,"year":0}"""))
-    val df = Ingest.readSongsJson(spark, path)
+    val df = readSongsJson(path)
     assert(df.count() == 2)
     val r1 = df.filter(col("song_id") === "SO1")
       .select("duration", "artist_latitude", "artist_longitude").head
@@ -63,7 +89,6 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("jsonpaths manifest: positional mapping to target columns, typed read, renames") {
-    import org.apache.spark.sql.types._
     // Shaped like the reference's log_json_path.json (S3 LOG_JSONPATH):
     // camelCase source fields, positionally mapped to snake_case staging
     // columns — the case by-name matching cannot handle.
@@ -102,7 +127,6 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("jsonpaths: one source field may load into multiple columns (Redshift COPY allows it)") {
-    import org.apache.spark.sql.types._
     // $['id'] twice: the read schema must deduplicate (a duplicate-name
     // schema fails the json read far from the manifest), and the positional
     // projection reads the field once, projects it twice.
