@@ -1,9 +1,10 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
+import graft.sources.Layout
 
 /** End-to-end TRAINING-DATA pipeline — the LLM-corpus counterpart of the
   * star-schema ETL ([[RunEtl]]): one main that chains the registered
@@ -11,6 +12,9 @@ import graft.Sessions
   * corpus into training shards, materializing each stage as parquet plus a
   * deterministic `manifest.json` of stage counts (the release-accounting
   * record — what dd_dedup_funnel reports, here as the actual artifact).
+  * Every count is observed on the write that produces its rows, the way
+  * the reference's COPY and INSERT report the rows they load: no stage is
+  * cached, read back or grouped just to be counted.
   *
   * Stages (each reuses the SAME frame transforms / plan shapes the
   * registered queries verify against DuckDB — the pipeline cannot drift
@@ -72,7 +76,15 @@ object RunCorpusPipeline {
 
   final case class StageCounts(
       nInput: Long, nClean: Long, nDecontamDropped: Long, nEvalHeldOut: Long,
-      nSampled: Long, splits: Map[String, Long], nPacked: Long, nMerges: Long)
+      nSampled: Long, splits: Map[String, Long], nPacked: Long, nMerges: Long) {
+    /** The counts as JSON fields, in manifest order: `manifest.json` and
+      * both of [[main]]'s report lines render them through here. */
+    def jsonFields: String =
+      s""""n_input":$nInput,"n_clean":$nClean,"n_decontam_dropped":$nDecontamDropped,""" +
+        s""""n_eval_held_out":$nEvalHeldOut,"n_sampled":$nSampled,"splits":""" +
+        splits.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}") +
+        s""","n_packed":$nPacked,"n_bpe_merges":$nMerges"""
+  }
 
   /** @param dpReleaseSeed secret seed keying the data card's DP noise draw
     *   — MUST be fresh per release and never published (a public or reused
@@ -86,7 +98,8 @@ object RunCorpusPipeline {
     *   reads per-stage cost through it; the default no-op keeps every
     *   other caller unchanged. Timing is by wall segment between stage boundaries, so
     *   a stage's figure includes the lazy upstream work its OWN actions
-    *   force (stage 1's count is billed to stage 1, etc.).
+    *   force. Each count is observed on its stage's write, so counting
+    *   adds no action to any stage.
     * @param decontamMinShingles decontamination drop threshold (default
     *   [[DecontamMinShingles]] — the dd_decontaminate oracle convention).
     *   A corpus whose shingle density differs from the eval source's
@@ -97,11 +110,14 @@ object RunCorpusPipeline {
     *   3-token shingles collide corpus-wide), leaving nothing for the
     *   downstream stages to measure, while 20 drops about half. An all-contaminated corpus is still a legal run: every
     *   stage handles empty input and the release is empty with a
-    *   zero-count manifest (spec-pinned), not a crash. */
+    *   zero-count manifest (spec-pinned), not a crash. Must be at least
+    *   1: only docs sharing a shingle reach the threshold filter, so a
+    *   lower value would act as 1. */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       dpReleaseSeed: String,
       onStage: (String, Double) => Unit = (_, _) => (),
       decontamMinShingles: Int = DecontamMinShingles): StageCounts = {
+    require(decontamMinShingles >= 1, s"decontamMinShingles must be at least 1, got $decontamMinShingles")
     var tMark = System.nanoTime()
     def stageDone(name: String): Unit = {
       val now = System.nanoTime()
@@ -109,14 +125,10 @@ object RunCorpusPipeline {
       tMark = now
     }
     val docs = graft.Tables.documents(spark, sfDir)
-    val nInput = docs.count()
 
     // 1. clean: quality + exact-dup keeper + near-dup loser removal.
-    // Persisted: the keeper chain (fingerprint shuffle + pair-graph probe)
-    // feeds three downstream actions (decontam write + two accounting
-    // counts) and must not re-execute per action.
     val keepers = graft.dedup.Dedup.cleanCorpusKeepers(spark, sfDir)
-    val clean = docs.join(keepers, Seq("doc_id"), "left_semi").persist()
+    val clean = docs.join(keepers, Seq("doc_id"), "left_semi")
 
     // 2. decontaminate vs the eval source: eval shingle dictionary is
     // bounded by the eval vocabulary and BROADCAST (capping it would cost
@@ -130,44 +142,54 @@ object RunCorpusPipeline {
       .shingleRowsOf(docs.filter(col("source") === EvalSource))
       .select(col("sng")).distinct()
     // The probe side shingles the CLEAN non-eval slice, not the raw corpus:
-    // contaminated ids are only consumed as a left_anti against `clean`, so
-    // shingling quality-rejects and near-dup losers re-windows and
-    // re-distincts documents whose verdict can never matter — up to ~2x
-    // wasted work on the stage's most expensive scan on a dup-heavy corpus
-    // (round-19 review). The eval DICTIONARY stays over raw docs: an eval
-    // doc dropped by stage 1 must still contribute its shingles, or its
+    // contaminated ids only ever drop clean docs, so shingling
+    // quality-rejects and near-dup losers re-windows and re-distincts
+    // documents whose verdict can never matter — up to ~2x wasted work on
+    // the stage's most expensive scan on a dup-heavy corpus (round-19
+    // review). The eval DICTIONARY stays over raw docs: an eval doc
+    // dropped by stage 1 must still contribute its shingles, or its
     // near-dups leak into the corpus.
     val contaminated = graft.dedup.Dedup
       .shingleRowsOf(clean.filter(col("source") =!= EvalSource))
       .join(broadcast(evalDict), "sng")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= decontamMinShingles)
-      .select(col("doc_id"))
-    val decontam = clean.filter(col("source") =!= EvalSource)
-      .join(contaminated, Seq("doc_id"), "left_anti")
-    decontam.write.mode("overwrite").parquet(s"$outDir/clean.parquet")
-    val cleanBack = spark.read.schema(decontam.schema).parquet(s"$outDir/clean.parquet")
-    val nClean = clean.count()
-    // Recorded so the manifest funnel BALANCES: sampler input =
-    // n_clean - n_decontam_dropped - n_eval_held_out (round-19 review: the
-    // eval-held-out term was computed for the subtraction but never
-    // published, leaving an unexplained gap in the release record).
-    val nEvalHeldOut = clean.filter(col("source") === EvalSource).count()
-    val nDecontamDropped = nClean - cleanBack.count() - nEvalHeldOut
-    clean.unpersist()
+      .select(col("doc_id"), lit(true).as("contam"))
+    // Each input doc is classified once (both join keys are unique per
+    // doc_id, so no doc is duplicated), and the funnel is observed on that
+    // frame inside the clean.parquet write: the keeper chain runs once
+    // without a cache (its exchanges are reused), and the funnel balances
+    // as n_clean = released + n_decontam_dropped + n_eval_held_out. A
+    // clean doc with a NULL source is not released and counts as dropped.
+    val funnel = Observation()
+    val released = docs
+      .join(keepers.select(col("doc_id"), lit(true).as("kept")), Seq("doc_id"), "left_outer")
+      .join(contaminated, Seq("doc_id"), "left_outer")
+      .observe(funnel, count(lit(1)), count_if(col("kept")),
+        count_if(col("kept") && col("source") === EvalSource))
+      .filter(col("kept") && col("source") =!= EvalSource && col("contam").isNull)
+      .select(docs.columns.map(col).toSeq: _*)
+    val nReleased = Layout.writeParquet(released, s"$outDir/clean.parquet")
+    val Row(nInput: Long, nClean: Long, nEvalHeldOut: Long) = Layout.observed(spark, funnel)
+    val nDecontamDropped = nClean - nReleased - nEvalHeldOut
+    val cleanBack = spark.read.schema(released.schema).parquet(s"$outDir/clean.parquet")
     stageDone("clean_decontam")
 
     // 3. mixture sample over the decontaminated corpus.
     val rates = graft.text.TextStats.mixtureRates(cleanBack)
     val sampled = graft.text.TextStats.sampleByThreshold(cleanBack, rates)
       .drop("thresh")
-    // 4. split on sampler-disjoint bits.
+    // 4. split on sampler-disjoint bits; the per-split counts are observed
+    // on the shards write (a split with no docs has no entry).
     val splitDocs = graft.text.TextStats.withSplit(sampled).drop("h16")
-    val nSampled =
-      graft.sources.Layout.writePartitioned(splitDocs, s"$outDir/shards.parquet", "split")
+    val perSplit = Observation()
+    val splitCols = graft.text.TextStats.SplitLabels.map(l => count_if(col("split") === l).as(l))
+    val nSampled = Layout.writePartitioned(
+      splitDocs.observe(perSplit, splitCols.head, splitCols.tail: _*),
+      s"$outDir/shards.parquet", "split")
+    val splitCounts = Layout.observed(spark, perSplit)
+      .getValuesMap[Long](graft.text.TextStats.SplitLabels).filter(_._2 > 0)
     val shards = spark.read.schema(splitDocs.schema).parquet(s"$outDir/shards.parquet")
-    val splitCounts = shards.groupBy(col("split")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     stageDone("sample_split")
 
     // 5. pack coordinates per (split, source) — the SHARDED two-level
@@ -183,7 +205,7 @@ object RunCorpusPipeline {
         Seq("split", "source"))
       .select(Seq(col("split"), col("source"), col("doc_id"), col("n_tokens"))
         ++ graft.text.TextStats.windowIndexCols: _*)
-    val nPacked = graft.sources.Layout.writePartitioned(packed, s"$outDir/packed.parquet", "split")
+    val nPacked = Layout.writePartitioned(packed, s"$outDir/packed.parquet", "split")
     stageDone("pack")
 
     // 6. tokenizer trained on the TRAIN split only — the vocab must not
@@ -226,17 +248,8 @@ object RunCorpusPipeline {
 
     val counts = StageCounts(nInput, nClean, nDecontamDropped, nEvalHeldOut,
       nSampled, splitCounts, nPacked, merges.length.toLong)
-    val manifest =
-      s"""{"n_input":${counts.nInput},"n_clean":${counts.nClean},
-         |"n_decontam_dropped":${counts.nDecontamDropped},
-         |"n_eval_held_out":${counts.nEvalHeldOut},
-         |"n_sampled":${counts.nSampled},
-         |"splits":${counts.splits.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},
-         |"n_packed":${counts.nPacked},"n_bpe_merges":${counts.nMerges},
-         |"n_surviving_neardup_pairs":$survivingPairs,
-         |"dp_eps_micro":${graft.text.TextStats.EpsMicro}}"""
-        .stripMargin.replace("\n", "")
+    val manifest = "{" + counts.jsonFields + s""","n_surviving_neardup_pairs":$survivingPairs,""" +
+      s""""dp_eps_micro":${graft.text.TextStats.EpsMicro}}"""
     // Written through the session's Hadoop FileSystem, not java.nio local-FS
     // paths: every stage output above goes through Spark's URI-capable
     // writers, and a non-local outDir (the 100 TB deployment this object
@@ -272,29 +285,20 @@ object RunCorpusPipeline {
       val c = run(spark, sfDir, outDir, dpReleaseSeed,
         onStage = (name, sec) => stageSecs(name) = sec,
         decontamMinShingles = minShingles)
-      println(s"[pipeline] input=${c.nInput} clean=${c.nClean} " +
-        s"decontam_dropped=${c.nDecontamDropped} eval_held_out=${c.nEvalHeldOut} " +
-        s"sampled=${c.nSampled} " +
-        s"splits=${c.splits.toSeq.sortBy(_._1).mkString(",")} " +
-        s"packed=${c.nPacked} bpe_merges=${c.nMerges} -> $outDir")
+      println(s"[pipeline] {${c.jsonFields}} -> $outDir")
       // One parseable line per run: per-stage wall seconds + the manifest
       // counts, so stage cost AND count conservation read from one
       // record. Timings are NOT in manifest.json —
       // that artifact stays a deterministic function of the corpus.
       val stagesJson = stageSecs.map { case (k, v) => "\"" + k + "\":" + graft.Jnum.f(v, 2) }
         .mkString("{", ",", "}")
-      val splitsJson = c.splits.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
       // sfDir is JSON-escaped: a path carrying a quote or backslash would
       // otherwise emit invalid JSON that a line parser silently
       // drops (round-19 review) — the same silent-record-drop class the
       // Jnum locale fix exists to prevent.
       val sfJson = sfDir.replace("\\", "\\\\").replace("\"", "\\\"")
       println(s"""GRAFT_PIPELINE {"sf":"$sfJson","min_shingles":$minShingles,"stages":$stagesJson,""" +
-        s""""n_input":${c.nInput},"n_clean":${c.nClean},""" +
-        s""""n_decontam_dropped":${c.nDecontamDropped},"n_eval_held_out":${c.nEvalHeldOut},""" +
-        s""""n_sampled":${c.nSampled},""" +
-        s""""splits":$splitsJson,"n_packed":${c.nPacked},"n_bpe_merges":${c.nMerges}}""")
+        c.jsonFields + "}")
     } finally spark.stop()
   }
 }

@@ -28,11 +28,12 @@ object StarCatalog {
 
   /** CREATE with optional LOCATION per table (external over ELT output).
     * Columns come from the row case class's encoder schema, every one
-    * declared nullable: the builds keep NULL-keyed rows (StarQueries). */
+    * declared nullable: the builds keep NULL-keyed rows (StarQueries). The
+    * location is escaped into its string literal, so any path works. */
   def createStatements(locationFor: Option[String => String]): Seq[String] =
     StarSchema.tables.map { t =>
       val cols = t.encoder.schema.fields.map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
-      val loc = locationFor.map(f => s" LOCATION '${f(t.name)}'").getOrElse("")
+      val loc = locationFor.fold("")(f => s" LOCATION '${f(t.name).replace("\\", "\\\\").replace("'", "\\'")}'")
       s"CREATE TABLE IF NOT EXISTS ${t.name} ($cols) USING PARQUET$loc " +
         s"TBLPROPERTIES ('graft.reference.hints' = '${t.hints}')"
     }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** Physical-layout helpers mirroring the reference's table hints
@@ -55,16 +55,23 @@ object Layout {
     * merges a result task's accumulators once per partition, so a retried
     * or speculative task cannot count its rows twice; an observation below
     * an exchange would run in a shuffle-map stage, which is counted again
-    * when the stage is resubmitted. The count arrives through a query
-    * listener, so the listener bus is drained first: a write that reports
-    * no count fails here instead of waiting for one. */
+    * when the stage is resubmitted. */
   private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
     val written = Observation()
     write(df.observe(written, count(lit(1)).as("rows")))
-    org.apache.spark.ProfileBus.drain(df.sparkSession.sparkContext)
-    written.future.value match {
-      case Some(scala.util.Success(row)) => row.getLong(0)
-      case other => throw new IllegalStateException(s"write reported no row count: $other")
+    observed(df.sparkSession, written).getLong(0)
+  }
+
+  /** The metrics row of `obs` once the action it rode has returned. The
+    * row arrives through a query listener, so the listener bus is drained
+    * first: an action that reported no metrics fails here instead of
+    * waiting for them. Place an observation the way [[countedWrite]] does,
+    * with no exchange between it and the action's output. */
+  private[graft] def observed(spark: SparkSession, obs: Observation): Row = {
+    org.apache.spark.ProfileBus.drain(spark.sparkContext)
+    obs.future.value match {
+      case Some(scala.util.Success(row)) => row
+      case other => throw new IllegalStateException(s"action reported no metrics: $other")
     }
   }
 

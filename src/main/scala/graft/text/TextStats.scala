@@ -183,6 +183,9 @@ object TextStats extends TextDp with TextBpe
     * (constant expressions — inlined at the `defs` use sites above). */
   final val SplitValMax = 3276
   final val SplitTestMax = 6553
+  /** The split labels in assignment order: `h16` below [[SplitValMax]] is
+    * val, below [[SplitTestMax]] test, and the rest train. */
+  final val SplitLabels: Seq[String] = Seq("val", "test", "train")
 
   /** The [[defs tx_split_assign]] assignment as a frame transform (adds
     * `h16` + `split`), shared with the corpus pipeline so a pipeline run
@@ -192,9 +195,9 @@ object TextStats extends TextDp with TextBpe
     docs
       .withColumn("h16", expr("md5_prefix48(CAST(doc_id AS STRING)) % 65536"))
       .withColumn("split",
-        when(col("h16") < SplitValMax, "val")
-          .when(col("h16") < SplitTestMax, "test")
-          .otherwise("train"))
+        when(col("h16") < SplitValMax, SplitLabels(0))
+          .when(col("h16") < SplitTestMax, SplitLabels(1))
+          .otherwise(SplitLabels(2)))
   }
 
   /** Per-source mixture-sampling plan for [[defs tx_mixture_sample]] and

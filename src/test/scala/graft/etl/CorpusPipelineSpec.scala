@@ -1,6 +1,12 @@
 package graft.etl
 
+import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ResultQueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -38,6 +44,112 @@ class CorpusPipelineSpec extends AnyFunSuite {
         s""""n_sampled":${c.nSampled}""", s""""n_packed":${c.nPacked}""",
         s""""n_bpe_merges":${c.nMerges}"""))
       assert(manifest.contains(frag), s"manifest missing $frag: $manifest")
+  }
+
+  /** The nodes of an executed plan, through its adaptive query stages;
+    * without `crossExchanges`, only those above every exchange. */
+  private def nodes(p: SparkPlan, crossExchanges: Boolean): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan, crossExchanges)
+    case r: ResultQueryStageExec => nodes(r.plan, crossExchanges)
+    case q: QueryStageExec => if (crossExchanges) nodes(q.plan, crossExchanges) else Nil
+    case _: Exchange if !crossExchanges => Nil
+    case other => other +: other.children.flatMap(nodes(_, crossExchanges))
+  }
+
+  /** One release at sf0.01 over a private copy of its documents, so the
+    * pair-graph artifact is built cold, as in a fresh store. Records the
+    * release's jobs and the executed plan of its clean.parquet write. */
+  lazy val (sf01In, sf01Out, sf01Counts, sf01Jobs, cleanWritePlan) = {
+    val in = TestSpark.tempDir("corpus_sf01_in")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(TestSpark.sf).resolveSibling("sf0.01")
+      .resolve("documents.parquet"), in.resolve("documents.parquet"))
+    val outDir = TestSpark.tempDir("corpus_sf01_out").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    var c: RunCorpusPipeline.StageCounts = null
+    val rec = try graft.tools.Profile.run(spark) {
+      c = RunCorpusPipeline.run(spark, in.toString, outDir, specSeed)
+    } finally {
+      org.apache.spark.ProfileBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    val cleanWrite = plans.toArray(Array.empty[SparkPlan]).toSeq.filter(p =>
+      nodes(p, crossExchanges = true).exists {
+        case w: DataWritingCommandExec => w.cmd match {
+          case i: InsertIntoHadoopFsRelationCommand => i.outputPath.getName == "clean.parquet"
+          case _ => false
+        }
+        case _ => false
+      })
+    assert(cleanWrite.size == 1, s"expected one clean.parquet write, got ${cleanWrite.size}")
+    (in.toString, outDir, c, rec.jobs, cleanWrite.head)
+  }
+
+  test("sf0.01: every stage count equals a read-back count of its output") {
+    val c = sf01Counts
+    val docs = graft.Tables.documents(spark, sf01In)
+    val clean = docs.join(graft.dedup.Dedup.cleanCorpusKeepers(spark, sf01In), Seq("doc_id"), "left_semi")
+    val released = spark.read.parquet(s"$sf01Out/clean.parquet").count()
+    val shards = spark.read.parquet(s"$sf01Out/shards.parquet")
+    assert(c.nInput == docs.count())
+    assert(c.nClean == clean.count())
+    assert(c.nEvalHeldOut == clean.filter(col("source") === RunCorpusPipeline.EvalSource).count())
+    assert(c.nClean == released + c.nDecontamDropped + c.nEvalHeldOut, s"funnel does not balance: $c")
+    assert(released > 0 && c.nDecontamDropped > 0, s"sf0.01 should release and drop docs: $c")
+    assert(c.nSampled == shards.count())
+    assert(c.splits == shards.groupBy("split").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap)
+    assert(c.nPacked == spark.read.parquet(s"$sf01Out/packed.parquet").count())
+  }
+
+  test("sf0.01: a release runs 40 Spark jobs on a fresh artifact store") {
+    assert(sf01Jobs == 40, s"jobs per release: $sf01Jobs")
+  }
+
+  test("the funnel is observed in the clean.parquet write's result stage") {
+    // Every CollectMetrics node (the funnel and the write's row count) must
+    // sit above every exchange: a result task's accumulators merge once per
+    // partition, so no retried or resubmitted task can count a doc twice.
+    def metrics(crossExchanges: Boolean) =
+      nodes(cleanWritePlan, crossExchanges).collect { case m: CollectMetricsExec => m }
+    assert(metrics(crossExchanges = true).size == 2, cleanWritePlan.toString)
+    assert(metrics(crossExchanges = false).size == 2,
+      s"an observation sits below an exchange:\n$cleanWritePlan")
+  }
+
+  test("a clean doc with a NULL source is not released and counts as dropped") {
+    // The counts a read-back funnel (count clean, subtract the released
+    // rows and the eval docs) gives on this fixture:
+    // input 4; clean 3 (doc 3 is an exact copy of doc 1); eval held out 1
+    // (doc 0); released 1 (doc 1); dropped 3 - 1 - 1 = 1, the NULL-source
+    // doc 2, which no source filter passes.
+    import spark.implicits._
+    val dir = TestSpark.tempDir("corpus_null_src_in").toString
+    val texts = Seq(
+      "quick brown foxes jump over lazy dogs beside seven silver rivers",
+      "many green parrots sing loudly above warm tropical forests every morning",
+      "old iron bridges carry heavy trains across wide northern valleys tonight")
+    Seq((0L, texts(0), Some(RunCorpusPipeline.EvalSource)), (1L, texts(1), Some("src1")),
+        (2L, texts(2), None), (3L, texts(1), Some("src1")))
+      .map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val outN = TestSpark.tempDir("corpus_null_src_out").toString
+    val c = RunCorpusPipeline.run(spark, dir, outN, specSeed)
+    assert((c.nInput, c.nClean, c.nEvalHeldOut, c.nDecontamDropped) == ((4L, 3L, 1L, 1L)), c)
+    assert(spark.read.parquet(s"$outN/clean.parquet").select("doc_id").as[Long].collect().toSeq == Seq(1L))
+  }
+
+  test("a decontamination threshold below 1 is rejected") {
+    val e = intercept[IllegalArgumentException](
+      RunCorpusPipeline.run(spark, TestSpark.sf, TestSpark.tempDir("corpus_min0").toString,
+        specSeed, decontamMinShingles = 0))
+    assert(e.getMessage.contains("decontamMinShingles"))
   }
 
   test("leakage guards: no eval docs or eval-contaminated docs in the corpus") {

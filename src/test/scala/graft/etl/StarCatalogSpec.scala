@@ -68,4 +68,12 @@ class StarCatalogSpec extends AnyFunSuite {
       "FOR ALL COLUMNS left no NDV on songs.song_id")
     StarCatalog.drop(spark)
   }
+
+  test("register serves an output dir whose name contains a quote") {
+    val out = TestSpark.tempDir("etl_it's_out").toString
+    val results = StarPipeline.run(spark, sf, out)
+    StarCatalog.register(spark, out)
+    assert(spark.table("users").count() == results.find(_.name == "users").get.rows)
+    StarCatalog.drop(spark)
+  }
 }
