@@ -68,7 +68,7 @@ object Artifacts {
   /** Artifact store root: the `graft.artifact.dir` system property when set
     * (in-JVM override — lets a destructive spec like ArtifactsSpec's gc test
     * point the store at a private root instead of sweeping the shared tmpdir
-    * out from under a concurrently-running Verify/Bench JVM), else
+    * out from under a concurrently-running Verify/Profile JVM), else
     * `GRAFT_ARTIFACT_DIR` (on a cluster, a durable shared path — every
     * executor and every job sees one copy per corpus snapshot), else the JVM
     * tmpdir (the sandbox default). */

@@ -14,7 +14,7 @@ final case class QueryDef(
 object QueryDef {
   /** Aggregate a module list into the SparkEntry maps. A duplicate name
     * across modules must be LOUD: toMap's last-wins would silently drop
-    * the earlier query from BOTH the bench and the correctness matrix —
+    * the earlier query from BOTH the profiler and the correctness matrix —
     * the silently-shrinking-matrix failure mode the r10 Verify hardening
     * (errors.json) exists to prevent. */
   def queryMap(defs: Seq[QueryDef]): Map[String, (SparkSession, String) => DataFrame] = {
@@ -27,13 +27,27 @@ object QueryDef {
     defs.flatMap(d => d.oracle.map(d.name -> _)).toMap
 }
 
-/** Locale-fixed numeric formatting for MACHINE-PARSED output lines (the
-  * GRAFT_BENCH / GRAFT_PIPELINE / GRAFT_PROFILE JSON records): Scala's f""
-  * interpolator formats through the JVM default locale, so a comma-decimal
-  * host (LANG=de_DE and friends) would emit `"value":76,206` — invalid
-  * JSON that silently drops the record from tools/scaling.py's parse.
-  * Human-facing stderr lines keep the plain interpolator. */
+/** Formatting for MACHINE-PARSED output (the GRAFT_PIPELINE and
+  * GRAFT_PROFILE records, Verify's oracle_sql.json and errors.json). */
 object Jnum {
+  /** Locale-fixed: Scala's f"" interpolator formats through the JVM default
+    * locale, so a comma-decimal host (LANG=de_DE and friends) would emit
+    * `"value":76,206` — invalid JSON that silently drops the record from
+    * tools/scaling.py's parse. Human-facing stderr lines keep the plain
+    * interpolator. */
   def f(v: Double, decimals: Int): String =
     String.format(java.util.Locale.ROOT, "%." + decimals + "f", Double.box(v))
+
+  /** A JSON string literal: quote, backslash and every char below 0x20
+    * escaped, so a tab or newline in a path or in oracle SQL cannot break
+    * the line a parser reads. */
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One place for the engine's session defaults so Verify, Bench and the
+/** One place for the engine's session defaults so Verify, Profile and the
   * test suites run with identical semantics.
   *
   * - UTC session TZ: E1/E2-E7 extract-family correctness vs the oracle.

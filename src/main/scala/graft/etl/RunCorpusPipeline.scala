@@ -76,12 +76,12 @@ object RunCorpusPipeline {
 
   final case class StageCounts(
       nInput: Long, nClean: Long, nDecontamDropped: Long, nEvalHeldOut: Long,
-      nSampled: Long, splits: Map[String, Long], nPacked: Long, nMerges: Long) {
+      nNoSource: Long, nSampled: Long, splits: Map[String, Long], nPacked: Long, nMerges: Long) {
     /** The counts as JSON fields, in manifest order: `manifest.json` and
       * both of [[main]]'s report lines render them through here. */
     def jsonFields: String =
       s""""n_input":$nInput,"n_clean":$nClean,"n_decontam_dropped":$nDecontamDropped,""" +
-        s""""n_eval_held_out":$nEvalHeldOut,"n_sampled":$nSampled,"splits":""" +
+        s""""n_eval_held_out":$nEvalHeldOut,"n_no_source":$nNoSource,"n_sampled":$nSampled,"splits":""" +
         splits.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}") +
         s""","n_packed":$nPacked,"n_bpe_merges":$nMerges"""
   }
@@ -159,19 +159,22 @@ object RunCorpusPipeline {
     // doc_id, so no doc is duplicated), and the funnel is observed on that
     // frame inside the clean.parquet write: the keeper chain runs once
     // without a cache (its exchanges are reused), and the funnel balances
-    // as n_clean = released + n_decontam_dropped + n_eval_held_out. A
-    // clean doc with a NULL source is not released and counts as dropped.
+    // as n_clean = released + n_decontam_dropped + n_eval_held_out +
+    // n_no_source. A clean doc with a NULL source is neither screened nor
+    // released (dd_decontaminate's NULL contract), so it has its own term.
     val funnel = Observation()
     val released = docs
       .join(keepers.select(col("doc_id"), lit(true).as("kept")), Seq("doc_id"), "left_outer")
       .join(contaminated, Seq("doc_id"), "left_outer")
       .observe(funnel, count(lit(1)), count_if(col("kept")),
-        count_if(col("kept") && col("source") === EvalSource))
+        count_if(col("kept") && col("source") === EvalSource),
+        count_if(col("kept") && col("source").isNull))
       .filter(col("kept") && col("source") =!= EvalSource && col("contam").isNull)
       .select(docs.columns.map(col).toSeq: _*)
     val nReleased = Layout.writeParquet(released, s"$outDir/clean.parquet")
-    val Row(nInput: Long, nClean: Long, nEvalHeldOut: Long) = Layout.observed(spark, funnel)
-    val nDecontamDropped = nClean - nReleased - nEvalHeldOut
+    val Row(nInput: Long, nClean: Long, nEvalHeldOut: Long, nNoSource: Long) =
+      Layout.observed(spark, funnel)
+    val nDecontamDropped = nClean - nReleased - nEvalHeldOut - nNoSource
     val cleanBack = spark.read.schema(released.schema).parquet(s"$outDir/clean.parquet")
     stageDone("clean_decontam")
 
@@ -247,7 +250,7 @@ object RunCorpusPipeline {
     stageDone("release_audit")
 
     val counts = StageCounts(nInput, nClean, nDecontamDropped, nEvalHeldOut,
-      nSampled, splitCounts, nPacked, merges.length.toLong)
+      nNoSource, nSampled, splitCounts, nPacked, merges.length.toLong)
     val manifest = "{" + counts.jsonFields + s""","n_surviving_neardup_pairs":$survivingPairs,""" +
       s""""dp_eps_micro":${graft.text.TextStats.EpsMicro}}"""
     // Written through the session's Hadoop FileSystem, not java.nio local-FS
@@ -292,12 +295,7 @@ object RunCorpusPipeline {
       // that artifact stays a deterministic function of the corpus.
       val stagesJson = stageSecs.map { case (k, v) => "\"" + k + "\":" + graft.Jnum.f(v, 2) }
         .mkString("{", ",", "}")
-      // sfDir is JSON-escaped: a path carrying a quote or backslash would
-      // otherwise emit invalid JSON that a line parser silently
-      // drops (round-19 review) — the same silent-record-drop class the
-      // Jnum locale fix exists to prevent.
-      val sfJson = sfDir.replace("\\", "\\\\").replace("\"", "\\\"")
-      println(s"""GRAFT_PIPELINE {"sf":"$sfJson","min_shingles":$minShingles,"stages":$stagesJson,""" +
+      println(s"""GRAFT_PIPELINE {"sf":${graft.Jnum.str(sfDir)},"min_shingles":$minShingles,"stages":$stagesJson,""" +
         c.jsonFields + "}")
     } finally spark.stop()
   }

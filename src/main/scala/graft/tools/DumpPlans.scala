@@ -57,7 +57,7 @@ object DumpPlans {
       "r21 #6): this is the suite's ONLY global window — the rank ranks the " +
       "5 rows a TakeOrdered limit already produced, so the single-partition " +
       "move is 5 rows, not data. Every `WindowExec: No Partition Defined` " +
-      "warning in a Verify/Bench log traces here; PlanShapeSpec pins " +
+      "warning in a Verify/Profile log traces here; PlanShapeSpec pins " +
       "suite-wide that an unpartitioned window's child has statically " +
       "bounded maxRows, so a corpus-sized global window fails the test " +
       "suite before any 100 TB run."))

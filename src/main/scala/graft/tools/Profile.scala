@@ -92,9 +92,6 @@ object Profile {
     }
   }
 
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   def main(args: Array[String]): Unit = {
     var runs = 1
     var finalPlan = false
@@ -124,7 +121,7 @@ object Profile {
           df = SparkEntry.queries(q)(spark, dir)
           rows = df.queryExecution.toRdd.count()
         }
-        println(s"""GRAFT_PROFILE {"dir":${jstr(dir)},"query":${jstr(q)},"run":$i,"rows":$rows,${r.jsonFields}}""")
+        println(s"""GRAFT_PROFILE {"dir":${Jnum.str(dir)},"query":${Jnum.str(q)},"run":$i,"rows":$rows,${r.jsonFields}}""")
       }
       if (finalPlan) println(df.queryExecution.executedPlan)
     } finally if (started) spark.stop()

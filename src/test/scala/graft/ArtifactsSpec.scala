@@ -56,7 +56,7 @@ class ArtifactsSpec extends AnyFunSuite {
   test("gc sweeps only store-shaped dirs past the horizon; a swept artifact rebuilds") {
     // Destructive test: run against a PRIVATE store root, passed EXPLICITLY.
     // gc(-1) on the shared tmpdir would delete artifacts a concurrently-
-    // running Verify/Bench JVM is reading (observed round 11: 15 sf0.01
+    // running Verify/Profile JVM is reading (observed round 11: 15 sf0.01
     // queries failed PATH_NOT_FOUND while this suite ran in parallel), and
     // the earlier sys-prop mutation of graft.artifact.dir was itself a
     // hazard: under parallel suite execution a concurrent suite's publish

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (Sessions defaults = the same
-  * semantics Verify/Bench run with). */
+  * semantics Verify and Profile run with). */
 object TestSpark {
   lazy val spark: SparkSession = Sessions.local("4")
   val sf: String = "/root/testdata/sf0.001"

@@ -30,8 +30,9 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(c.nClean <= c.nInput && c.nClean > 0)
     assert(c.nSampled > 0 && c.nSampled <= c.nClean)
     // The funnel BALANCES from the recorded fields alone (round 19):
-    // sampler input = n_clean - n_decontam_dropped - n_eval_held_out.
-    assert(c.nSampled <= c.nClean - c.nDecontamDropped - c.nEvalHeldOut,
+    // sampler input = n_clean - n_decontam_dropped - n_eval_held_out -
+    // n_no_source.
+    assert(c.nSampled <= c.nClean - c.nDecontamDropped - c.nEvalHeldOut - c.nNoSource,
       s"funnel does not balance: $c")
     assert(c.splits.values.sum == c.nSampled)
     assert(c.nPacked == c.nSampled, "pack emits one coordinate row per doc")
@@ -41,6 +42,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
     for (frag <- Seq(s""""n_input":${c.nInput}""", s""""n_clean":${c.nClean}""",
         s""""n_decontam_dropped":${c.nDecontamDropped}""",
         s""""n_eval_held_out":${c.nEvalHeldOut}""",
+        s""""n_no_source":${c.nNoSource}""",
         s""""n_sampled":${c.nSampled}""", s""""n_packed":${c.nPacked}""",
         s""""n_bpe_merges":${c.nMerges}"""))
       assert(manifest.contains(frag), s"manifest missing $frag: $manifest")
@@ -99,7 +101,8 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(c.nInput == docs.count())
     assert(c.nClean == clean.count())
     assert(c.nEvalHeldOut == clean.filter(col("source") === RunCorpusPipeline.EvalSource).count())
-    assert(c.nClean == released + c.nDecontamDropped + c.nEvalHeldOut, s"funnel does not balance: $c")
+    assert(c.nClean == released + c.nDecontamDropped + c.nEvalHeldOut + c.nNoSource,
+      s"funnel does not balance: $c")
     assert(released > 0 && c.nDecontamDropped > 0, s"sf0.01 should release and drop docs: $c")
     assert(c.nSampled == shards.count())
     assert(c.splits == shards.groupBy("split").count().collect()
@@ -122,12 +125,11 @@ class CorpusPipelineSpec extends AnyFunSuite {
       s"an observation sits below an exchange:\n$cleanWritePlan")
   }
 
-  test("a clean doc with a NULL source is not released and counts as dropped") {
-    // The counts a read-back funnel (count clean, subtract the released
-    // rows and the eval docs) gives on this fixture:
+  test("a NULL-source clean doc is not released and counts as no-source") {
     // input 4; clean 3 (doc 3 is an exact copy of doc 1); eval held out 1
-    // (doc 0); released 1 (doc 1); dropped 3 - 1 - 1 = 1, the NULL-source
-    // doc 2, which no source filter passes.
+    // (doc 0); no source 1 (doc 2, which no source filter passes, so it is
+    // never screened for contamination); released 1 (doc 1); dropped
+    // 3 - 1 - 1 - 1 = 0.
     import spark.implicits._
     val dir = TestSpark.tempDir("corpus_null_src_in").toString
     val texts = Seq(
@@ -141,7 +143,8 @@ class CorpusPipelineSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val outN = TestSpark.tempDir("corpus_null_src_out").toString
     val c = RunCorpusPipeline.run(spark, dir, outN, specSeed)
-    assert((c.nInput, c.nClean, c.nEvalHeldOut, c.nDecontamDropped) == ((4L, 3L, 1L, 1L)), c)
+    assert((c.nInput, c.nClean, c.nEvalHeldOut, c.nNoSource, c.nDecontamDropped) ==
+      ((4L, 3L, 1L, 1L, 0L)), c)
     assert(spark.read.parquet(s"$outN/clean.parquet").select("doc_id").as[Long].collect().toSeq == Seq(1L))
   }
 
