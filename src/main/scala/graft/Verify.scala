@@ -32,9 +32,9 @@ object Verify {
           System.err.println(s"[verify] $name failed: $msg")
         }
       }
-    // Every string goes through Jnum.str: a tab or CR in builder-authored
-    // SQL would otherwise make the driver's json.load fail and silently
-    // zero the round's correctness.
+    // Oracle SQL and error messages can hold tabs or CRs; unescaped, they
+    // would make tools/local_check.py's json.load fail and lose the whole
+    // oracle comparison.
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Jnum.str(k)}: ${Jnum.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
